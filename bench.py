@@ -184,14 +184,17 @@ def bench_replay(spark, n_events: int) -> dict:
     }
 
 
-def bench_queries(spark, sf_dir: str, reps: int = 3) -> dict[str, float]:
+def bench_queries(
+    spark, sf_dir: str, reps: int = 3
+) -> tuple[dict[str, float], dict[str, float]]:
     """Median of ``reps`` timed runs per query, in pinned list order.
 
     Run-to-run variance on this box is up to ~25% (page cache, turbo,
     codegen warmup displacement); single-shot timings made round-over-
     round deltas unattributable — the round-2 judge's bench-determinism
     ask. The median absorbs one bad run per query; the first rep also
-    serves as that query's plan-compile warmup."""
+    serves as that query's plan-compile warmup. Returns the medians and
+    the 1-minute load average after each query, both keyed by query."""
     import statistics
 
     import __spark_entry__ as entrymod

@@ -163,20 +163,19 @@ def _cc_star(pairs: DataFrame, src: str, dst: str, max_iters: int, ckpt):
         center = mn.select(F.col("m").alias("lo"), F.col("hi"))
         return rewired.union(center).distinct()
 
+    n_edges = edges.count()
     for _ in range(max_iters):
         nxt = ckpt(small_star(large_star(edges)))
         # converged when the canonical edge set is unchanged (both sides
         # are distinct (lo, hi) sets, so symmetric difference via count +
-        # one anti-join probe)
-        same_count = nxt.count() == edges.count()
+        # one anti-join probe); each round's count carries to the next
+        n_nxt = nxt.count()
         changed = (
-            0
-            if same_count
-            else 1
-        ) or nxt.join(edges, ["lo", "hi"], "left_anti").limit(1).count()
-        prev = edges
-        edges = nxt
-        if changed == 0:
+            n_nxt != n_edges
+            or nxt.join(edges, ["lo", "hi"], "left_anti").limit(1).count() > 0
+        )
+        edges, n_edges = nxt, n_nxt
+        if not changed:
             # fixed point: stars rooted at component minima
             roots = edges.select(F.col("lo").alias("node")).distinct().select(
                 "node", F.col("node").alias("group_id")

@@ -62,11 +62,13 @@ import json
 import logging
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from mysql_binlog_spark.lake.io import LocalTableIO, io_for_root
 
@@ -110,11 +112,11 @@ class MergeResult:
     wall_ms: int
 
 
-def bucket_expr(n_buckets: int):
-    """Deterministic key -> bucket assignment (stable across epochs)."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in KEY_COLS]), F.lit(n_buckets)).cast(
-        "int"
-    )
+def bucket_expr(n_buckets: int, repo: Column | None = None):
+    """Deterministic key -> bucket assignment (stable across epochs).
+    ``repo`` overrides the key's repo column (where a renamed key lands)."""
+    r = F.col("repo") if repo is None else repo
+    return F.pmod(F.xxhash64(r, F.col("path")), F.lit(n_buckets)).cast("int")
 
 
 # --- per-bucket repo bloom filters (manifest statistics) -------------------
@@ -863,11 +865,15 @@ class LakeTable:
         # COW per bucket as ONE union + per-key merge, single shuffle:
         # after repartition("bucket") the groupBy(bucket, key) needs NO
         # further exchange (hash partitioning on a subset of the grouping
-        # keys satisfies ClusteredDistribution). Winner order is
-        # (seq, _pri): the newest EVENT wins regardless of side, so a
-        # replayed or out-of-order batch cannot clobber newer committed
-        # state; _pri breaks exact seq ties in favor of the batch
-        # (idempotent re-apply of the same event).
+        # keys satisfies ClusteredDistribution). No partition count is
+        # given, so AQE sizes the shuffle from the data: a small epoch
+        # coalesces into a task or two, a large one spreads over up to
+        # spark.sql.shuffle.partitions tasks. Each bucket still lands in
+        # exactly one task, so each touched bucket gets exactly one data
+        # file per epoch. Winner order is (seq, _pri): the newest EVENT
+        # wins regardless of side, so a replayed or out-of-order batch
+        # cannot clobber newer committed state; _pri breaks exact seq ties
+        # in favor of the batch (idempotent re-apply of the same event).
         prep_state = state.withColumn("op", F.lit("U")).withColumn("_pri", F.lit(0))
         prep_batch = batch.drop("n_events").withColumn("_pri", F.lit(1))
         src = prep_state.unionByName(prep_batch, allowMissingColumns=True)
@@ -886,12 +892,9 @@ class LakeTable:
                 ).alias("_old")
             )
             aggs.append(F.max(F.col("_pri")).alias("_from_batch"))
-        merged = (
-            src.repartition(max(len(touched), 1), "bucket")
-            .groupBy("bucket", *KEY_COLS)
-            .agg(*aggs)
-        )
+        merged = src.repartition("bucket").groupBy("bucket", *KEY_COLS).agg(*aggs)
         if self.track_changes:
+            # the data and change writes both read it
             merged = merged.persist()
 
         new_state = merged.filter(F.col("_w.op") != "D").select(
@@ -901,35 +904,27 @@ class LakeTable:
         )
 
         stage = _join(self.root, "data", f"epoch{epoch:06d}-{uuid.uuid4().hex[:8]}")
-        # already hash-partitioned by bucket from the merge — write directly.
-        # zstd: measured both faster AND ~2x smaller than the snappy default
-        # for this string-heavy state.
-        (
-            new_state.write.partitionBy("bucket")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .parquet(stage)
-        )
+        try:
+            # already hash-partitioned by bucket from the merge, so the
+            # data write adds no exchange; on a tracked table it overlaps
+            # the change-file write. zstd: measured both faster AND ~2x
+            # smaller than the snappy default for this string-heavy state.
+            changes_entry = self._write_overlapped(
+                lambda: new_state.write.partitionBy("bucket")
+                .option("compression", "zstd")
+                .mode("overwrite")
+                .parquet(stage),
+                (lambda: self._write_changes(manifest, merged))
+                if self.track_changes
+                else None,
+            )
+        finally:
+            if self.track_changes:
+                merged.unpersist()
+            batch.unpersist()
 
-        changes_entry = None
-        if self.track_changes:
-            changes_entry = self._write_changes(manifest, merged)
-            merged.unpersist()
-        batch.unpersist()
-
-        # Discover written files per bucket (driver-side listing of the
-        # staging dir only — O(touched buckets), not O(table)).
-        new_files: dict[str, list[str]] = {}
-        for b in touched:
-            bdir = _join(stage, f"bucket={b}")
-            fs = [
-                _join(bdir, f)
-                for f in self.io.list_names(bdir)
-                if f.endswith(".parquet")
-            ]
-            if fs:
-                new_files[str(b)] = sorted(fs)
-            # a touched bucket can end up empty (all keys deleted) -> no files
+        # one listing of the staging dir — O(touched buckets), not O(table)
+        new_files = self._staged_files(stage)
 
         # Staged-output validation (_assert_staged): a bucket whose batch
         # upserted rows MUST have staged at least one state file — if the
@@ -1015,16 +1010,51 @@ class LakeTable:
                 F.when(w_op != "D", F.col("_w.commit")).alias("new_commit"),
             )
         )
+        return self._write_change_rows(manifest, rows)
+
+    def _write_change_rows(self, manifest: dict, rows: DataFrame) -> list[str]:
+        """Write the next version's change rows (CHANGE_SCHEMA_DDL) to a
+        fresh changes dir; returns its files for the manifest."""
         cdir = _join(
             self.root, "changes", f"v{manifest['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         )
         rows.write.option("compression", "zstd").mode("overwrite").parquet(cdir)
-        files = [
-            _join(cdir, f)
-            for f in self.io.list_names(cdir)
-            if f.endswith(".parquet")
-        ]
-        return sorted(files)
+        return sorted(
+            _join(cdir, f) for f in self.io.list_names(cdir) if f.endswith(".parquet")
+        )
+
+    def _write_overlapped(self, write_data, write_changes=None):
+        """Run ``write_data`` on this thread and ``write_changes`` (when
+        given) on a second driver thread, so the two writes' jobs share
+        the cores instead of queueing. Both read one persisted input, so
+        it is computed once. The second thread inherits this thread's job
+        group, description and tags. Returns ``write_changes``'s result
+        once BOTH writes have finished; if either raises, the error
+        propagates only after the other has finished too, so the caller
+        commits nothing and leaves no job running."""
+        if write_changes is None:
+            write_data()
+            return None
+        inherit = inheritable_thread_target(self.spark)
+        # with pinned threads off, PySpark hands the session back: Python
+        # threads then share JVM threads and there is nothing to inherit
+        target = inherit(write_changes) if callable(inherit) else write_changes
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(target)
+            write_data()
+            return fut.result()
+
+    def _staged_files(self, stage: str) -> dict[str, list[str]]:
+        """Data files a ``partitionBy("bucket")`` write staged under
+        ``stage``, keyed by bucket: one recursive listing, grouped by the
+        ``bucket=N`` directory. A touched bucket whose keys were all
+        deleted has no files and no entry."""
+        out: dict[str, list[str]] = {}
+        for p in self.io.walk_files(stage, ".parquet"):
+            bdir, name = p.rsplit("/", 2)[-2:]
+            if bdir.startswith("bucket=") and not name.startswith((".", "_")):
+                out.setdefault(bdir[len("bucket="):], []).append(_join(stage, bdir, name))
+        return {b: sorted(fs) for b, fs in out.items()}
 
     # ---------------- DDL (truncate / rename a whole repo) ----------------
 
@@ -1076,8 +1106,14 @@ class LakeTable:
             .persist()
         )
         affected = state.filter(F.col("repo") == repo)
-        # ONE aggregation yields both the affected buckets and the count
-        agg_rows = affected.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
+        # ONE aggregation yields the affected buckets, the count and, for
+        # a rename, the buckets the moved keys land in
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if action == "rename":
+            aggs.append(
+                F.collect_set(bucket_expr(self.n_buckets, F.lit(new_repo))).alias("tgt")
+            )
+        agg_rows = affected.groupBy("bucket").agg(*aggs).collect()
         src_buckets = sorted(int(r["bucket"]) for r in agg_rows)
         n_affected = sum(int(r["n"]) for r in agg_rows)
 
@@ -1110,13 +1146,7 @@ class LakeTable:
             deleted, upserted = n_affected, 0
         elif action == "rename":
             moved = affected.drop("bucket").withColumn("repo", F.lit(new_repo))
-            tgt_buckets = [
-                int(r[0])
-                for r in moved.withColumn("bucket", bucket_expr(self.n_buckets))
-                .select("bucket")
-                .distinct()
-                .collect()
-            ]
+            tgt_buckets = sorted({int(b) for r in agg_rows for b in r["tgt"]})
             touched = sorted(set(src_buckets) | set(tgt_buckets))
             # rewrite input: candidate-bucket state already read (pruned),
             # plus any rename-target buckets outside the candidate set
@@ -1194,39 +1224,22 @@ class LakeTable:
             raise ValueError(f"unknown DDL action {action!r}")
 
         stage = _join(self.root, "data", f"ddl{epoch:06d}-{uuid.uuid4().hex[:8]}")
-        (
-            new_state.repartition(max(len(touched), 1), "bucket")
-            .write.partitionBy("bucket")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-
-        changes_entry = None
-        if self.track_changes:
-            cdir = _join(
-                self.root,
-                "changes",
-                f"v{manifest['version'] + 1:08d}-{uuid.uuid4().hex[:8]}",
+        try:
+            # data-sized shuffle and overlapped writes, as in _merge_once:
+            # both writes read the persisted candidate-bucket state
+            changes_entry = self._write_overlapped(
+                lambda: new_state.repartition("bucket")
+                .write.partitionBy("bucket")
+                .option("compression", "zstd")
+                .mode("overwrite")
+                .parquet(stage),
+                (lambda: self._write_change_rows(manifest, changes_src))
+                if self.track_changes
+                else None,
             )
-            changes_src.write.option("compression", "zstd").mode("overwrite").parquet(cdir)
-            changes_entry = sorted(
-                _join(cdir, f)
-                for f in self.io.list_names(cdir)
-                if f.endswith(".parquet")
-            )
-        state.unpersist()
-
-        new_files: dict[str, list[str]] = {}
-        for b in touched:
-            bdir = _join(stage, f"bucket={b}")
-            fs = [
-                _join(bdir, f)
-                for f in self.io.list_names(bdir)
-                if f.endswith(".parquet")
-            ]
-            if fs:
-                new_files[str(b)] = sorted(fs)
+        finally:
+            state.unpersist()
+        new_files = self._staged_files(stage)
 
         cp_rows = [
             {

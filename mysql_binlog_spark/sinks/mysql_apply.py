@@ -124,9 +124,14 @@ class BinlogSqlApplier:
                 )
                 self._commit()
             elif etype == QUERY_EVENT:
+                # post-header: thread_id(4) exec_time(4) schema_len(1)
+                # error_code(2) status_vars_len(2); then the status vars,
+                # the schema, a NUL and the query
                 schema_len = body[8]
-                schema = body[13:13 + schema_len].decode()
-                query = body[13 + schema_len + 1:].decode()
+                (status_len,) = struct.unpack("<H", body[11:13])
+                at = 13 + status_len
+                schema = body[at:at + schema_len].decode()
+                query = body[at + schema_len + 1:].decode()
                 up = query.upper()
                 if up == "BEGIN":
                     self._begin()
@@ -204,6 +209,8 @@ def apply_binlog_dir(
     try:
         for root, _dirs, names in sorted(os.walk(path)):
             for n in sorted(names):
+                if n.startswith("."):
+                    continue  # a crashed writer's temp file, never output
                 full = os.path.join(root, n)
                 if n.endswith(".tar"):
                     with tarfile.open(full) as tf:
@@ -214,7 +221,7 @@ def apply_binlog_dir(
                                 applier.apply_bytes(
                                     tf.extractfile(member).read()
                                 )
-                elif ".log" in n:
+                elif n.endswith((".log", ".log.z")):
                     applier.apply_file(full)
     finally:
         applier.close()

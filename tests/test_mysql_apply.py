@@ -213,3 +213,65 @@ def test_apply_dir_walks_rotated_compressed_exports(spark, tmp_path):
     assert report2.transactions == report.transactions
     assert report2.rows_statements == report.rows_statements
     assert [s for k, s in conn2.log] == [s for k, s in conn.log]
+
+
+def test_query_event_with_status_vars():
+    """Real servers put status variables between the QUERY post-header
+    and the schema (status_vars_len at body[11:13]); BEGIN must still
+    open a transaction and DDL must still get its schema and text."""
+    import struct
+
+    from mysql_binlog_spark.sinks.binlog_file import (
+        BINLOG_MAGIC,
+        FORMAT_DESCRIPTION_EVENT,
+        QUERY_EVENT,
+        _event,
+        _fde_body,
+    )
+
+    # Q_FLAGS2, Q_SQL_MODE, Q_CATALOG_NZ "std", Q_CHARSET (as mysqld 5.7)
+    status = (
+        b"\x00" + struct.pack("<I", 0)
+        + b"\x01" + struct.pack("<Q", 0x45A00020)
+        + b"\x06\x03std"
+        + b"\x04" + struct.pack("<HHH", 33, 33, 8)
+    )
+
+    def query(schema: bytes, text: bytes) -> bytes:
+        return (
+            struct.pack("<IIBHH", 7, 0, len(schema), 0, len(status))
+            + status + schema + b"\x00" + text
+        )
+
+    out = bytearray(BINLOG_MAGIC)
+    for etype, body in [
+        (FORMAT_DESCRIPTION_EVENT, _fde_body()),
+        (QUERY_EVENT, query(b"maindb", b"TRUNCATE TABLE r2")),
+        (QUERY_EVENT, query(b"maindb", b"BEGIN")),
+        (QUERY_EVENT, query(b"maindb", b"COMMIT")),
+    ]:
+        out.extend(_event(etype, body, len(out)))
+    conn = MockConn()
+    report = BinlogSqlApplier(lambda: conn).apply_bytes(bytes(out))
+    stmts = [s for k, s in conn.log if k == "exec"]
+    assert stmts[2:5] == ["BEGIN", "use maindb", "TRUNCATE TABLE r2"]
+    assert stmts[5:] == ["BEGIN"]  # the BEGIN/COMMIT pair, not DDL
+    assert report.ddl_statements == 1
+    assert report.transactions == 3
+
+
+def test_apply_dir_skips_crashed_writer_temp_files(tmp_path):
+    """A writer that dies mid-file leaves ``.<name>.tmp-<pid>`` beside the
+    export; only finished ``.log``/``.log.z`` files are applied."""
+    import zlib
+
+    d = tmp_path / "nc" / "r1"
+    d.mkdir(parents=True)
+    blob = build_netchange_file(NC_ROWS, "r1", start_xid=1)
+    (d / "chg_1_3.log").write_bytes(blob)
+    (d / "chg_4_6.log.z").write_bytes(zlib.compress(blob))
+    (d / ".chg_7_9.log.tmp-4242").write_bytes(blob[: len(blob) // 2])
+    conn = MockConn()
+    report = apply_binlog_dir(lambda: conn, str(tmp_path / "nc"))
+    assert report.files == 2
+    assert report.xids == [1, 2, 3, 1, 2, 3]

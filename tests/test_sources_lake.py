@@ -373,16 +373,16 @@ def test_merge_detects_vanished_staged_output(spark, tmp_path):
     pq.write_table(pa.Table.from_pandas(ev, preserve_index=False), p)
     t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
 
-    real_list = t.io.list_names
+    real_walk = t.io.walk_files
 
-    def eaten(dirpath):
-        if "/data/epoch" in dirpath and "bucket=" in dirpath:
+    def eaten(root, suffix=".parquet"):
+        if "/data/epoch" in root:
             return []
-        return real_list(dirpath)
+        return real_walk(root, suffix)
 
-    t.io.list_names = eaten
+    t.io.walk_files = eaten
     try:
         with pytest.raises(Exception, match="vanished before commit"):
             run_ingest(spark, p, t, epoch_size=1000)
     finally:
-        t.io.list_names = real_list
+        t.io.walk_files = real_walk
