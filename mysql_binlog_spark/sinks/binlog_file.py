@@ -31,8 +31,18 @@ cumsum, so `cdc_binlog_file_export` cross-checks the framing rule itself.
 Scale shape: one transaction (and one file) per repo, built inside
 applyInPandas — each group's bytes are assembled and written ON THE
 EXECUTOR (no driver collect); the return value is a small per-file
-manifest. Parsing reads Spark's binaryFile source -> mapInPandas decode,
+manifest. The builder stage sits behind a repartition to
+``defaultParallelism`` partitions (``_build_per_group``): export rows are
+few bytes but each group costs Python time, and AQE, which sizes shuffles
+by bytes, would coalesce the whole stage into one task. Net-change tar
+consolidation is file-level work on a driver thread pool and launches no
+Spark job. Parsing reads Spark's binaryFile source -> mapInPandas decode,
 verifying magic, event sizes and every CRC32.
+
+The codec's separators are NUL bytes, so fields a parser splits on NUL
+(``repo``; ``commit`` and ``lang`` in the snapshot value) must not contain
+one: the encoders raise ``ValueError`` rather than export bytes that parse
+back as different rows.
 """
 
 from __future__ import annotations
@@ -186,13 +196,26 @@ def safe_file_component(repo: str) -> str:
     return "%2E" + enc[1:] if enc.startswith(".") else enc
 
 
+def _no_nul(field: str, value: str) -> str:
+    """``value`` unchanged; raises if it holds the codec's NUL separator
+    (the parser would split there and return a different row)."""
+    if "\x00" in value:
+        raise ValueError(f"binlog export: {field} {value!r} contains NUL")
+    return value
+
+
 def _key_bytes(repo: str, path: str) -> bytes:
-    return repo.encode() + b"\x00" + path.encode()
+    return _no_nul("repo", repo).encode() + b"\x00" + path.encode()
 
 
 def _value_bytes(commit: str, lang: str | None, content: str) -> bytes:
-    lang_part = b"\x00" if lang is None else b"\x01" + lang.encode()
-    return commit.encode() + b"\x00" + lang_part + b"\x00" + content.encode()
+    lang_part = (
+        b"\x00" if lang is None else b"\x01" + _no_nul("lang", lang).encode()
+    )
+    return (
+        _no_nul("commit", commit).encode() + b"\x00" + lang_part + b"\x00"
+        + content.encode()
+    )
 
 
 def row_size_expr(repo, path, commit, lang, content):
@@ -246,6 +269,22 @@ def build_binlog_file(rows: list[tuple[str, str, str, str | None, str]],
     return bytes(out)
 
 
+def _build_per_group(df: DataFrame, keys: list[str], build,
+                     schema: T.StructType) -> DataFrame:
+    """Run the file builder ``build`` once per ``keys`` group on every
+    core. The counted repartition is the builder stage's only exchange
+    (it satisfies the groupBy's clustering), and AQE leaves a
+    repartition with an explicit count alone: export rows are small, so
+    byte-sized coalescing would fold the whole Python stage into one
+    task. ``build`` sorts its group, so partition layout never reaches
+    the bytes."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.repartition(n, *keys).groupBy(*keys)
+        .applyInPandas(build, schema=schema)
+    )
+
+
 def write_binlog_files(
     snapshot: DataFrame, out_dir: str, max_file_bytes: int | None = None
 ) -> DataFrame:
@@ -258,12 +297,17 @@ def write_binlog_files(
     ``max_file_bytes`` bounds each writer task's materialized group the
     same way the net-change exporter does: segment assignment by window
     cumsum of the row size (``row_size_expr`` — pinned to the byte
-    encoder), writer tasks grouped by (repo, segment) behind an explicit
-    repartition, file names ``binlog-{repo}.{seg:05d}.log``. Without it
-    (the default, and the oracle-checked contract shape) a repo is one
-    transaction in one file — the reference's own per-table shape — and
-    a repo's whole snapshot materializes in one pandas frame, which at
-    lake scale means a hot repo needs the rotation bound.
+    encoder), writer tasks grouped by (repo, segment), file names
+    ``binlog-{repo}.{seg:05d}.log``. Without it (the default, and the
+    oracle-checked contract shape) a repo is one transaction in one file
+    — the reference's own per-table shape — and a repo's whole snapshot
+    materializes in one pandas frame, which at lake scale means a hot
+    repo needs the rotation bound.
+
+    Either way the builder stage runs ``defaultParallelism`` tasks, set by
+    ``_build_per_group``'s counted repartition rather than by AQE: AQE
+    sizes partitions by bytes, and a few thousand export rows would
+    coalesce into one Python task.
     """
     from pyspark.sql import Window
 
@@ -314,9 +358,8 @@ def write_binlog_files(
         )
 
     df = snapshot.select("repo", "path", "commit", "lang", "content")
-    if max_file_bytes is None:
-        grouped = df.groupBy("repo")
-    else:
+    keys = ["repo"]
+    if max_file_bytes is not None:
         w = Window.partitionBy("repo").orderBy("path")
         sz = row_size_expr(
             F.col("repo"), F.col("path"), F.col("commit"), F.col("lang"),
@@ -329,8 +372,8 @@ def write_binlog_files(
         df = df.withColumn(
             "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
         )
-        grouped = df.repartition("repo", "_seg").groupBy("repo", "_seg")
-    return grouped.applyInPandas(build, schema=FILE_MANIFEST_SCHEMA)
+        keys = ["repo", "_seg"]
+    return _build_per_group(df, keys, build, FILE_MANIFEST_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -724,7 +767,10 @@ def write_netchange_binlog_files(
     - optional whole-stream zlib (``.log.z`` — common/client/cfs.go:62-68).
 
     Files are written ON THE EXECUTORS; the return value is the small
-    per-file manifest with start/end seqs.
+    per-file manifest with start/end seqs. The builder stage runs
+    ``defaultParallelism`` tasks, set by ``_build_per_group``'s counted
+    repartition rather than by AQE, whose byte-sized coalescing would
+    put a few thousand diff rows through one Python task.
     """
     from pyspark.sql import Window
 
@@ -780,7 +826,7 @@ def write_netchange_binlog_files(
     df = changes.select(*cols)
     if max_file_bytes is None:
         df = df.withColumn("_seg", F.lit(0)).withColumn("_max_seg", F.lit(0))
-        grouped = df.groupBy("repo")
+        keys = ["repo"]
     else:
         w = Window.partitionBy("repo").orderBy("seq", "path")
         cum_before = F.coalesce(
@@ -797,8 +843,8 @@ def write_netchange_binlog_files(
         # rule), which would keep ALL of a hot repo's segments serialized
         # through one task — the second exchange is deliberate, it buys
         # cross-executor parallelism for the dominant repo's segments
-        grouped = df.repartition("repo", "_seg").groupBy("repo", "_seg")
-    return grouped.applyInPandas(build, schema=NETCHANGE_MANIFEST_SCHEMA)
+        keys = ["repo", "_seg"]
+    return _build_per_group(df, keys, build, NETCHANGE_MANIFEST_SCHEMA)
 
 
 def parse_netchange_bytes(blob: bytes) -> list[dict]:
@@ -926,6 +972,12 @@ def read_netchange_binlog_files(spark, out_dir: str) -> DataFrame:
     return files.mapInPandas(run, schema=NETCHANGE_ROW_SCHEMA)
 
 
+def _segment_seqs(name: str) -> tuple[int, int]:
+    """(start, end) seqs of a ``chg_{start}_{end}.*`` segment or tar."""
+    _kind, start, end = name.split(".")[0].split("_")
+    return int(start), int(end)
+
+
 def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
     """Fold each repo's rotated segment files into ONE rolling
     ``chg_{min}_{max}.tar`` archive and remove the originals — the
@@ -934,65 +986,92 @@ def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
     become one sequentially-readable archive while staying parseable
     (``read_netchange_binlog_files`` opens tar members transparently).
 
-    Runs one applyInPandas task per repo directory (the tar fold is
-    file-level work, done where the files live — assumes out_dir is
-    shared storage, the same assumption the writer's ``open()`` makes).
-    Tar members are written with zeroed metadata so archive bytes are a
-    pure function of the member contents. Returns the per-archive
-    manifest."""
+    Rolling re-fold: a directory with loose segments gets one new archive
+    holding those segments AND the members of its existing ``chg_*.tar``
+    files, deduplicated and sorted by name — zero-padded seqs make name
+    order seq order, which ``apply_binlog_dir`` relies on. Order on disk:
+    temp tar, ``os.replace``, remove the old tars, remove the segments;
+    a crash anywhere leaves the segments in place, so a rerun folds again
+    and converges to one tar. A directory with no loose segments is left
+    alone.
+
+    The fold is file-level work with no Spark job: it runs on a driver
+    thread pool of ``defaultParallelism`` threads, one repo directory per
+    call (the driver already lists ``out_dir``, and the writer creates
+    it there). Tar members are written with zeroed metadata so archive
+    bytes are a pure function of the member contents. The call is EAGER;
+    the returned per-archive manifest (one row per folded directory) is
+    a local relation built from an Arrow table, so collecting it runs no
+    job either."""
+    import io as _io
     import tarfile
+    from concurrent.futures import ThreadPoolExecutor
+    from contextlib import ExitStack
+    from pathlib import Path
+
+    import pyarrow as pa
+
+    cols = ["repo_dir", "tar_name", "n_members", "byte_len"]
+    prefix = f"{NETCHANGE_KIND}_"
+
+    def fold(d: str) -> dict | None:
+        rdir = os.path.join(out_dir, d)
+        listing = os.listdir(rdir)
+        loose = sorted(
+            n for n in listing
+            if n.startswith(prefix) and ".log" in n and not n.endswith(".tar")
+        )
+        if not loose:
+            return None
+        old_tars = sorted(
+            n for n in listing if n.startswith(prefix) and n.endswith(".tar")
+        )
+        with ExitStack() as stack:
+            members = {}  # member name -> () -> bytes; loose files win
+            for t in old_tars:
+                tf = stack.enter_context(tarfile.open(os.path.join(rdir, t)))
+                for m in tf.getmembers():
+                    if m.isfile():
+                        members.setdefault(
+                            m.name, lambda tf=tf, m=m: tf.extractfile(m).read()
+                        )
+            for n in loose:
+                members[n] = Path(rdir, n).read_bytes
+            seqs = [s for n in members for s in _segment_seqs(n)]
+            tar_name = f"{prefix}{min(seqs):010d}_{max(seqs):010d}.tar"
+            tmp = os.path.join(rdir, f".{tar_name}.tmp-{os.getpid()}")
+            with tarfile.open(tmp, "w") as out:
+                for n in sorted(members):
+                    data = members[n]()
+                    info = tarfile.TarInfo(name=n)
+                    info.size = len(data)
+                    info.mtime = 0  # deterministic archive bytes
+                    out.addfile(info, _io.BytesIO(data))
+        os.replace(tmp, os.path.join(rdir, tar_name))
+        for n in old_tars:
+            if n != tar_name:
+                os.remove(os.path.join(rdir, n))
+        for n in loose:
+            os.remove(os.path.join(rdir, n))
+        return {
+            "repo_dir": d,
+            "tar_name": tar_name,
+            "n_members": len(members),
+            "byte_len": os.path.getsize(os.path.join(rdir, tar_name)),
+        }
 
     dirs = sorted(
         d for d in os.listdir(out_dir)
         if os.path.isdir(os.path.join(out_dir, d))
     )
-    if not dirs:
-        return spark.createDataFrame([], "repo_dir string, tar_name string, "
-                                         "n_members long, byte_len long")
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = pdf["repo_dir"].iloc[0]
-        rdir = os.path.join(out_dir, d)
-        names = sorted(
-            n for n in os.listdir(rdir)
-            if n.startswith(f"{NETCHANGE_KIND}_") and ".log" in n
-            and not n.endswith(".tar")
-        )
-        if not names:
-            return pd.DataFrame(
-                columns=["repo_dir", "tar_name", "n_members", "byte_len"]
-            )
-        seqs = [int(n.split("_")[1]) for n in names] + [
-            int(n.split("_")[2].split(".")[0]) for n in names
-        ]
-        tar_name = (
-            f"{NETCHANGE_KIND}_{min(seqs):010d}_{max(seqs):010d}.tar"
-        )
-        tmp = os.path.join(rdir, f".{tar_name}.tmp-{os.getpid()}")
-        with tarfile.open(tmp, "w") as tf:
-            for n in names:
-                with open(os.path.join(rdir, n), "rb") as f:
-                    data = f.read()
-                info = tarfile.TarInfo(name=n)
-                info.size = len(data)
-                info.mtime = 0  # deterministic archive bytes
-                import io as _io
-
-                tf.addfile(info, _io.BytesIO(data))
-        os.replace(tmp, os.path.join(rdir, tar_name))
-        for n in names:
-            os.remove(os.path.join(rdir, n))
-        return pd.DataFrame(
-            [{
-                "repo_dir": d,
-                "tar_name": tar_name,
-                "n_members": len(names),
-                "byte_len": os.path.getsize(os.path.join(rdir, tar_name)),
-            }]
-        )
-
-    listing = spark.createDataFrame([(d,) for d in dirs], "repo_dir string")
-    return listing.groupBy("repo_dir").applyInPandas(
-        fold, schema="repo_dir string, tar_name string, n_members long, "
-                     "byte_len long"
+    workers = spark.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        rows = [r for r in pool.map(fold, dirs) if r is not None]
+    # an Arrow table, not the pandas frame itself: createDataFrame sends an
+    # EMPTY pandas frame down the non-Arrow path, which runs a job
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pd.DataFrame(rows, columns=cols),
+                             preserve_index=False),
+        schema="repo_dir string, tar_name string, n_members long, "
+               "byte_len long",
     )

@@ -1,8 +1,13 @@
-"""Stage-level scaling profile: run the replay (or ingest) with Spark event
-logs on, then print per-stage wall time and task-time totals, so the
-non-scaling stages are identifiable instead of guessed.
+"""Stage-level scaling profile: run the replay, the ingest or one
+``__spark_entry__`` contract query with Spark event logs on, then print
+per-stage wall time and task counts, so the non-scaling stages are
+identifiable instead of guessed.
 
 Usage: python scripts/profile_stages.py <cpus> [replay|ingest] [n_events]
+       python scripts/profile_stages.py <cpus> query <name> [sf_dir]
+
+``query`` mode collects ``queries()[name](spark, sf_dir)``; ``sf_dir``
+defaults to the sf0.01 test data, as in ``scripts/check_contract.py``.
 """
 
 from __future__ import annotations
@@ -20,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     cpus = int(sys.argv[1])
     job = sys.argv[2] if len(sys.argv) > 2 else "replay"
-    n_events = int(sys.argv[3]) if len(sys.argv) > 3 else 32_000_000
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
 
     evdir = tempfile.mkdtemp(prefix="spark_events_")
@@ -34,10 +38,18 @@ def main() -> None:
             "spark.eventLog.compress": "false",
         },
     )
-    from bench import bench_ingest, bench_replay
-
     t0 = time.monotonic()
-    res = bench_ingest(spark, n_events, epochs=2) if job == "ingest" else bench_replay(spark, n_events)
+    if job == "query":
+        import __spark_entry__ as entrymod
+
+        name = sys.argv[3]
+        sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.01"
+        res = {"query": name, "rows": len(entrymod.queries()[name](spark, sf_dir).collect())}
+    else:
+        from bench import bench_ingest, bench_replay
+
+        n_events = int(sys.argv[3]) if len(sys.argv) > 3 else 32_000_000
+        res = bench_ingest(spark, n_events, epochs=2) if job == "ingest" else bench_replay(spark, n_events)
     wall = time.monotonic() - t0
     spark.stop()
 

@@ -26,6 +26,7 @@ from mysql_binlog_spark.sinks.binlog_file import (
     WRITE_ROWS_EVENT_V2,
     XID_EVENT,
     _POST_HEADER_LENS,
+    _segment_seqs,
     build_netchange_file,
     consolidate_netchange_exports,
     parse_netchange_bytes,
@@ -300,3 +301,220 @@ def test_rotation_assignment_is_distributed(spark, tmp_path):
     assert len(manifest) > 5  # hot repo split into many bounded segments
     assert all(m["byte_len"] < 3 * 8192 for m in manifest)
     assert sum(m["n_rows"] for m in manifest) == 200
+
+
+def _stages_under_group(spark, group, action):
+    """Run ``action`` under a fresh job group; returns (result, job ids,
+    {stage id: task count}) from the status tracker."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    tasks = {
+        s: tracker.getStageInfo(s).numTasks
+        for j in jobs for s in tracker.getJobInfo(j).stageIds
+    }
+    return result, jobs, tasks
+
+
+def _snapshot_df(spark, n_repos=10, per_repo=30):
+    rows = [
+        (f"r{i % n_repos}", f"p{i:04d}", f"c{i}", None if i % 4 else "py",
+         f"body-{i}" * 40)
+        for i in range(n_repos * per_repo)
+    ]
+    return spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string"
+    )
+
+
+def _writers(spark):
+    """(name, DataFrame -> manifest DataFrame, input) for both exporters,
+    unrotated and rotated, over inputs of 10 repos (>= 8 groups)."""
+    from mysql_binlog_spark.sinks.binlog_file import write_binlog_files
+
+    nc_rows = [
+        (f"r{i % 10}", f"p{i:04d}", "I", i, None, f"body-{i}" * 40, f"c{i}")
+        for i in range(300)
+    ]
+    nc = _changes_df(spark, nc_rows)
+    snap = _snapshot_df(spark)
+    return [
+        ("snapshot", snap,
+         lambda df, out: write_binlog_files(df, out)),
+        ("snapshot-rotated", snap,
+         lambda df, out: write_binlog_files(df, out, max_file_bytes=2048)),
+        ("netchange", nc,
+         lambda df, out: write_netchange_binlog_files(df, out)),
+        ("netchange-rotated", nc,
+         lambda df, out: write_netchange_binlog_files(
+             df, out, max_file_bytes=2048, compress=True)),
+    ]
+
+
+def test_builder_stage_runs_one_task_per_slot(spark, tmp_path):
+    """The Python file-builder stage is sized by the counted repartition,
+    not coalesced by AQE into a single task: with >= 8 groups the final
+    (builder) stage of every writer runs defaultParallelism tasks."""
+    slots = spark.sparkContext.defaultParallelism
+    for name, df, write in _writers(spark):
+        out = str(tmp_path / name)
+        manifest, _, tasks = _stages_under_group(
+            spark, f"builder-{name}", lambda: write(df, out).collect()
+        )
+        assert len(manifest) >= 8, name
+        # the builder is the last job's result stage: the highest stage id
+        assert tasks[max(tasks)] == slots, (name, tasks)
+
+
+def test_consolidate_runs_no_spark_job(spark, tmp_path):
+    """The tar fold runs on driver threads, and its manifest is a local
+    relation: consolidating and collecting the manifest issue no job."""
+    out = str(tmp_path / "nc")
+    rows = [
+        (f"r{i % 9}", f"p{i:04d}", "I", i, None, f"body-{i}" * 40, f"c{i}")
+        for i in range(180)
+    ]
+    write_netchange_binlog_files(
+        _changes_df(spark, rows), out, max_file_bytes=1024, compress=True
+    ).collect()
+    tars, jobs, _ = _stages_under_group(
+        spark, "consolidate",
+        lambda: consolidate_netchange_exports(spark, out).collect(),
+    )
+    assert len(tars) == 9 and all(t["n_members"] >= 2 for t in tars)
+    assert jobs == []
+    # nothing left to fold: the empty manifest is job-free as well
+    again, jobs, _ = _stages_under_group(
+        spark, "consolidate-again",
+        lambda: consolidate_netchange_exports(spark, out).collect(),
+    )
+    assert again == [] and jobs == []
+
+
+def test_export_bytes_independent_of_input_partitioning(spark, tmp_path):
+    """Both writers emit the same files, byte for byte, whether the input
+    arrives in 1 partition or in 7."""
+    for name, df, write in _writers(spark):
+        got = []
+        for n in (1, 7):
+            part = df.coalesce(1) if n == 1 else df.repartition(n)
+            assert part.rdd.getNumPartitions() == n
+            manifest = write(part, str(tmp_path / f"{name}-{n}")).collect()
+            got.append({(m["file_name"], m["file_sha256"]) for m in manifest})
+        assert got[0] == got[1], name
+        assert len(got[0]) >= 8, name
+
+
+def _cycle_rows(cycle: int):
+    """One export cycle's diff rows: two repos, a disjoint seq range per
+    cycle, all three op types."""
+    rows = []
+    for i in range(24):
+        seq = 1000 * (cycle + 1) + i
+        op = ("I", "U", "D")[i % 3]
+        rows.append((
+            ("org/a", "b")[i % 2], f"p{i:03d}", op, seq,
+            None if op == "I" else f"old-{cycle}-{i}" * 20,
+            None if op == "D" else f"new-{cycle}-{i}" * 20,
+            None if op == "D" else f"c{cycle}-{i}",
+        ))
+    return rows
+
+
+def test_rolling_refold_keeps_one_tar_per_repo(spark, tmp_path):
+    """Three write -> consolidate cycles into one out_dir leave exactly
+    one tar per repo (the reference's rolling archive, cfs.go:84-171);
+    the tar parses back to the union of the inputs, and applying the tree
+    runs every segment once, in seq order."""
+    from unittest.mock import MagicMock
+
+    from mysql_binlog_spark.sinks.mysql_apply import (
+        BinlogSqlApplier,
+        apply_binlog_dir,
+    )
+
+    out = str(tmp_path / "nc")
+    segments: dict[str, dict[str, bytes]] = {}  # repo dir -> name -> bytes
+    all_rows = []
+    for cycle in range(3):
+        rows = _cycle_rows(cycle)
+        all_rows += rows
+        manifest = write_netchange_binlog_files(
+            _changes_df(spark, rows), out, max_file_bytes=2048, compress=True
+        ).collect()
+        for m in manifest:
+            d, name = m["file_name"].split("/")
+            with open(os.path.join(out, m["file_name"]), "rb") as f:
+                segments.setdefault(d, {})[name] = f.read()
+        tars = consolidate_netchange_exports(spark, out).collect()
+        assert len(tars) == 2
+        for t in tars:
+            # every segment written so far, none twice
+            assert t["n_members"] == len(segments[t["repo_dir"]])
+            assert os.listdir(os.path.join(out, t["repo_dir"])) == [t["tar_name"]]
+    for t in tars:
+        seqs = [s for n in segments[t["repo_dir"]] for s in _segment_seqs(n)]
+        assert t["tar_name"] == f"chg_{min(seqs):010d}_{max(seqs):010d}.tar"
+
+    back = read_netchange_binlog_files(spark, out).collect()
+    got = sorted(
+        (r["repo"], r["path"], r["diff_op"], r["old_content"],
+         r["new_content"], r["new_commit"]) for r in back
+    )
+    assert got == sorted((r, p, op, o, n, c) for r, p, op, _s, o, n, c in all_rows)
+
+    # a mock DB-API connection records every cursor, statement and commit
+    conn, want = MagicMock(), MagicMock()
+    report = apply_binlog_dir(lambda: conn, out)
+    applier = BinlogSqlApplier(lambda: want)
+    for d in sorted(segments):
+        for name in sorted(segments[d]):
+            applier.apply_bytes(segments[d][name])
+    applier.close()
+    assert conn.mock_calls == want.mock_calls
+    assert report.transactions == applier.report.transactions > 0
+
+
+def test_refold_converges_after_crash_before_cleanup(spark, tmp_path, monkeypatch):
+    """A crash after the new tar is in place but before the old tar and
+    the folded segments are removed: a rerun converges to one tar holding
+    each segment once."""
+    import mysql_binlog_spark.sinks.binlog_file as blf
+
+    out = str(tmp_path / "nc")
+    rows0, rows1 = _cycle_rows(0), _cycle_rows(1)
+    write_netchange_binlog_files(
+        _changes_df(spark, rows0), out, max_file_bytes=2048).collect()
+    consolidate_netchange_exports(spark, out).collect()
+    write_netchange_binlog_files(
+        _changes_df(spark, rows1), out, max_file_bytes=2048).collect()
+
+    real_remove = os.remove
+
+    def crash(path):
+        if os.path.realpath(path).startswith(os.path.realpath(out)):
+            raise OSError("simulated crash")
+        real_remove(path)
+
+    monkeypatch.setattr(blf.os, "remove", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        consolidate_netchange_exports(spark, out)
+    monkeypatch.setattr(blf.os, "remove", real_remove)
+    for d in os.listdir(out):
+        assert sum(n.endswith(".tar") for n in os.listdir(os.path.join(out, d))) == 2
+
+    tars = consolidate_netchange_exports(spark, out).collect()
+    assert len(tars) == 2
+    for t in tars:
+        assert os.listdir(os.path.join(out, t["repo_dir"])) == [t["tar_name"]]
+    back = read_netchange_binlog_files(spark, out).collect()
+    assert len(back) == len(rows0) + len(rows1)
+    assert sorted((r["repo"], r["path"], r["new_commit"]) for r in back) == sorted(
+        (r[0], r[1], r[6]) for r in rows0 + rows1
+    )

@@ -1,11 +1,15 @@
 """Property-based checks: for RANDOM changelog shapes (op mix, skew,
 evolution point, seed), the Spark collapse must equal the sequential pandas
 oracle — the two implementations share no code (SURVEY.md §5 strategy #2).
+The binlog byte codecs get build -> parse roundtrips over random rows.
 """
 
 from __future__ import annotations
 
+import zlib
+
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -295,3 +299,118 @@ def test_ddl_snapshot_many_renames_plan_bounded(spark):
     )
     want = oracle_snapshot_from_pandas(ev)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+# ---------------------------------------------------------------------------
+# binlog codecs: build -> parse roundtrips (pure Python, no Spark)
+# ---------------------------------------------------------------------------
+
+
+def _with_nul(text):
+    """``text``, or a value from it with the codec's NUL separator inside."""
+    return text | st.builds(lambda a, b: a + "\x00" + b, text, text)
+
+
+# repo ids are schema names in QUERY/TABLE_MAP events (one length byte)
+_REPO = _with_nul(st.text(max_size=12))
+_FIELD = _with_nul(st.text(max_size=30))
+# bodies past the 8 KiB rows-chunk buffer force multi-chunk transactions
+_BODY = _FIELD | st.builds(
+    lambda ch, n: ch * n, st.characters(codec="utf-8"), st.integers(8193, 12000)
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    repo=_REPO,
+    rows=st.lists(
+        st.tuples(_FIELD, _FIELD, st.none() | _FIELD, _BODY), max_size=5
+    ),
+    xid=st.integers(1, 2**40),
+    compress=st.booleans(),
+)
+def test_snapshot_codec_roundtrip(repo, rows, xid, compress):
+    """Snapshot files parse back to exactly the rows framed, in order,
+    with the 8 KiB chunking rule; NUL in a field the parser splits on
+    (repo, commit, lang) is refused instead of silently mis-parsed."""
+    from mysql_binlog_spark.sinks.binlog_file import (
+        BUFFER_SIZE,
+        build_binlog_file,
+        parse_binlog_bytes,
+    )
+
+    full = [(repo, p, c, lg, ct) for p, c, lg, ct in rows]
+    if full and (
+        "\x00" in repo
+        or any("\x00" in c or "\x00" in (lg or "") for _r, _p, c, lg, _ct in full)
+    ):
+        with pytest.raises(ValueError, match="contains NUL"):
+            build_binlog_file(full, repo, xid=xid)
+        return
+    blob = build_binlog_file(full, repo, xid=xid)
+    if compress:
+        blob = zlib.compress(blob)
+    back = parse_binlog_bytes(blob)
+    assert [
+        (r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in back
+    ] == full
+    cum = 0
+    for (r, p, c, lg, ct), got in zip(full, back):
+        assert got["xid"] == xid and got["chunk_idx"] == cum // BUFFER_SIZE
+        lang_len = 1 if lg is None else 1 + len(lg.encode())
+        cum += (1 + 4 + 4 + len(r.encode()) + 1 + len(p.encode())
+                + len(c.encode()) + 1 + lang_len + 1 + len(ct.encode()))
+
+
+@st.composite
+def _nc_row(draw):
+    op = draw(st.sampled_from("IDU"))
+    path = draw(_FIELD)
+    old = draw(_BODY) if op in "DU" else None
+    new = draw(_BODY) if op in "IU" else None
+    commit = draw(_FIELD) if op in "IU" else None
+    return path, op, old, new, commit
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    repo=_REPO,
+    rows=st.lists(_nc_row(), max_size=6),
+    start_xid=st.integers(1, 2**40),
+    compress=st.booleans(),
+)
+def test_netchange_codec_roundtrip(repo, rows, start_xid, compress):
+    """Net-change files parse back to the rows framed, pass by pass (I, D,
+    U) with their old images; the rotation planner's size model equals the
+    encoded bytes; NUL in the repo id is refused. Path, commit and
+    content are length-prefixed columns, so NUL round-trips there."""
+    from mysql_binlog_spark.sinks.binlog_file import (
+        _key_bytes,
+        _nc_encode_row,
+        _nc_row_size,
+        build_netchange_file,
+        parse_netchange_bytes,
+    )
+
+    if rows and "\x00" in repo:
+        with pytest.raises(ValueError, match="contains NUL"):
+            build_netchange_file(rows, repo, start_xid=start_xid)
+        return
+    for path, op, old, new, commit in rows:
+        key = _key_bytes(repo, path)
+        assert _nc_row_size(op, key, old, new, commit) == len(
+            _nc_encode_row(op, key, old, new, commit)
+        )
+    blob = build_netchange_file(rows, repo, start_xid=start_xid)
+    if compress:
+        blob = zlib.compress(blob)
+    back = parse_netchange_bytes(blob)
+    passes = [op for op in "IDU" if any(r[1] == op for r in rows)]
+    want = [r for op in passes for r in rows if r[1] == op]
+    assert [
+        (r["path"], r["diff_op"], r["old_content"], r["new_content"],
+         r["new_commit"]) for r in back
+    ] == want
+    assert all(r["repo"] == repo for r in back)
+    xid_of = {op: start_xid + i for i, op in enumerate(passes)}
+    assert [r["xid"] for r in back] == [xid_of[r[1]] for r in want]
