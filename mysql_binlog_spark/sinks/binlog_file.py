@@ -1,60 +1,64 @@
-"""Synthetic-binlog FILE export: frame the engine's net-change stream as
-genuine MySQL binlog-v4 files — magic, FORMAT_DESCRIPTION, per-transaction
-BEGIN / TABLE_MAP / <=8KB-chunked WRITE_ROWS / XID, ROTATE trailer, CRC32
-footers — plus the parser that reads them back.
+"""Synthetic-binlog FILES: frame the engine's snapshots and net-change
+streams as genuine MySQL binlog-v4 files, and parse them back.
 
-This is the one reference OUTPUT format the engine previously had no
-byte-level analog for (round-3 judge "missing #4"): the reference's
-restitute path writes compacted per-table binlog files through go-mysql's
-event encoders (common/log/bin.go:28-207 — file header, FDE, BEGIN,
-TableMap, rows chunks cut at the 8KB BinlogBufferSize, XID, rotate;
-backup/binlog/repl.go:706-992 drives it per table). The framing here is
-the PUBLIC binlog v4 layout (MySQL internals manual): 19-byte event
-headers (timestamp, type, server_id, event_size, log_pos, flags), body,
-CRC32-IEEE footer (BINLOG_CHECKSUM_ALG_CRC32); log_pos is the event's END
-position as real servers write it.
+The reference's restitute path writes compacted per-table files through
+one set of go-mysql event encoders (common/log/bin.go:28-207: file header,
+FDE, BEGIN, TableMap, rows chunks cut at the 8KB BinlogBufferSize, XID,
+rotate; backup/binlog/repl.go:706-992 drives it per table). The framing is
+the PUBLIC binlog v4 layout: 19-byte event headers (timestamp, type,
+server_id, event_size, log_pos = the event's END position, flags), body,
+CRC32-IEEE footer.
 
-Row payload layout (2 BLOB columns, meta=4 → 4-byte length prefixes):
+One codec serves two table layouts. A ``_Layout`` gives the TABLE_MAP's
+table name and column count and, per op, the rows event type and the
+fields of each row image; an image's columns-present bitmap is the set of
+fields it names. Every column is a BLOB with a 4-byte length prefix and
+nothing is nullable. The TABLE_MAP and ROWS bodies, the image encoder, the
+framer, the Spark size expression, the rotation planner and the parser
+all work from that description.
 
-    key   = repo \\x00 path
-    value = commit \\x00 (\\x00 | \\x01 lang) \\x00 content
+- ``_SNAPSHOT`` (table ``files``): 2 columns, one ``I`` pass under bitmap
+  0b11: ``key = repo \\x00 path``, ``value = commit \\x00 (\\x00 |
+  \\x01 lang) \\x00 content``. A file is one transaction.
+- ``_NETCHANGE`` (table ``changes``): 3 columns ``(key, commit, content)``
+  in the reference's passes, WRITE_ROWS then DELETE_ROWS then UPDATE_ROWS,
+  one transaction each (backup/binlog/repl.go:770-800 ``dumpBinlog``),
+  with binlog-v2 partial images: I after 0b111, D before 0b101 (key, old
+  content), U both — so a parse recovers old images too.
 
-Chunking rule (SQL-reproducible, mirroring the reference's accumulate-
-then-flush-on-overflow buffer): within a transaction rows are ordered by
-path; a row belongs to chunk floor(cum_bytes_before_row / 8192) where a
-row's size is 1 (null bitmap) + 4 + len(key) + 4 + len(value). A chunk
-may overshoot 8192 by at most one row — exactly the reference's
-`size > BinlogBufferSize` flush (backup/binlog/repl.go:909). The DuckDB
-oracle recomputes the same assignment with octet_length + a window
-cumsum, so `cdc_binlog_file_export` cross-checks the framing rule itself.
+Chunking rule, SQL-reproducible: within a transaction a row goes to chunk
+floor(cum_bytes_before_row / 8192), a row's size being its encoded
+images. A chunk overshoots 8192 by at most one row, exactly the
+reference's `size > BinlogBufferSize` flush (repl.go:909); the DuckDB
+oracle of `cdc_binlog_file_export` recomputes it with a window cumsum.
+ROTATION applies the same rule at ``max_file_bytes`` with a Spark window
+cumsum of ``_size_expr``, and the writers group by (repo, segment), so no
+writer task holds much more than ``max_file_bytes`` of a hot repo.
 
-Scale shape: one transaction (and one file) per repo, built inside
-applyInPandas — each group's bytes are assembled and written ON THE
-EXECUTOR (no driver collect); the return value is a small per-file
-manifest. The builder stage sits behind a repartition to
-``defaultParallelism`` partitions (``_build_per_group``): export rows are
-few bytes but each group costs Python time, and AQE, which sizes shuffles
-by bytes, would coalesce the whole stage into one task. Net-change tar
-consolidation is file-level work on a driver thread pool and launches no
-Spark job. Parsing reads Spark's binaryFile source -> mapInPandas decode,
-verifying magic, event sizes and every CRC32.
+Executors build and write the files inside applyInPandas; net-change tar
+consolidation runs on driver threads with no Spark job. Readers list the
+tree on the driver with ``_binlog_paths`` (``apply_binlog_dir``'s
+walk) and parse on the executors, verifying magic, sizes, every CRC32,
+the rows/XID protocol and the ROTATE trailer ending every written file.
 
-The codec's separators are NUL bytes, so fields a parser splits on NUL
-(``repo``; ``commit`` and ``lang`` in the snapshot value) must not contain
-one: the encoders raise ``ValueError`` rather than export bytes that parse
-back as different rows.
+Fields the parser splits on NUL (``repo``; the snapshot's ``commit`` and
+``lang``) must not hold one: the encoders raise ``ValueError`` rather than
+export bytes that parse back as different rows.
 """
 
 from __future__ import annotations
 
 import hashlib
+import io
 import os
 import struct
+import tarfile
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,37 +82,119 @@ SERVER_VERSION = b"5.7.99-mysql-binlog-spark"
 TABLE_ID = 1
 _POST_HEADER_LENS = 39  # v4 post-header length table size we emit
 
-FILE_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("file_name", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_chunks", T.LongType(), False),
-        T.StructField("byte_len", T.LongType(), False),
-        T.StructField("file_sha256", T.StringType(), False),
-    ]
+NETCHANGE_KIND = "chg"
+
+FILE_MANIFEST_SCHEMA = T.StructType([
+    T.StructField("repo", T.StringType(), False),
+    T.StructField("file_name", T.StringType(), False),
+    T.StructField("n_rows", T.LongType(), False),
+    T.StructField("n_chunks", T.LongType(), False),
+    T.StructField("byte_len", T.LongType(), False),
+    T.StructField("file_sha256", T.StringType(), False),
+])
+
+PARSED_ROW_SCHEMA = T.StructType([
+    T.StructField("repo", T.StringType(), False),
+    T.StructField("path", T.StringType(), False),
+    T.StructField("commit", T.StringType(), True),
+    T.StructField("lang", T.StringType(), True),
+    T.StructField("content", T.StringType(), True),
+    T.StructField("chunk_idx", T.LongType(), False),
+    T.StructField("xid", T.LongType(), False),
+])
+
+NETCHANGE_MANIFEST_SCHEMA = T.StructType([
+    T.StructField("repo", T.StringType(), False),
+    T.StructField("file_name", T.StringType(), False),
+    T.StructField("n_rows", T.LongType(), False),
+    T.StructField("n_inserts", T.LongType(), False),
+    T.StructField("n_deletes", T.LongType(), False),
+    T.StructField("n_updates", T.LongType(), False),
+    T.StructField("start_seq", T.LongType(), False),
+    T.StructField("end_seq", T.LongType(), False),
+    T.StructField("byte_len", T.LongType(), False),
+    T.StructField("compressed", T.BooleanType(), False),
+    T.StructField("file_sha256", T.StringType(), False),
+])
+
+NETCHANGE_ROW_SCHEMA = T.StructType([
+    T.StructField("repo", T.StringType(), False),
+    T.StructField("path", T.StringType(), False),
+    T.StructField("diff_op", T.StringType(), False),
+    T.StructField("old_content", T.StringType(), True),
+    T.StructField("new_content", T.StringType(), True),
+    T.StructField("new_commit", T.StringType(), True),
+    T.StructField("chunk_idx", T.LongType(), False),
+    T.StructField("xid", T.LongType(), False),
+])
+
+
+# -- layouts -----------------------------------------------------------------
+
+
+class _Layout(NamedTuple):
+    """One binlog table layout. ``passes`` maps each op, in file order, to
+    its rows event type and the fields of each row image, one entry per
+    column (None = column absent from that image)."""
+
+    table: bytes
+    ncols: int
+    passes: dict[str, tuple[int, tuple[tuple[str | None, ...], ...]]]
+    schema: T.StructType
+    decode: Callable[[str, dict[str, bytes]], dict]
+
+
+def _bitmap(image: tuple[str | None, ...]) -> int:
+    """Columns-present bitmap of an image: bit i set when column i is."""
+    return sum(1 << i for i, f in enumerate(image) if f)
+
+
+def _split_key(key: bytes) -> dict:
+    repo, path = key.split(b"\x00", 1)
+    return {"repo": repo.decode(), "path": path.decode()}
+
+
+def _decode_snapshot(_op: str, f: dict[str, bytes]) -> dict:
+    commit, rest = f["value"].split(b"\x00", 1)
+    if rest[:1] == b"\x00":  # lang-null marker
+        lang, content = None, rest[2:]
+    else:  # \x01 + lang + \x00 + content
+        lang_b, content = rest[1:].split(b"\x00", 1)
+        lang = lang_b.decode()
+    return {**_split_key(f["key"]), "commit": commit.decode(), "lang": lang,
+            "content": content.decode()}
+
+
+def _decode_netchange(op: str, f: dict[str, bytes]) -> dict:
+    rec = {**_split_key(f["key"]), "diff_op": op}
+    for c in ("old_content", "new_content", "new_commit"):
+        rec[c] = f[c].decode() if c in f else None
+    return rec
+
+
+_BEFORE = ("key", None, "old_content")
+_AFTER = ("key", "new_commit", "new_content")
+
+_SNAPSHOT = _Layout(
+    b"files", 2, {"I": (WRITE_ROWS_EVENT_V2, (("key", "value"),))},
+    PARSED_ROW_SCHEMA, _decode_snapshot,
+)
+#: pass order mirrors the reference's dumpBinlog: inserts, deletes, updates
+_NETCHANGE = _Layout(
+    b"changes", 3, {"I": (WRITE_ROWS_EVENT_V2, (_AFTER,)),
+                    "D": (DELETE_ROWS_EVENT_V2, (_BEFORE,)),
+                    "U": (UPDATE_ROWS_EVENT_V2, (_BEFORE, _AFTER))},
+    NETCHANGE_ROW_SCHEMA, _decode_netchange,
 )
 
-PARSED_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("commit", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("chunk_idx", T.LongType(), False),
-        T.StructField("xid", T.LongType(), False),
-    ]
-)
+
+# -- event bodies ------------------------------------------------------------
 
 
-def _event(etype: int, body: bytes, log_pos: int, ts: int = 0,
-           flags: int = 0) -> bytes:
+def _event(etype: int, body: bytes, log_pos: int) -> bytes:
     """One framed event: 19-byte header + body + CRC32(header+body)."""
     size = HEADER_LEN + len(body) + 4
-    header = struct.pack(
-        "<IBIIIH", ts, etype, SERVER_ID, size, log_pos + size, flags
-    )
+    header = struct.pack("<IBIIIH", 0, etype, SERVER_ID, size, log_pos + size, 0)
     crc = zlib.crc32(header + body) & 0xFFFFFFFF
     return header + body + struct.pack("<I", crc)
 
@@ -119,11 +205,9 @@ def _fde_body() -> bytes:
     post = bytearray(_POST_HEADER_LENS)
     post[QUERY_EVENT - 1] = 13
     post[ROTATE_EVENT - 1] = 8
-    # the FDE's self-entry is its own fixed-part size, computed from the
-    # actual body layout (2 version + 50 server-version + 4 create_ts +
-    # 1 header_len + the post-header table itself) — a strict external
-    # binlog-v4 consumer validates this value (round-4 ADVICE: the old
-    # hardcoded 84 described MySQL 5.1's 27-entry table, not ours)
+    # the FDE's self-entry is its own fixed-part size (2 version + 50
+    # server-version + 4 create_ts + 1 header_len + the table itself) — a
+    # strict external binlog-v4 consumer validates this value
     post[FORMAT_DESCRIPTION_EVENT - 1] = 2 + 50 + 4 + 1 + _POST_HEADER_LENS
     post[TABLE_MAP_EVENT - 1] = 8
     post[WRITE_ROWS_EVENT_V2 - 1] = 10
@@ -147,49 +231,40 @@ def _query_body(schema: bytes, query: bytes) -> bytes:
     )
 
 
-def _table_map_body(schema: bytes, table: bytes) -> bytes:
-    """TABLE_MAP: table_id(6) flags(2) schema table; 2 BLOB columns with
-    meta=4 (4-byte length prefixes), nothing nullable."""
+def _table_map_body(layout: _Layout, schema: bytes) -> bytes:
+    """TABLE_MAP: table_id(6) flags(2) schema table; ``ncols`` BLOB
+    columns with meta=4 (4-byte length prefixes), nothing nullable."""
+    n = layout.ncols
     return (
         TABLE_ID.to_bytes(6, "little")
         + struct.pack("<H", 0)
         + bytes([len(schema)]) + schema + b"\x00"
-        + bytes([len(table)]) + table + b"\x00"
-        + b"\x02"                 # column count (packed int < 251)
-        + bytes([252, 252])       # MYSQL_TYPE_BLOB x2
-        + b"\x02" + bytes([4, 4])  # metadata: 4-byte blob length prefix
-        + b"\x00"                 # null bitmap: none nullable
+        + bytes([len(layout.table)]) + layout.table + b"\x00"
+        + bytes([n]) + bytes([252] * n)  # column count, MYSQL_TYPE_BLOB
+        + bytes([n]) + bytes([4] * n)    # metadata: 4-byte length prefix
+        + b"\x00"                        # null bitmap: none nullable
     )
 
 
-def _encode_row(key: bytes, value: bytes) -> bytes:
-    return (
-        b"\x00"  # per-row null bitmap (2 cols, none null)
-        + struct.pack("<I", len(key)) + key
-        + struct.pack("<I", len(value)) + value
-    )
-
-
-def _rows_body(rows_payload: bytes, flags: int) -> bytes:
-    """WRITE_ROWS v2: table_id(6) flags(2) extra_len(2)=2, then
-    column_count (packed), columns-present bitmap, row images."""
+def _rows_body(layout: _Layout, images, payload: bytes, flags: int) -> bytes:
+    """ROWS v2: table_id(6) flags(2) extra_len(2)=2, column count, one
+    columns-present bitmap per image (UPDATE carries two), row images."""
     return (
         TABLE_ID.to_bytes(6, "little")
-        + struct.pack("<H", flags)
-        + struct.pack("<H", 2)  # extra-data length (none beyond the field)
-        + b"\x02"               # column count
-        + b"\x03"               # columns-present bitmap (both)
-        + rows_payload
+        + struct.pack("<HH", flags, 2)
+        + bytes([layout.ncols] + [_bitmap(img) for img in images])
+        + payload
     )
+
+
+# -- encoder and framer ------------------------------------------------------
 
 
 def safe_file_component(repo: str) -> str:
-    """Injective, filesystem-safe encoding of a repo id for use inside an
-    output file name. Git repo ids routinely contain '/' ('org/name'),
-    and a hostile value could carry '..' or an absolute prefix — raw
-    interpolation would escape out_dir (round-4 ADVICE, path traversal).
-    percent-encodes everything outside [A-Za-z0-9._-]; '.' is kept only
-    when it cannot form a dot-segment (a leading '.' is encoded)."""
+    """Injective, filesystem-safe encoding of a repo id for a file name:
+    ids contain '/' ('org/name'), and '..' or an absolute prefix would
+    escape out_dir. Percent-encodes everything outside [A-Za-z0-9._-]; a
+    leading '.' is encoded too, so no dot-segment can form."""
     from urllib.parse import quote
 
     enc = quote(repo, safe="._-")
@@ -204,69 +279,151 @@ def _no_nul(field: str, value: str) -> str:
     return value
 
 
-def _key_bytes(repo: str, path: str) -> bytes:
+def _key(repo: str, path: str) -> bytes:
     return _no_nul("repo", repo).encode() + b"\x00" + path.encode()
 
 
-def _value_bytes(commit: str, lang: str | None, content: str) -> bytes:
-    lang_part = (
-        b"\x00" if lang is None else b"\x01" + _no_nul("lang", lang).encode()
-    )
-    return (
-        _no_nul("commit", commit).encode() + b"\x00" + lang_part + b"\x00"
-        + content.encode()
-    )
+def _snapshot_row(repo, path, commit, lang, content) -> tuple[str, dict]:
+    """(op, fields) of one snapshot row; a null commit or content leaves
+    ``value`` unset, which the encoder refuses."""
+    value = None
+    if commit is not None and content is not None:
+        lang_part = b"\x00" if lang is None else b"\x01" + _no_nul("lang", lang).encode()
+        value = (_no_nul("commit", commit).encode() + b"\x00" + lang_part
+                 + b"\x00" + content.encode())
+    return "I", {"key": _key(repo, path), "value": value}
 
 
-def row_size_expr(repo, path, commit, lang, content):
-    """The chunking rule's per-row size as a Spark expression — kept next
-    to the byte encoder so the two can never drift (the SQL oracle uses
-    the same arithmetic via octet_length)."""
-    key_len = F.octet_length(repo) + 1 + F.octet_length(path)
-    val_len = (
-        F.octet_length(commit) + 1
-        + F.when(lang.isNull(), F.lit(1)).otherwise(1 + F.octet_length(lang))
-        + 1 + F.octet_length(content)
-    )
-    return F.lit(1 + 4 + 4) + key_len + val_len
+def _netchange_row(repo, path, op, *values) -> tuple[str, dict]:
+    """(op, fields) of one net-change row; ``values`` = old_content,
+    new_content, new_commit."""
+    names = ("old_content", "new_content", "new_commit")
+    return op, {"key": _key(repo, path),
+                **{k: v if v is None else v.encode() for k, v in zip(names, values)}}
+
+
+def _encode_row(layout: _Layout, op: str, fields: dict) -> bytes:
+    """A row's images under its op's bitmaps. Each image is a null-bitmap
+    byte (0x00: nothing null) then each present column length-prefixed."""
+    out = bytearray()
+    for image in layout.passes[op][1]:
+        out += b"\x00"
+        for f in filter(None, image):
+            if fields[f] is None:
+                raise ValueError(
+                    f"binlog export: {op} row {fields['key']!r} is missing "
+                    "its required image columns"
+                )
+            out += struct.pack("<I", len(fields[f])) + fields[f]
+    return bytes(out)
+
+
+def _frame(layout: _Layout, repo: str, rows: list[tuple[str, dict]],
+           start_xid: int, next_name: str) -> tuple[bytes, int]:
+    """Frame ``rows`` ((op, fields), in file order) as one complete binlog
+    file -> (bytes, rows-event count). Each op pass present is one BEGIN /
+    TABLE_MAP / <=8KB-chunked rows events / XID transaction, with xids
+    counting up from ``start_xid``; a single-pass layout frames its pass
+    even when empty. ROTATE names ``next_name``."""
+    stray = sorted({op for op, _ in rows} - set(layout.passes))
+    if stray:
+        raise ValueError(f"binlog export: unknown diff_op {stray[0]!r} "
+                         f"for repo {repo!r}")
+    out = bytearray(BINLOG_MAGIC)
+
+    def emit(etype: int, body: bytes) -> None:
+        out.extend(_event(etype, body, len(out)))
+
+    emit(FORMAT_DESCRIPTION_EVENT, _fde_body())
+    xid, n_chunks = start_xid, 0
+    for op, (etype, images) in layout.passes.items():
+        encoded = [_encode_row(layout, op, f) for o, f in rows if o == op]
+        if not encoded and len(layout.passes) > 1:
+            continue
+        emit(QUERY_EVENT, _query_body(repo.encode(), b"BEGIN"))
+        emit(TABLE_MAP_EVENT, _table_map_body(layout, repo.encode()))
+        # accumulate-then-flush-on-overflow chunking (module docstring)
+        chunks: list[bytearray] = [bytearray()]
+        cum = 0
+        for enc in encoded:
+            while cum // BUFFER_SIZE >= len(chunks):
+                chunks.append(bytearray())
+            chunks[cum // BUFFER_SIZE].extend(enc)
+            cum += len(enc)
+        for i, ch in enumerate(chunks):
+            flags = STMT_END_F if i == len(chunks) - 1 else 0
+            emit(etype, _rows_body(layout, images, bytes(ch), flags))
+        emit(XID_EVENT, struct.pack("<Q", xid))
+        xid, n_chunks = xid + 1, n_chunks + len(chunks)
+    emit(ROTATE_EVENT, struct.pack("<Q", len(out)) + next_name.encode())
+    return bytes(out), n_chunks
 
 
 def build_binlog_file(rows: list[tuple[str, str, str, str | None, str]],
                       repo: str, xid: int = 1) -> bytes:
-    """Frame one transaction's rows (already path-ordered) as a complete
-    binlog file. Pure function of its inputs — usable driver-side for
-    tests and inside the executor writer."""
-    out = bytearray(BINLOG_MAGIC)
-    pos = len(out)
+    """Frame one transaction's (repo, path, commit, lang, content) rows
+    (already path-ordered) as a complete snapshot binlog file. Pure
+    function of its inputs — usable driver-side for tests and inside the
+    executor writer."""
+    return _frame(_SNAPSHOT, repo, [_snapshot_row(*r) for r in rows], xid,
+                  f"{repo}.next")[0]
 
-    def emit(etype: int, body: bytes, flags: int = 0) -> None:
-        nonlocal pos
-        ev = _event(etype, body, pos, flags=flags)
-        out.extend(ev)
-        pos += len(ev)
 
-    emit(FORMAT_DESCRIPTION_EVENT, _fde_body())
-    emit(QUERY_EVENT, _query_body(repo.encode(), b"BEGIN"))
-    emit(TABLE_MAP_EVENT, _table_map_body(repo.encode(), b"files"))
+def build_netchange_file(
+    rows: list[tuple[str, str, str | None, str | None, str | None]],
+    repo: str, start_xid: int = 1, next_name: str = "",
+) -> bytes:
+    """Frame one rotation segment's net-change rows as a complete binlog
+    file: one transaction per op pass present (I, D, U — the reference's
+    three-pass restitute), ROTATE trailer naming the next segment.
+    ``rows`` = (path, op, old_content, new_content, new_commit) tuples,
+    already (seq, path)-ordered. Pure function of its inputs."""
+    return _frame(_NETCHANGE, repo, [_netchange_row(repo, *r) for r in rows],
+                  start_xid, next_name)[0]
 
-    # accumulate-then-flush-on-overflow chunking (see module docstring):
-    # a row belongs to chunk floor(cum_bytes_before_row / 8192)
-    chunks: list[bytearray] = [bytearray()]
-    cum = 0
-    for r, p, c, lg, ct in rows:
-        enc = _encode_row(_key_bytes(r, p), _value_bytes(c, lg, ct))
-        idx = cum // BUFFER_SIZE
-        while idx >= len(chunks):
-            chunks.append(bytearray())
-        chunks[idx].extend(enc)
-        cum += len(enc)
 
-    for i, ch in enumerate(chunks):
-        flags = STMT_END_F if i == len(chunks) - 1 else 0
-        emit(WRITE_ROWS_EVENT_V2, _rows_body(bytes(ch), flags))
-    emit(XID_EVENT, struct.pack("<Q", xid))
-    emit(ROTATE_EVENT, struct.pack("<Q", pos) + f"{repo}.next".encode())
-    return bytes(out)
+# -- distributed writers -----------------------------------------------------
+
+
+def _field_len(field: str):
+    """Encoded byte length of one layout field, as a Spark expression."""
+    if field == "key":
+        return F.octet_length("repo") + 1 + F.octet_length("path")
+    if field == "value":
+        return (
+            F.octet_length("commit") + 1
+            + F.when(F.col("lang").isNull(), 1).otherwise(1 + F.octet_length("lang"))
+            + 1 + F.octet_length("content")
+        )
+    return F.octet_length(field)
+
+
+def _size_expr(layout: _Layout):
+    """``len(_encode_row(...))`` as a Spark expression over the export
+    columns (a parity test pins the two together); a multi-pass layout
+    takes its op from ``diff_op``."""
+    op = F.col("diff_op") if len(layout.passes) > 1 else F.lit("I")
+    expr = F  # F.when opens the CASE, Column.when extends it
+    for o, (_etype, images) in layout.passes.items():
+        size = sum(1 + sum(4 + _field_len(f) for f in filter(None, image))
+                   for image in images)
+        expr = expr.when(op == o, size)
+    return expr.cast("long")
+
+
+def _with_segments(df: DataFrame, layout: _Layout, order: list[str],
+                   max_file_bytes: int) -> DataFrame:
+    """Add ``_seg`` = floor(cum_bytes_before_row / max_file_bytes) over a
+    repo's rows in ``order`` — the 8KB chunk rule at file scale, so a
+    segment overshoots by at most one row."""
+    w = Window.partitionBy("repo").orderBy(*order)
+    cum_before = F.coalesce(
+        F.sum(_size_expr(layout)).over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.lit(0),
+    )
+    return df.withColumn(
+        "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
+    )
 
 
 def _build_per_group(df: DataFrame, keys: list[str], build,
@@ -276,8 +433,10 @@ def _build_per_group(df: DataFrame, keys: list[str], build,
     (it satisfies the groupBy's clustering), and AQE leaves a
     repartition with an explicit count alone: export rows are small, so
     byte-sized coalescing would fold the whole Python stage into one
-    task. ``build`` sorts its group, so partition layout never reaches
-    the bytes."""
+    task. On the rotated path it is also what spreads a hot repo's
+    segments over the cluster: the window's repo-only partitioning would
+    satisfy a (repo, _seg) groupBy by itself. ``build`` sorts its group,
+    so partition layout never reaches the bytes."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.repartition(n, *keys).groupBy(*keys)
@@ -285,100 +444,121 @@ def _build_per_group(df: DataFrame, keys: list[str], build,
     )
 
 
+def _write_file(dirpath: str, name: str, blob: bytes) -> dict:
+    """Write ``blob`` as ``dirpath/name`` through a dotted temp file and
+    ``os.replace``; returns its manifest byte_len and file_sha256."""
+    tmp = os.path.join(dirpath, f".{name}.tmp-{os.getpid()}")
+    with open(tmp, "wb") as f:
+        f.write(blob)
+    os.replace(tmp, os.path.join(dirpath, name))
+    return {"byte_len": len(blob), "file_sha256": hashlib.sha256(blob).hexdigest()}
+
+
 def write_binlog_files(
     snapshot: DataFrame, out_dir: str, max_file_bytes: int | None = None
 ) -> DataFrame:
-    """Export a (repo, path, commit, lang, content) snapshot / net-change
-    set as binlog files, one per repo (the reference's per-table compacted
-    output, {type}_{start}_{end}.log — common/inter/constant.go:134-136).
-    Files are written by the EXECUTORS (no driver collect); returns the
-    per-file manifest DataFrame.
+    """Export a (repo, path, commit, lang, content) snapshot as binlog
+    files, one per repo (the reference's per-table compacted output,
+    common/inter/constant.go:134-136). Executors write the files; returns
+    the per-file manifest.
 
-    ``max_file_bytes`` bounds each writer task's materialized group the
-    same way the net-change exporter does: segment assignment by window
-    cumsum of the row size (``row_size_expr`` — pinned to the byte
-    encoder), writer tasks grouped by (repo, segment), file names
+    ``max_file_bytes`` rotates over path order into files
     ``binlog-{repo}.{seg:05d}.log``. Without it (the default, and the
     oracle-checked contract shape) a repo is one transaction in one file
-    — the reference's own per-table shape — and a repo's whole snapshot
-    materializes in one pandas frame, which at lake scale means a hot
-    repo needs the rotation bound.
-
-    Either way the builder stage runs ``defaultParallelism`` tasks, set by
-    ``_build_per_group``'s counted repartition rather than by AQE: AQE
-    sizes partitions by bytes, and a few thousand export rows would
-    coalesce into one Python task.
+    ``binlog-{repo}.log`` and its whole snapshot materializes in one
+    pandas frame, so at lake scale a hot repo needs the rotation bound.
     """
-    from pyspark.sql import Window
-
     os.makedirs(out_dir, exist_ok=True)
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("path")
         repo = pdf["repo"].iloc[0]
         seg = int(pdf["_seg"].iloc[0]) if "_seg" in pdf.columns else None
-        rows = list(
-            zip(pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"],
-                pdf["content"])
-        )
-        if any(r[2] is None or r[4] is None for r in rows):
-            raise ValueError(
-                f"binlog export of {repo}: commit/content must be non-null"
-            )
-        blob = build_binlog_file(rows, repo, xid=1 if seg is None else seg + 1)
-        enc_repo = safe_file_component(repo)
-        name = (
-            f"binlog-{enc_repo}.log"
-            if seg is None
-            else f"binlog-{enc_repo}.{seg:05d}.log"
-        )
-        tmp = os.path.join(out_dir, f".{name}.tmp-{os.getpid()}")
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, os.path.join(out_dir, name))
-        sizes = [
-            1 + 4 + 4 + len(_key_bytes(r, p)) + len(_value_bytes(c, lg, ct))
-            for r, p, c, lg, ct in rows
+        rows = [
+            _snapshot_row(*r)
+            for r in zip(pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"],
+                         pdf["content"])
         ]
-        cum = 0
-        n_chunks = 1 if rows else 0
-        for s in sizes:
-            if cum // BUFFER_SIZE + 1 > n_chunks:
-                n_chunks = cum // BUFFER_SIZE + 1
-            cum += s
-        return pd.DataFrame(
-            [{
-                "repo": repo,
-                "file_name": name,
-                "n_rows": len(rows),
-                "n_chunks": n_chunks,
-                "byte_len": len(blob),
-                "file_sha256": hashlib.sha256(blob).hexdigest(),
-            }]
-        )
+        blob, n_chunks = _frame(_SNAPSHOT, repo, rows,
+                                1 if seg is None else seg + 1, f"{repo}.next")
+        enc_repo = safe_file_component(repo)
+        name = (f"binlog-{enc_repo}.log" if seg is None
+                else f"binlog-{enc_repo}.{seg:05d}.log")
+        return pd.DataFrame([{
+            "repo": repo, "file_name": name, "n_rows": len(rows),
+            "n_chunks": n_chunks, **_write_file(out_dir, name, blob),
+        }])
 
     df = snapshot.select("repo", "path", "commit", "lang", "content")
     keys = ["repo"]
     if max_file_bytes is not None:
-        w = Window.partitionBy("repo").orderBy("path")
-        sz = row_size_expr(
-            F.col("repo"), F.col("path"), F.col("commit"), F.col("lang"),
-            F.col("content"),
-        )
-        cum_before = F.coalesce(
-            F.sum(sz).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        df = df.withColumn(
-            "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
-        )
+        df = _with_segments(df, _SNAPSHOT, ["path"], max_file_bytes)
         keys = ["repo", "_seg"]
     return _build_per_group(df, keys, build, FILE_MANIFEST_SCHEMA)
 
 
-# ---------------------------------------------------------------------------
-# parser
-# ---------------------------------------------------------------------------
+def write_netchange_binlog_files(
+    changes: DataFrame,
+    out_dir: str,
+    max_file_bytes: int | None = None,
+    compress: bool = False,
+) -> DataFrame:
+    """Export a net-change set (``LakeTable.diff(v0, v1,
+    keep_lineage=True)``: repo, path, diff_op, seq, old_content,
+    new_content, new_commit) as binlog files
+    ``out_dir/<safe repo>/chg_{start}_{end}.log[.z]`` (the reference's
+    naming, common/inter/constant.go:82,134-139); start/end are SEQ
+    bounds. ``max_file_bytes`` rotates over (seq, path) order, each
+    segment a complete file whose ROTATE names the next segment's prefix
+    (NextPrefix, constant.go:137-139); ``None`` keeps one file per repo.
+    ``compress`` writes whole-stream zlib ``.log.z`` (cfs.go:62-68).
+    Executors write the files; returns the per-file manifest.
+    """
+    os.makedirs(out_dir, exist_ok=True)
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["seq", "path"])
+        # Arrow->pandas can surface SQL NULLs as NaN; normalize to None so
+        # the per-op image check sees real nulls
+        pdf = pdf.astype(object).where(pd.notnull(pdf), None)
+        repo = pdf["repo"].iloc[0]
+        seg, last_seg = int(pdf["_seg"].iloc[0]), int(pdf["_max_seg"].iloc[0])
+        rows = [
+            _netchange_row(repo, *r)
+            for r in zip(pdf["path"], pdf["diff_op"], pdf["old_content"],
+                         pdf["new_content"], pdf["new_commit"])
+        ]
+        start, end = int(pdf["seq"].iloc[0]), int(pdf["seq"].iloc[-1])
+        nxt = f"{NETCHANGE_KIND}_{end:010d}" if seg < last_seg else ""
+        blob = _frame(_NETCHANGE, repo, rows, 3 * seg + 1, nxt)[0]
+        name = f"{NETCHANGE_KIND}_{start:010d}_{end:010d}.log"
+        if compress:
+            blob = zlib.compress(blob, 6)
+            name += ".z"
+        enc_repo = safe_file_component(repo)
+        os.makedirs(os.path.join(out_dir, enc_repo), exist_ok=True)
+        ops = [op for op, _ in rows]
+        return pd.DataFrame([{
+            "repo": repo, "file_name": f"{enc_repo}/{name}", "n_rows": len(rows),
+            "n_inserts": ops.count("I"), "n_deletes": ops.count("D"),
+            "n_updates": ops.count("U"), "start_seq": start, "end_seq": end,
+            "compressed": compress,
+            **_write_file(os.path.join(out_dir, enc_repo), name, blob),
+        }])
+
+    df = changes.select("repo", "path", "diff_op", "seq", "old_content",
+                        "new_content", "new_commit")
+    if max_file_bytes is None:
+        df = df.withColumn("_seg", F.lit(0)).withColumn("_max_seg", F.lit(0))
+        keys = ["repo"]
+    else:
+        df = _with_segments(df, _NETCHANGE, ["seq", "path"], max_file_bytes)
+        df = df.withColumn("_max_seg", F.max("_seg").over(Window.partitionBy("repo")))
+        keys = ["repo", "_seg"]
+    return _build_per_group(df, keys, build, NETCHANGE_MANIFEST_SCHEMA)
+
+
+# -- parser and reader -------------------------------------------------------
 
 
 def iter_binlog_events(blob: bytes):
@@ -413,463 +593,17 @@ def iter_binlog_events(blob: bytes):
         pos += size
 
 
-def parse_binlog_bytes(blob: bytes) -> list[dict]:
-    """Decode one binlog file -> row dicts (repo, path, commit, lang,
-    content, chunk_idx, xid). Verifies the magic, every event's CRC32 and
-    size bookkeeping, and the chunk flag protocol; malformed input fails
-    loudly (never returns partial rows silently)."""
+def _parse(blob: bytes, layout: _Layout) -> list[dict]:
+    """Decode one binlog file of ``layout`` -> row dicts with chunk_idx
+    (per transaction) and xid. Beyond ``iter_binlog_events``' checks it
+    verifies the FDE version, each rows event's column count and bitmaps,
+    the STMT_END -> XID protocol and the ROTATE trailer, so a truncated
+    or malformed file fails loudly instead of parsing as a subset."""
     rows: list[dict] = []
     pending: list[dict] = []
-    chunk_idx = 0
+    chunk_idx, etype = 0, None
     saw_fde = saw_stmt_end = False
-    xid = None
-    for etype, _raw, body, pos in iter_binlog_events(blob):
-        if etype == FORMAT_DESCRIPTION_EVENT:
-            if struct.unpack("<H", body[:2])[0] != 4:
-                raise ValueError("unsupported binlog version")
-            saw_fde = True
-        elif etype == WRITE_ROWS_EVENT_V2:
-            if not saw_fde:
-                raise ValueError("rows event before FORMAT_DESCRIPTION")
-            off = 6 + 2 + 2 + 1 + 1  # table_id, flags, extra, ncols, bitmap
-            rflags = struct.unpack("<H", body[6:8])[0]
-            while off < len(body):
-                off += 1  # null bitmap byte
-                (klen,) = struct.unpack("<I", body[off:off + 4])
-                key = body[off + 4:off + 4 + klen]
-                off += 4 + klen
-                (vlen,) = struct.unpack("<I", body[off:off + 4])
-                val = body[off + 4:off + 4 + vlen]
-                off += 4 + vlen
-                repo_b, path_b = key.split(b"\x00", 1)
-                commit_b, rest = val.split(b"\x00", 1)
-                if rest[:1] == b"\x00":  # lang-null marker
-                    lang, content_b = None, rest[2:]
-                else:  # \x01 + lang + \x00 + content
-                    lang_b, content_b = rest[1:].split(b"\x00", 1)
-                    lang = lang_b.decode()
-                pending.append(
-                    {
-                        "repo": repo_b.decode(),
-                        "path": path_b.decode(),
-                        "commit": commit_b.decode(),
-                        "lang": lang,
-                        "content": content_b.decode(),
-                        "chunk_idx": chunk_idx,
-                        "xid": -1,
-                    }
-                )
-            chunk_idx += 1
-            if rflags & STMT_END_F:
-                saw_stmt_end = True
-        elif etype == XID_EVENT:
-            if not saw_stmt_end and pending:
-                raise ValueError("XID before the STMT_END rows chunk")
-            (xid,) = struct.unpack("<Q", body[:8])
-            for r in pending:
-                r["xid"] = xid
-            rows.extend(pending)
-            pending = []
-    if pending:
-        raise ValueError("rows chunks with no committing XID event")
-    return rows
-
-
-def read_binlog_files(spark, path: str) -> DataFrame:
-    """Distributed parse of a binlog-file directory back into rows — the
-    roundtrip proof that the framing is real (decode own output ->
-    collapse -> equals the snapshot it was built from)."""
-    # pathGlobFilter (not a glob IN the path): loading a glob path makes
-    # Spark's FileStreamSink.hasMetadata stat the glob string as a literal
-    # file, which logs a benign-but-alarming FileNotFoundException stack
-    # at WARN on every read (the unexplained trace in round-4's bench
-    # tail). Stat'ing the real directory keeps the probe silent.
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "binlog-*.log")
-        .load(path)
-        .select("content")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PARSED_ROW_SCHEMA.fields]
-        for pdf in batches:
-            recs: list[dict] = []
-            for blob in pdf["content"]:
-                recs.extend(parse_binlog_bytes(bytes(blob)))
-            yield (
-                pd.DataFrame(recs, columns=cols)
-                if recs
-                else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-            )
-
-    return files.mapInPandas(run, schema=PARSED_ROW_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# NET-CHANGE export: DELETE_ROWS / UPDATE_ROWS v2 framing of diff() output
-# ---------------------------------------------------------------------------
-#
-# The snapshot export above frames inserts only. The reference's restitute
-# path writes the NET-CHANGE stream in three per-op-type passes — all
-# WriteRows, then all DeleteRows, then all UpdateRows, each pass under its
-# own TABLE_MAP so the map event is not repeated per row
-# (backup/binlog/repl.go:770-800 `dumpBinlog`/`have`) — into files named
-# {type}_{start:010d}_{end:010d}.log (common/inter/constant.go:82,134-136),
-# optionally zlib-compressed whole-stream (common/client/cfs.go:62-68), and
-# later folded into rolling {type}_{start}_{end}.tar consolidation archives
-# (cfs.go:84-171). This section is the byte-level analog over
-# ``LakeTable.diff(..., keep_lineage=True)`` output; start/end are SEQ
-# bounds (the engine's GTID-like monotone sequence — the reference uses
-# flush timestamps, its per-granularity analog of the same monotone axis).
-#
-# Net-change table layout (one TABLE_MAP per pass): THREE blob columns
-# ``(key, commit, content)``, meta=4. Row images use minimal
-# columns-present bitmaps, exactly binlog-v2's partial-row-image protocol:
-#
-#   WRITE_ROWS  (I): after image,  bitmap 0b111  -> key, new_commit, new_content
-#   DELETE_ROWS (D): before image, bitmap 0b101  -> key, old_content
-#   UPDATE_ROWS (U): before 0b101 (key, old_content)
-#                    + after 0b111 (key, new_commit, new_content)
-#
-# so a parse of the engine's own export reconstructs the full diff row set
-# including old images — the roundtrip contract query shares the
-# cdc_version_diff oracle verbatim.
-
-NETCHANGE_KIND = "chg"
-_BM_KEY_CONTENT = 0b101  # key + content present
-_BM_ALL = 0b111          # key + commit + content
-
-NETCHANGE_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("file_name", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_inserts", T.LongType(), False),
-        T.StructField("n_deletes", T.LongType(), False),
-        T.StructField("n_updates", T.LongType(), False),
-        T.StructField("start_seq", T.LongType(), False),
-        T.StructField("end_seq", T.LongType(), False),
-        T.StructField("byte_len", T.LongType(), False),
-        T.StructField("compressed", T.BooleanType(), False),
-        T.StructField("file_sha256", T.StringType(), False),
-    ]
-)
-
-NETCHANGE_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("diff_op", T.StringType(), False),
-        T.StructField("old_content", T.StringType(), True),
-        T.StructField("new_content", T.StringType(), True),
-        T.StructField("new_commit", T.StringType(), True),
-        T.StructField("chunk_idx", T.LongType(), False),
-        T.StructField("xid", T.LongType(), False),
-    ]
-)
-
-#: pass order mirrors the reference's dumpBinlog: inserts, deletes, updates
-_NC_PASSES = (
-    ("I", WRITE_ROWS_EVENT_V2),
-    ("D", DELETE_ROWS_EVENT_V2),
-    ("U", UPDATE_ROWS_EVENT_V2),
-)
-
-
-def _nc_table_map_body(schema: bytes, table: bytes) -> bytes:
-    """TABLE_MAP for the 3-column net-change layout (key, commit,
-    content) — BLOBs with 4-byte length prefixes, nothing nullable."""
-    return (
-        TABLE_ID.to_bytes(6, "little")
-        + struct.pack("<H", 0)
-        + bytes([len(schema)]) + schema + b"\x00"
-        + bytes([len(table)]) + table + b"\x00"
-        + b"\x03"                    # column count
-        + bytes([252, 252, 252])     # MYSQL_TYPE_BLOB x3
-        + b"\x03" + bytes([4, 4, 4])  # metadata: 4-byte blob length prefix
-        + b"\x00"                    # null bitmap: none nullable
-    )
-
-
-def _nc_image(bitmap: int, key: bytes, commit: bytes | None,
-              content: bytes) -> bytes:
-    """One row image under a columns-present bitmap. The per-image null
-    bitmap covers present columns only (all non-null here -> 0x00)."""
-    out = bytearray(b"\x00")
-    for bit, val in ((1, key), (2, commit), (4, content)):
-        if bitmap & bit:
-            assert val is not None
-            out.extend(struct.pack("<I", len(val)) + val)
-    return bytes(out)
-
-
-def _nc_encode_row(op: str, key: bytes, old_content: str | None,
-                   new_content: str | None, new_commit: str | None) -> bytes:
-    if op == "I":
-        return _nc_image(_BM_ALL, key, new_commit.encode(), new_content.encode())
-    if op == "D":
-        return _nc_image(_BM_KEY_CONTENT, key, None, old_content.encode())
-    return _nc_image(_BM_KEY_CONTENT, key, None, old_content.encode()) + _nc_image(
-        _BM_ALL, key, new_commit.encode(), new_content.encode()
-    )
-
-
-def _nc_rows_body(etype: int, rows_payload: bytes, flags: int) -> bytes:
-    """ROWS v2 body for the net-change layout; UPDATE carries the second
-    (after-image) columns-present bitmap."""
-    head = (
-        TABLE_ID.to_bytes(6, "little")
-        + struct.pack("<H", flags)
-        + struct.pack("<H", 2)
-        + b"\x03"
-    )
-    if etype == WRITE_ROWS_EVENT_V2:
-        head += bytes([_BM_ALL])
-    elif etype == DELETE_ROWS_EVENT_V2:
-        head += bytes([_BM_KEY_CONTENT])
-    else:
-        head += bytes([_BM_KEY_CONTENT, _BM_ALL])
-    return head + rows_payload
-
-
-def _nc_validate(op: str, old_content, new_content, new_commit,
-                 repo: str, path: str) -> None:
-    need = {
-        "I": (new_content is not None and new_commit is not None),
-        "D": (old_content is not None),
-        "U": (
-            old_content is not None
-            and new_content is not None
-            and new_commit is not None
-        ),
-    }.get(op)
-    if need is None:
-        raise ValueError(f"netchange export: unknown diff_op {op!r} for "
-                         f"({repo!r}, {path!r})")
-    if not need:
-        raise ValueError(
-            f"netchange export: {op} row for ({repo!r}, {path!r}) is "
-            "missing its required image columns"
-        )
-
-
-def build_netchange_file(
-    rows: list[tuple[str, str, str, str | None, str | None, str | None]],
-    repo: str,
-    start_xid: int = 1,
-    next_name: str = "",
-) -> bytes:
-    """Frame one rotation segment's net-change rows as a complete binlog
-    file: magic, FDE, then one BEGIN / TABLE_MAP / <=8KB-chunked rows
-    events / XID transaction PER op-type pass present (I, D, U — the
-    reference's three-pass restitute), ROTATE trailer naming the next
-    segment. ``rows`` = (path, op, old_content, new_content, new_commit)
-    tuples, already (seq, path)-ordered. Pure function of its inputs."""
-    out = bytearray(BINLOG_MAGIC)
-    pos = len(out)
-
-    def emit(etype: int, body: bytes, flags: int = 0) -> None:
-        nonlocal pos
-        ev = _event(etype, body, pos, flags=flags)
-        out.extend(ev)
-        pos += len(ev)
-
-    emit(FORMAT_DESCRIPTION_EVENT, _fde_body())
-    known = {op for op, _ in _NC_PASSES}
-    stray = sorted({r[1] for r in rows} - known)
-    if stray:
-        raise ValueError(
-            f"netchange export: unknown diff_op {stray[0]!r} for repo {repo!r}"
-        )
-    xid = start_xid
-    for op, etype in _NC_PASSES:
-        pass_rows = [r for r in rows if r[1] == op]
-        if not pass_rows:
-            continue
-        emit(QUERY_EVENT, _query_body(repo.encode(), b"BEGIN"))
-        emit(TABLE_MAP_EVENT, _nc_table_map_body(repo.encode(), b"changes"))
-        chunks: list[bytearray] = [bytearray()]
-        cum = 0
-        for path, _op, old_c, new_c, new_cm in pass_rows:
-            _nc_validate(op, old_c, new_c, new_cm, repo, path)
-            enc = _nc_encode_row(op, _key_bytes(repo, path), old_c, new_c, new_cm)
-            idx = cum // BUFFER_SIZE
-            while idx >= len(chunks):
-                chunks.append(bytearray())
-            chunks[idx].extend(enc)
-            cum += len(enc)
-        for i, ch in enumerate(chunks):
-            flags = STMT_END_F if i == len(chunks) - 1 else 0
-            emit(etype, _nc_rows_body(etype, bytes(ch), flags))
-        emit(XID_EVENT, struct.pack("<Q", xid))
-        xid += 1
-    emit(ROTATE_EVENT, struct.pack("<Q", pos) + next_name.encode())
-    return bytes(out)
-
-
-def _nc_row_size(op: str, key: bytes, old_c, new_c, new_cm) -> int:
-    """Encoded byte size of one row entry (U = before + after images) —
-    used by the rotation planner without materializing the bytes twice."""
-    img = lambda *vals: 1 + sum(4 + len(v) for v in vals)  # noqa: E731
-    if op == "I":
-        return img(key, new_cm.encode(), new_c.encode())
-    if op == "D":
-        return img(key, old_c.encode())
-    return img(key, old_c.encode()) + img(key, new_cm.encode(), new_c.encode())
-
-
-def nc_row_size_expr():
-    """``_nc_row_size`` as a Spark expression over the diff columns —
-    kept next to the byte encoder so the two can never drift (a parity
-    test pins them). Drives the DISTRIBUTED rotation assignment: segment
-    = floor(cum_bytes_before_row / max_file_bytes) via a window cumsum,
-    the same accumulate rule as the 8KB chunks."""
-    key_len = F.octet_length("repo") + 1 + F.octet_length("path")
-    img = lambda *lens: 1 + sum(4 + ln for ln in lens)  # noqa: E731
-    after = img(key_len, F.octet_length("new_commit"),
-                F.octet_length("new_content"))
-    before = img(key_len, F.octet_length("old_content"))
-    return (
-        F.when(F.col("diff_op") == "I", after)
-        .when(F.col("diff_op") == "D", before)
-        .otherwise(before + after)
-    ).cast("long")
-
-
-def write_netchange_binlog_files(
-    changes: DataFrame,
-    out_dir: str,
-    max_file_bytes: int | None = None,
-    compress: bool = False,
-) -> DataFrame:
-    """Export a net-change set (``LakeTable.diff(v0, v1,
-    keep_lineage=True)`` — columns repo, path, diff_op, seq, old_content,
-    new_content, new_commit) as binlog files under
-    ``out_dir/<repo>/chg_{start}_{end}.log[.z]``:
-
-    - per-repo output directory (encoded via ``safe_file_component``);
-    - size-based ROTATION, assigned DISTRIBUTED: a window cumsum of the
-      encoded row size over (seq, path) order puts each row in segment
-      ``floor(cum_bytes_before_row / max_file_bytes)`` — the same
-      accumulate rule as the 8KB chunks (a segment may overshoot by at
-      most one row) — and the writer tasks group by (repo, segment).
-      This bounds EVERY writer task's materialized group to
-      ~max_file_bytes and spreads a hot repo's segments across the
-      cluster: the one-task-per-repo shape would buffer a
-      90%-of-the-changefeed repo in a single executor's pandas frame.
-      (The window sort itself spills through Spark's sorter; it is the
-      pandas group materialization that must stay bounded.) Each segment
-      is a complete self-describing binlog file whose ROTATE event names
-      the next segment's prefix (the reference's NextPrefix,
-      common/inter/constant.go:137-139). ``max_file_bytes=None`` keeps
-      one file (one group) per repo.
-    - optional whole-stream zlib (``.log.z`` — common/client/cfs.go:62-68).
-
-    Files are written ON THE EXECUTORS; the return value is the small
-    per-file manifest with start/end seqs. The builder stage runs
-    ``defaultParallelism`` tasks, set by ``_build_per_group``'s counted
-    repartition rather than by AQE, whose byte-sized coalescing would
-    put a few thousand diff rows through one Python task.
-    """
-    from pyspark.sql import Window
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["seq", "path"])
-        # Arrow->pandas can surface SQL NULLs as NaN; normalize to None so
-        # the per-op image validation sees real nulls
-        pdf = pdf.astype(object).where(pd.notnull(pdf), None)
-        repo = pdf["repo"].iloc[0]
-        seg = int(pdf["_seg"].iloc[0])
-        last_seg = int(pdf["_max_seg"].iloc[0])
-        rows = list(
-            zip(pdf["path"], pdf["diff_op"], pdf["old_content"],
-                pdf["new_content"], pdf["new_commit"])
-        )
-        start, end = int(pdf["seq"].iloc[0]), int(pdf["seq"].iloc[-1])
-        nxt = f"{NETCHANGE_KIND}_{end:010d}" if seg < last_seg else ""
-        blob = build_netchange_file(
-            rows, repo, start_xid=3 * seg + 1, next_name=nxt
-        )
-        name = f"{NETCHANGE_KIND}_{start:010d}_{end:010d}.log"
-        if compress:
-            blob = zlib.compress(blob, 6)
-            name += ".z"
-        rdir = os.path.join(out_dir, safe_file_component(repo))
-        os.makedirs(rdir, exist_ok=True)
-        tmp = os.path.join(rdir, f".{name}.tmp-{os.getpid()}")
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, os.path.join(rdir, name))
-        ops = [r[1] for r in rows]
-        return pd.DataFrame(
-            [{
-                "repo": repo,
-                "file_name": f"{safe_file_component(repo)}/{name}",
-                "n_rows": len(rows),
-                "n_inserts": ops.count("I"),
-                "n_deletes": ops.count("D"),
-                "n_updates": ops.count("U"),
-                "start_seq": start,
-                "end_seq": end,
-                "byte_len": len(blob),
-                "compressed": compress,
-                "file_sha256": hashlib.sha256(blob).hexdigest(),
-            }],
-            columns=[f.name for f in NETCHANGE_MANIFEST_SCHEMA.fields],
-        )
-
-    cols = ["repo", "path", "diff_op", "seq", "old_content", "new_content",
-            "new_commit"]
-    df = changes.select(*cols)
-    if max_file_bytes is None:
-        df = df.withColumn("_seg", F.lit(0)).withColumn("_max_seg", F.lit(0))
-        keys = ["repo"]
-    else:
-        w = Window.partitionBy("repo").orderBy("seq", "path")
-        cum_before = F.coalesce(
-            F.sum(nc_row_size_expr()).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        )
-        df = df.withColumn(
-            "_seg", F.floor(cum_before / F.lit(max_file_bytes)).cast("long")
-        ).withColumn("_max_seg", F.max("_seg").over(Window.partitionBy("repo")))
-        # explicit (repo, seg) repartition: the groupBy's requirement is
-        # already satisfied by the window's repo-only partitioning (subset
-        # rule), which would keep ALL of a hot repo's segments serialized
-        # through one task — the second exchange is deliberate, it buys
-        # cross-executor parallelism for the dominant repo's segments
-        keys = ["repo", "_seg"]
-    return _build_per_group(df, keys, build, NETCHANGE_MANIFEST_SCHEMA)
-
-
-def parse_netchange_bytes(blob: bytes) -> list[dict]:
-    """Decode one net-change binlog file -> row dicts (repo, path,
-    diff_op, old_content, new_content, new_commit, chunk_idx, xid).
-    Accepts whole-stream zlib transparently. Verifies magic, sizes,
-    every CRC32, and the per-pass BEGIN/TABLE_MAP/rows/XID protocol;
-    malformed input fails loudly."""
-    rows: list[dict] = []
-    pending: list[dict] = []
-    chunk_idx = 0
-    saw_fde = saw_stmt_end = False
-    op_of = {WRITE_ROWS_EVENT_V2: "I", DELETE_ROWS_EVENT_V2: "D",
-             UPDATE_ROWS_EVENT_V2: "U"}
-
-    def _read_image(body: bytes, off: int, bitmap: int):
-        off += 1  # null bitmap byte (nothing null in this layout)
-        vals: dict[int, bytes] = {}
-        for bit in (1, 2, 4):
-            if bitmap & bit:
-                (ln,) = struct.unpack("<I", body[off:off + 4])
-                vals[bit] = body[off + 4:off + 4 + ln]
-                off += 4 + ln
-        return vals, off
-
+    op_of = {et: op for op, (et, _images) in layout.passes.items()}
     for etype, _raw, body, pos in iter_binlog_events(blob):
         if etype == FORMAT_DESCRIPTION_EVENT:
             if struct.unpack("<H", body[:2])[0] != 4:
@@ -879,43 +613,27 @@ def parse_netchange_bytes(blob: bytes) -> list[dict]:
             if not saw_fde:
                 raise ValueError("rows event before FORMAT_DESCRIPTION")
             op = op_of[etype]
-            rflags = struct.unpack("<H", body[6:8])[0]
-            off = 6 + 2 + 2 + 1  # table_id, flags, extra, ncols
-            bm1 = body[off]
-            off += 1
-            bm2 = None
-            if etype == UPDATE_ROWS_EVENT_V2:
-                bm2 = body[off]
-                off += 1
+            images = layout.passes[op][1]
+            head = bytes([layout.ncols] + [_bitmap(img) for img in images])
+            off = 10 + len(head)  # table_id, flags, extra, ncols, bitmaps
+            if body[10:off] != head:
+                raise ValueError(f"rows event at byte {pos} does not match "
+                                 f"the {layout.table.decode()} layout")
             while off < len(body):
-                before, off = _read_image(body, off, bm1)
-                after = None
-                if bm2 is not None:
-                    after, off = _read_image(body, off, bm2)
-                img = after if after is not None else before
-                repo_b, path_b = img[1].split(b"\x00", 1)
-                rec = {
-                    "repo": repo_b.decode(),
-                    "path": path_b.decode(),
-                    "diff_op": op,
-                    "old_content": None,
-                    "new_content": None,
-                    "new_commit": None,
-                    "chunk_idx": chunk_idx,
-                    "xid": -1,
-                }
-                if op == "I":
-                    rec["new_commit"] = before[2].decode()
-                    rec["new_content"] = before[4].decode()
-                elif op == "D":
-                    rec["old_content"] = before[4].decode()
-                else:
-                    rec["old_content"] = before[4].decode()
-                    rec["new_commit"] = after[2].decode()
-                    rec["new_content"] = after[4].decode()
-                pending.append(rec)
+                fields = {}
+                for image in images:
+                    off += 1  # null bitmap byte (nothing null in a layout)
+                    for f in filter(None, image):
+                        (n,) = struct.unpack_from("<I", body, off)
+                        fields[f] = body[off + 4:off + 4 + n]
+                        off += 4 + n
+                pending.append(
+                    {**layout.decode(op, fields), "chunk_idx": chunk_idx, "xid": -1}
+                )
+            if off != len(body):
+                raise ValueError(f"row image overruns the rows event at byte {pos}")
             chunk_idx += 1
-            if rflags & STMT_END_F:
+            if struct.unpack("<H", body[6:8])[0] & STMT_END_F:
                 saw_stmt_end = True
         elif etype == XID_EVENT:
             if not saw_stmt_end and pending:
@@ -924,52 +642,92 @@ def parse_netchange_bytes(blob: bytes) -> list[dict]:
             for r in pending:
                 r["xid"] = xid
             rows.extend(pending)
-            pending = []
-            chunk_idx = 0  # chunk index restarts per transaction/pass
-            saw_stmt_end = False
+            pending, chunk_idx, saw_stmt_end = [], 0, False
     if pending:
         raise ValueError("rows chunks with no committing XID event")
+    if etype != ROTATE_EVENT:
+        raise ValueError("truncated binlog file: it does not end with ROTATE")
     return rows
+
+
+def parse_binlog_bytes(blob: bytes) -> list[dict]:
+    """Decode one snapshot binlog file -> row dicts (repo, path, commit,
+    lang, content, chunk_idx, xid); malformed input fails loudly."""
+    return _parse(blob, _SNAPSHOT)
+
+
+def parse_netchange_bytes(blob: bytes) -> list[dict]:
+    """Decode one net-change binlog file (plain or whole-stream zlib) ->
+    row dicts (repo, path, diff_op, old_content, new_content, new_commit,
+    chunk_idx, xid); malformed input fails loudly."""
+    return _parse(blob, _NETCHANGE)
+
+
+def _binlog_paths(path: str) -> list[str]:
+    """Every binlog file under ``path`` in apply order: a sorted recursive
+    walk keeping ``.log``, ``.log.z`` and ``.tar`` names and skipping
+    dotfiles (a crashed writer's temp file is never output). Zero-padded
+    seqs make name order seq order."""
+    return [
+        os.path.join(root, n)
+        for root, _dirs, names in sorted(os.walk(path))
+        for n in sorted(names)
+        if not n.startswith(".") and n.endswith((".log", ".log.z", ".tar"))
+    ]
+
+
+def _binlog_blobs(path: str) -> Iterator[bytes]:
+    """The binlog streams in one listed file: a ``.tar``'s file members
+    in name order, or the file itself."""
+    if not path.endswith(".tar"):
+        with open(path, "rb") as f:
+            yield f.read()
+        return
+    with tarfile.open(path) as tf:
+        for member in sorted(tf.getmembers(), key=lambda m: m.name):
+            if member.isfile():
+                yield tf.extractfile(member).read()
+
+
+def _read(spark, path: str, layout: _Layout) -> DataFrame:
+    """Distributed parse of a binlog tree: the driver lists it, and the
+    executors parse from a local relation of paths — no file-source
+    listing job, however many repo directories the tree holds."""
+    import pyarrow as pa
+
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"no binlog directory at {path!r}")
+    paths = spark.createDataFrame(
+        pa.table({"path": pa.array(_binlog_paths(path), pa.string())}),
+        schema="path string",
+    )
+    cols = layout.schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            recs = [
+                r for p in pdf["path"] for blob in _binlog_blobs(p)
+                for r in _parse(blob, layout)
+            ]
+            yield pd.DataFrame(recs, columns=cols)
+
+    return paths.mapInPandas(run, schema=layout.schema)
+
+
+def read_binlog_files(spark, path: str) -> DataFrame:
+    """Distributed parse of a snapshot binlog-file directory back into
+    rows — the roundtrip proof that the framing is real."""
+    return _read(spark, path, _SNAPSHOT)
 
 
 def read_netchange_binlog_files(spark, out_dir: str) -> DataFrame:
     """Distributed parse of a net-change export tree (including rotated
     segments, ``.z`` zlib files and ``.tar`` consolidation archives) back
     into diff rows — the roundtrip proof for the D/U framing."""
-    import io as _io
-    import tarfile
+    return _read(spark, out_dir, _NETCHANGE)
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", f"{NETCHANGE_KIND}_*")
-        .load(out_dir)
-        .select("path", "content")
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in NETCHANGE_ROW_SCHEMA.fields]
-        for pdf in batches:
-            recs: list[dict] = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                blob = bytes(blob)
-                if path.endswith(".tar"):
-                    with tarfile.open(fileobj=_io.BytesIO(blob)) as tf:
-                        for member in tf.getmembers():
-                            if not member.isfile():
-                                continue
-                            recs.extend(
-                                parse_netchange_bytes(tf.extractfile(member).read())
-                            )
-                else:
-                    recs.extend(parse_netchange_bytes(blob))
-            yield (
-                pd.DataFrame(recs, columns=cols)
-                if recs
-                else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-            )
-
-    return files.mapInPandas(run, schema=NETCHANGE_ROW_SCHEMA)
+# -- tar consolidation -------------------------------------------------------
 
 
 def _segment_seqs(name: str) -> tuple[int, int]:
@@ -981,30 +739,22 @@ def _segment_seqs(name: str) -> tuple[int, int]:
 def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
     """Fold each repo's rotated segment files into ONE rolling
     ``chg_{min}_{max}.tar`` archive and remove the originals — the
-    reference's per-day tar consolidation (common/client/cfs.go:84-171,
-    DstTarFileName constant.go:141-143): many small rotation segments
-    become one sequentially-readable archive while staying parseable
-    (``read_netchange_binlog_files`` opens tar members transparently).
+    reference's tar consolidation (common/client/cfs.go:84-171,
+    constant.go:141-143). The readers and the applier open tar members
+    in name order, which zero-padded seqs make seq order.
 
     Rolling re-fold: a directory with loose segments gets one new archive
     holding those segments AND the members of its existing ``chg_*.tar``
-    files, deduplicated and sorted by name — zero-padded seqs make name
-    order seq order, which ``apply_binlog_dir`` relies on. Order on disk:
-    temp tar, ``os.replace``, remove the old tars, remove the segments;
-    a crash anywhere leaves the segments in place, so a rerun folds again
-    and converges to one tar. A directory with no loose segments is left
-    alone.
+    files, deduplicated. Order on disk: temp tar, ``os.replace``, remove
+    the old tars, remove the segments; a crash anywhere leaves the
+    segments in place, so a rerun folds again and converges to one tar.
+    A directory with no loose segments is left alone.
 
-    The fold is file-level work with no Spark job: it runs on a driver
-    thread pool of ``defaultParallelism`` threads, one repo directory per
-    call (the driver already lists ``out_dir``, and the writer creates
-    it there). Tar members are written with zeroed metadata so archive
-    bytes are a pure function of the member contents. The call is EAGER;
-    the returned per-archive manifest (one row per folded directory) is
-    a local relation built from an Arrow table, so collecting it runs no
-    job either."""
-    import io as _io
-    import tarfile
+    The fold runs EAGERLY on a driver thread pool of
+    ``defaultParallelism`` threads, one repo directory per call, with no
+    Spark job. Members carry zeroed metadata, so archive bytes are a pure
+    function of the member contents. The per-archive manifest is a local
+    relation built from an Arrow table: collecting it runs no job."""
     from concurrent.futures import ThreadPoolExecutor
     from contextlib import ExitStack
     from pathlib import Path
@@ -1046,7 +796,7 @@ def consolidate_netchange_exports(spark, out_dir: str) -> DataFrame:
                     info = tarfile.TarInfo(name=n)
                     info.size = len(data)
                     info.mtime = 0  # deterministic archive bytes
-                    out.addfile(info, _io.BytesIO(data))
+                    out.addfile(info, io.BytesIO(data))
         os.replace(tmp, os.path.join(rdir, tar_name))
         for n in old_tars:
             if n != tar_name:

@@ -42,6 +42,8 @@ from mysql_binlog_spark.sinks.binlog_file import (
     UPDATE_ROWS_EVENT_V2,
     WRITE_ROWS_EVENT_V2,
     XID_EVENT,
+    _binlog_blobs,
+    _binlog_paths,
     iter_binlog_events,
 )
 
@@ -197,32 +199,16 @@ def apply_binlog_dir(
     path: str,
     max_allowed_packet: int = 4 * 1024 * 1024,
 ) -> ApplyReport:
-    """Apply every binlog file under ``path`` (recursively; ``.log``,
-    ``.log.z`` and consolidated ``.tar`` archives, whose members apply in
-    name order) — rotation segments sort by their start seq by
-    construction, matching the reference's end-ts file ordering
-    (SURVEY §2.5 O3)."""
-    import os
-    import tarfile
-
+    """Apply every binlog file under ``path`` in ``_binlog_paths``
+    order (recursive; ``.log``, ``.log.z`` and consolidated ``.tar``
+    archives, whose members apply in name order) — rotation segments sort
+    by their start seq by construction, matching the reference's end-ts
+    file ordering (SURVEY §2.5 O3)."""
     applier = BinlogSqlApplier(connection_factory, max_allowed_packet)
     try:
-        for root, _dirs, names in sorted(os.walk(path)):
-            for n in sorted(names):
-                if n.startswith("."):
-                    continue  # a crashed writer's temp file, never output
-                full = os.path.join(root, n)
-                if n.endswith(".tar"):
-                    with tarfile.open(full) as tf:
-                        for member in sorted(
-                            tf.getmembers(), key=lambda m: m.name
-                        ):
-                            if member.isfile():
-                                applier.apply_bytes(
-                                    tf.extractfile(member).read()
-                                )
-                elif n.endswith((".log", ".log.z")):
-                    applier.apply_file(full)
+        for f in _binlog_paths(path):
+            for blob in _binlog_blobs(f):
+                applier.apply_bytes(blob)
     finally:
         applier.close()
     return applier.report

@@ -125,8 +125,8 @@ def test_roundtrip_preserves_rows_and_null_lang():
 
 
 def test_distributed_write_and_parse_roundtrip(spark, tmp_path):
-    """Executor-side file write (applyInPandas per repo) -> binaryFile
-    scan -> mapInPandas parse == the snapshot it was built from."""
+    """Executor-side file write (applyInPandas per repo) -> driver
+    listing -> mapInPandas parse == the snapshot it was built from."""
     rows = [
         (f"r{i % 3}", f"p{i:03d}", f"c{i}", None if i % 5 == 0 else "py",
          f"content-{i}" * 20)

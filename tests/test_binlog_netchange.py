@@ -246,36 +246,40 @@ def test_diff_export_roundtrip_equals_diff(spark, tmp_path):
     assert want[("r1", "b")][0] == "D" and want[("r1", "b")][1] == "v2"
 
 
-def test_rotation_size_expr_matches_python_encoder(spark):
-    """The distributed rotation assignment uses nc_row_size_expr; the
-    byte encoder uses _nc_row_size. Pin them together so the segment
-    rule can never drift from the actual encoded bytes."""
-    from mysql_binlog_spark.sinks.binlog_file import (
-        _key_bytes,
-        _nc_encode_row,
-        _nc_row_size,
-        nc_row_size_expr,
-    )
+@pytest.mark.parametrize("layout_name", ["snapshot", "netchange"])
+def test_rotation_size_expr_matches_python_encoder(spark, layout_name):
+    """The distributed rotation assignment sizes rows with _size_expr;
+    the byte encoder is _encode_row. Pin them together, per layout, so
+    the segment rule can never drift from the actual encoded bytes."""
+    import mysql_binlog_spark.sinks.binlog_file as blf
 
-    rows = [
-        ("ri", f"p{i}", op, 10 + i,
-         None if op == "I" else "o" * (i + 1),
-         None if op == "D" else "n" * (2 * i + 1),
-         None if op == "D" else f"c{i}")
-        for i, op in enumerate(["I", "D", "U", "I", "U", "D"])
-    ]
-    got = (
-        _changes_df(spark, rows)
-        .select("path", nc_row_size_expr().alias("sz"))
-        .collect()
-    )
-    by_path = {r["path"]: r["sz"] for r in got}
-    for repo, path, op, _seq, old_c, new_c, new_cm in rows:
-        key = _key_bytes(repo, path)
-        want = _nc_row_size(op, key, old_c, new_c, new_cm)
-        assert by_path[path] == want, (path, op)
-        # and both equal the actual encoded byte length
-        assert want == len(_nc_encode_row(op, key, old_c, new_c, new_cm))
+    if layout_name == "snapshot":
+        layout = blf._SNAPSHOT
+        rows = [
+            ("rs", f"p{i}", f"c{i}", None if i % 2 else "py" * i, "b" * (3 * i))
+            for i in range(6)
+        ]
+        df = spark.createDataFrame(
+            rows, "repo string, path string, commit string, lang string, "
+                  "content string"
+        )
+        encoded = [blf._snapshot_row(*r) for r in rows]
+    else:
+        layout = blf._NETCHANGE
+        rows = [
+            ("ri", f"p{i}", op, 10 + i,
+             None if op == "I" else "o" * (i + 1),
+             None if op == "D" else "n" * (2 * i + 1),
+             None if op == "D" else f"c{i}")
+            for i, op in enumerate(["I", "D", "U", "I", "U", "D"])
+        ]
+        df = _changes_df(spark, rows)
+        encoded = [blf._netchange_row(r[0], r[1], r[2], *r[4:]) for r in rows]
+    got = df.select("path", blf._size_expr(layout).alias("sz")).collect()
+    assert {r["path"]: r["sz"] for r in got} == {
+        r[1]: len(blf._encode_row(layout, op, fields))
+        for r, (op, fields) in zip(rows, encoded)
+    }
 
 
 def test_rotation_assignment_is_distributed(spark, tmp_path):
@@ -395,6 +399,41 @@ def test_consolidate_runs_no_spark_job(spark, tmp_path):
         lambda: consolidate_netchange_exports(spark, out).collect(),
     )
     assert again == [] and jobs == []
+
+
+def test_reader_runs_one_spark_job(spark, tmp_path):
+    """The reader lists the tree on the driver and parses from a local
+    relation of paths: over 40 repo directories, more than Spark's
+    parallel partition-discovery threshold, collecting it runs exactly
+    one job. An empty tree reads as an empty frame; a missing one raises."""
+    from mysql_binlog_spark.sinks.binlog_file import read_binlog_files
+
+    threshold = spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold")
+    n_repos = 40
+    assert n_repos > int(threshold)
+    rows = [
+        (f"r{i % n_repos:02d}", f"p{i:04d}", "I", i, None, f"body-{i}", f"c{i}")
+        for i in range(4 * n_repos)
+    ]
+    out = str(tmp_path / "nc")
+    write_netchange_binlog_files(
+        _changes_df(spark, rows), out, max_file_bytes=256, compress=True
+    ).collect()
+    assert len(consolidate_netchange_exports(spark, out).collect()) == n_repos
+    back, jobs, _ = _stages_under_group(
+        spark, "reader", lambda: read_netchange_binlog_files(spark, out).collect()
+    )
+    assert len(jobs) == 1
+    assert sorted((r["repo"], r["path"], r["new_commit"]) for r in back) == sorted(
+        (r[0], r[1], r[6]) for r in rows
+    )
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert read_netchange_binlog_files(spark, str(empty)).collect() == []
+    assert read_binlog_files(spark, str(empty)).collect() == []
+    with pytest.raises(FileNotFoundError):
+        read_binlog_files(spark, str(tmp_path / "missing"))
 
 
 def test_export_bytes_independent_of_input_partitioning(spark, tmp_path):

@@ -260,10 +260,13 @@ def test_query_event_with_status_vars():
     assert report.transactions == 3
 
 
-def test_apply_dir_skips_crashed_writer_temp_files(tmp_path):
+def test_apply_dir_skips_crashed_writer_temp_files(spark, tmp_path):
     """A writer that dies mid-file leaves ``.<name>.tmp-<pid>`` beside the
-    export; only finished ``.log``/``.log.z`` files are applied."""
+    export; only finished ``.log``/``.log.z`` files are applied, and the
+    reader, which lists with the same walk, ignores the temp file too."""
     import zlib
+
+    from mysql_binlog_spark.sinks.binlog_file import read_netchange_binlog_files
 
     d = tmp_path / "nc" / "r1"
     d.mkdir(parents=True)
@@ -275,3 +278,7 @@ def test_apply_dir_skips_crashed_writer_temp_files(tmp_path):
     report = apply_binlog_dir(lambda: conn, str(tmp_path / "nc"))
     assert report.files == 2
     assert report.xids == [1, 2, 3, 1, 2, 3]
+    back = read_netchange_binlog_files(spark, str(tmp_path / "nc")).collect()
+    assert sorted((r["path"], r["diff_op"], r["xid"]) for r in back) == sorted(
+        [(p, op, 1 + "IDU".index(op)) for p, op, *_ in NC_ROWS] * 2
+    )

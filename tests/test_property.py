@@ -320,6 +320,17 @@ _BODY = _FIELD | st.builds(
 )
 
 
+def _assert_truncations_raise(blob, parse):
+    """Every proper prefix of ``blob`` that ends on an event boundary (the
+    magic alone included) fails to parse: a writer always ends a file
+    with ROTATE, so a cut file never reads as a subset of its rows."""
+    from mysql_binlog_spark.sinks.binlog_file import iter_binlog_events
+
+    for _etype, _raw, _body, pos in iter_binlog_events(blob):
+        with pytest.raises(ValueError):
+            parse(blob[:pos])
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     repo=_REPO,
@@ -331,8 +342,9 @@ _BODY = _FIELD | st.builds(
 )
 def test_snapshot_codec_roundtrip(repo, rows, xid, compress):
     """Snapshot files parse back to exactly the rows framed, in order,
-    with the 8 KiB chunking rule; NUL in a field the parser splits on
-    (repo, commit, lang) is refused instead of silently mis-parsed."""
+    with the 8 KiB chunking rule, and no truncation of them parses; NUL
+    in a field the parser splits on (repo, commit, lang) is refused
+    instead of silently mis-parsed."""
     from mysql_binlog_spark.sinks.binlog_file import (
         BUFFER_SIZE,
         build_binlog_file,
@@ -348,6 +360,7 @@ def test_snapshot_codec_roundtrip(repo, rows, xid, compress):
             build_binlog_file(full, repo, xid=xid)
         return
     blob = build_binlog_file(full, repo, xid=xid)
+    _assert_truncations_raise(blob, parse_binlog_bytes)
     if compress:
         blob = zlib.compress(blob)
     back = parse_binlog_bytes(blob)
@@ -381,13 +394,15 @@ def _nc_row(draw):
 )
 def test_netchange_codec_roundtrip(repo, rows, start_xid, compress):
     """Net-change files parse back to the rows framed, pass by pass (I, D,
-    U) with their old images; the rotation planner's size model equals the
-    encoded bytes; NUL in the repo id is refused. Path, commit and
-    content are length-prefixed columns, so NUL round-trips there."""
+    U) with their old images, each in the chunk that the cumulative
+    encoded row size puts it in, and no truncation of them parses; NUL in
+    the repo id is refused. Path, commit and content are length-prefixed
+    columns, so NUL round-trips there."""
     from mysql_binlog_spark.sinks.binlog_file import (
-        _key_bytes,
-        _nc_encode_row,
-        _nc_row_size,
+        BUFFER_SIZE,
+        _NETCHANGE,
+        _encode_row,
+        _netchange_row,
         build_netchange_file,
         parse_netchange_bytes,
     )
@@ -396,12 +411,8 @@ def test_netchange_codec_roundtrip(repo, rows, start_xid, compress):
         with pytest.raises(ValueError, match="contains NUL"):
             build_netchange_file(rows, repo, start_xid=start_xid)
         return
-    for path, op, old, new, commit in rows:
-        key = _key_bytes(repo, path)
-        assert _nc_row_size(op, key, old, new, commit) == len(
-            _nc_encode_row(op, key, old, new, commit)
-        )
     blob = build_netchange_file(rows, repo, start_xid=start_xid)
+    _assert_truncations_raise(blob, parse_netchange_bytes)
     if compress:
         blob = zlib.compress(blob)
     back = parse_netchange_bytes(blob)
@@ -414,3 +425,7 @@ def test_netchange_codec_roundtrip(repo, rows, start_xid, compress):
     assert all(r["repo"] == repo for r in back)
     xid_of = {op: start_xid + i for i, op in enumerate(passes)}
     assert [r["xid"] for r in back] == [xid_of[r[1]] for r in want]
+    cum = dict.fromkeys(passes, 0)
+    for row, got in zip(want, back):
+        assert got["chunk_idx"] == cum[row[1]] // BUFFER_SIZE
+        cum[row[1]] += len(_encode_row(_NETCHANGE, *_netchange_row(repo, *row)))
