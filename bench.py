@@ -5,10 +5,13 @@ Runs (a) the headline CDC ingest — a deterministically generated changelog
 replayed end-to-end through collapse + fenced MERGE into a fresh lake table
 — and (b) the per-query suite from __spark_entry__ at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "ingest": {"n_events": N, "events_per_sec": X, "wall_sec": S}, ...}
+Prints two JSON lines: the full result, then a compact summary of it
+(``compact_result``) that stays under 2,000 characters so a reader that
+keeps only the tail of stdout can still parse the last line:
+  {"sf": ..., "cpus": N,
+   "ingest": {"n_events": N, "events_per_sec": X, "wall_sec": S, ...},
+   "events_per_sec": X, "queries": {name: sec, ...},
+   "metric": "...", "value": <sec>, "unit": "sec"}
 
 Env knobs:
   SPARK_GRAFT_SF_DIR      sf dir for the query suite (default /root/testdata/sf0.1)
@@ -258,6 +261,18 @@ def _sweep_fixture_dirs() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+#: keys of the full result that the compact last line keeps, in order
+COMPACT_KEYS = (
+    "sf", "cpus", "events_per_sec", "ingest", "replay", "queries",
+    "load_flag", "metric", "value", "unit",
+)
+
+
+def compact_result(result: dict) -> dict:
+    """The result without its per-query load samples and load snapshots."""
+    return {k: result[k] for k in COMPACT_KEYS if k in result}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -323,6 +338,7 @@ def main() -> None:
         }
     )
     print(json.dumps(result))
+    print(json.dumps(compact_result(result)))
 
 
 if __name__ == "__main__":

@@ -13,9 +13,7 @@ Design (standard Broder/LSH, e.g. "Mining of Massive Datasets" ch.3):
    measured ~5x faster end-to-end than the round-1 md5-per-permutation
    string signatures, AND still engine-portable: the identical
    signatures are computable in ANSI SQL ('0x'||substr(md5(s),1,8) ->
-   BIGINT arithmetic), which is how the DuckDB oracle cross-checks it.
-   The legacy md5-per-perm variant is kept as ``variant='md5'`` for the
-   cross-variant equivalence test;
+   BIGINT arithmetic), which is how the DuckDB oracle cross-checks it;
 3. split the P signature components into B bands of R rows; docs agreeing
    on ALL components of any band are candidates (probability of agreeing
    on a band ~ jaccard^R);
@@ -65,10 +63,8 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_perm: int = 16,
     shingle_k: int = 3,
-    variant: str = "universal",
 ) -> DataFrame:
-    """(id, sig: array[num_perm]) — minhash signature (longs for the
-    default 'universal' variant, md5 hex strings for 'md5').
+    """(id, sig: array[num_perm]) — minhash signature of longs.
 
     Tokens and shingles are each materialized in their own projection so
     every downstream lambda captures a cheap column attribute: HOF lambdas
@@ -88,24 +84,17 @@ def minhash_signatures(
     # per partition. Docs with no shingles (len < k tokens) drop out here
     # (explode_nonempty: the plain-explode form re-tokenized every doc
     # per shingle via an inferred pushed-down filter).
-    ex = explode_nonempty(shingled, F.col("sh"), "s", "id")
-    if variant == "universal":
-        ex = ex.select("id", shingle_u32(F.col("s")).alias("x"))
-        mins = []
-        for p in range(num_perm):
-            a, b = perm_coeffs(p)
-            mins.append(
-                F.min(
-                    (F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MERSENNEISH_P)
-                ).alias(f"mh{p}")
-            )
-    elif variant == "md5":
-        mins = [
-            F.min(F.md5(F.concat(F.lit(f"{p}:"), F.col("s")))).alias(f"mh{p}")
-            for p in range(num_perm)
-        ]
-    else:
-        raise ValueError(f"unknown minhash variant {variant!r}")
+    ex = explode_nonempty(shingled, F.col("sh"), "s", "id").select(
+        "id", shingle_u32(F.col("s")).alias("x")
+    )
+    mins = []
+    for p in range(num_perm):
+        a, b = perm_coeffs(p)
+        mins.append(
+            F.min(
+                (F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MERSENNEISH_P)
+            ).alias(f"mh{p}")
+        )
     agg = ex.groupBy("id").agg(*mins)
     return agg.select(
         "id", F.array(*[f"mh{p}" for p in range(num_perm)]).alias("sig")
@@ -164,14 +153,13 @@ def minhash_dedup_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_k: int = 3,
-    variant: str = "universal",
 ) -> DataFrame:
     """Near-duplicate pairs with estimated jaccard >= threshold.
 
     est_jaccard = fraction of equal minhash components (unbiased estimator
     of the true shingle-set jaccard).
     """
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k, variant)
+    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
     cands = lsh_candidate_pairs(sigs, num_perm, bands)
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))

@@ -74,6 +74,11 @@ from mysql_binlog_spark.lake.io import LocalTableIO, io_for_root
 
 KEY_COLS = ["repo", "path"]
 
+#: on-disk manifest format: ``_commit`` stamps it, ``read_manifest``
+#: refuses a manifest without it or with another value (Delta Lake's
+#: ``minReaderVersion`` rule: refuse a table, never guess at it)
+FORMAT_VERSION = 1
+
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("epoch", T.LongType(), False),
@@ -195,19 +200,7 @@ class LakeTable:
         # committed with tracking on keeps writing change files no matter
         # how it is reopened (a CLI open with the default constructor must
         # not silently stop the change stream and break incremental diff).
-        # Tables written before the sticky flag existed carry no
-        # 'track_changes' key but DO carry per-epoch 'changes' entries —
-        # detect those too, or a default reopen of a pre-upgrade tracked
-        # table silently stops its change stream (the exact failure the
-        # stickiness is for). The head alone is not enough for those
-        # pre-upgrade tables (ADVICE round 3): old code wrote changes=None
-        # for EMPTY tracked epochs, so a pre-upgrade table whose newest
-        # commit was an empty epoch looks untracked at the head — walk
-        # the chain (once, only on pre-flag tables, bounded below by the
-        # manifest floor) before concluding tracking is off.
         self.track_changes = bool(committed.get("track_changes")) or track_changes
-        if not self.track_changes and "track_changes" not in committed:
-            self.track_changes = self._detect_legacy_tracking(committed)
         stored = committed.get("n_buckets")
         if stored is not None:
             if n_buckets is not None and n_buckets != stored:
@@ -222,64 +215,6 @@ class LakeTable:
 
     # ---------------- snapshot / manifest plumbing ----------------
 
-    #: manifest-walk bound for legacy track_changes detection — one fold
-    #: interval's worth of history, well beyond any plausible run of
-    #: consecutive EMPTY tracked epochs at the head of a legacy table
-    _TRACK_SCAN_BOUND = 256
-
-    def _track_hint_path(self) -> str:
-        return _join(self.root, "_snapshots", "track-hint.text")
-
-    def _detect_legacy_tracking(self, committed: dict) -> bool:
-        """Pre-upgrade tables (no 'track_changes' manifest key) signal
-        tracking only through per-epoch 'changes' entries, and old code
-        wrote changes=None for EMPTY tracked epochs — so the head alone is
-        not conclusive and round 3 walked the WHOLE chain. That walk is
-        O(all versions) on every open of a genuinely-untracked legacy
-        streamed table (~20k manifests/day; round-4 ADVICE). Now: the
-        walk is bounded to the last _TRACK_SCAN_BOUND versions, and the
-        resolution is persisted in an advisory sidecar (like the version
-        hint) so every later open is O(1). Any NEW commit persists the
-        flag into the manifest itself, ending the legacy state for good."""
-        head = int(committed.get("version", 0) or 0)
-        if head == 0:
-            return False
-        floor = int(committed.get("manifest_floor", 0) or 0)
-        scanned_to = floor  # versions <= scanned_to are known changes-free
-        try:
-            flag, v = self.io.read_text(self._track_hint_path()).strip().split("@")
-            if flag == "1":
-                return True
-            scanned_to = max(scanned_to, int(v))
-        except Exception:  # noqa: BLE001 - missing/corrupt hint: full logic
-            pass
-        lo = max(scanned_to, head - self._TRACK_SCAN_BOUND)
-        found = False
-        for v in range(head, lo, -1):
-            if self.read_manifest(v).get("changes") is not None:
-                found = True
-                break
-        if not found and lo > scanned_to:
-            logging.getLogger(__name__).warning(
-                "table %s predates the sticky track_changes flag and its "
-                "last %d manifests carry no change entries — treating it "
-                "as untracked without walking the remaining %d versions. "
-                "If this table IS change-tracked (an implausibly long run "
-                "of empty epochs at the head), reopen it once with "
-                "track_changes=True; any commit then persists the flag.",
-                self.root, head - lo, lo - scanned_to,
-            )
-        else:
-            # resolution is conclusive (found, or the walk covered down to
-            # the known-clean boundary) — persist it, advisory-only
-            try:
-                self.io.write_text(
-                    self._track_hint_path(), f"{int(found)}@{head}"
-                )
-            except Exception:  # noqa: BLE001 - advisory only
-                pass
-        return found
-
     def current_version(self) -> int:
         """Highest committed manifest version (0 = empty table).
 
@@ -290,10 +225,10 @@ class LakeTable:
         (it is written after the manifest exists, and hint-write races
         between concurrent committers leave an older value), never ahead,
         so the forward probe always lands on the true head. A missing or
-        corrupt hint falls back to the full directory listing (the
-        pre-upgrade path). Without this, every open / read / commit
-        attempt on a streamed table paid an O(all versions) listing —
-        ~20k files/day at one micro-batch commit per few seconds.
+        corrupt hint falls back to the full directory listing. Without
+        this, every open / read / commit attempt on a streamed table paid
+        an O(all versions) listing — ~20k files/day at one micro-batch
+        commit per few seconds.
         """
         try:
             h = int(self.io.read_text(self._hint_path()).strip())
@@ -321,6 +256,9 @@ class LakeTable:
         return _join(self.root, "_snapshots", f"v{version:08d}.json")
 
     def read_manifest(self, version: int | None = None) -> dict:
+        """Manifest ``version`` (default: the head). Opens and time travel
+        both read here, so a manifest whose ``format_version`` is missing
+        or not ``FORMAT_VERSION`` is refused before any field is used."""
         v = version if version is not None else self.current_version()
         if v == 0:
             return {
@@ -329,6 +267,8 @@ class LakeTable:
                 "epoch_watermark": -1,
                 "epochs_extra": [],
                 "buckets": {},
+                "repo_blooms": {},
+                "source_hwms": {},
                 "schema": None,
                 "checkpoints": [],
                 "n_buckets": None,
@@ -346,6 +286,13 @@ class LakeTable:
                 "(time travel below the retention window fails like "
                 "Iceberg after expire_snapshots)"
             ) from None
+        if m.get("format_version") != FORMAT_VERSION:
+            raise ValueError(
+                f"manifest v{v} of {self.root} has format_version "
+                f"{m.get('format_version', '(none)')}; this engine reads "
+                f"only format_version {FORMAT_VERSION} — rebuild the table "
+                "from its changelog"
+            )
         self._manifest_cache[v] = m  # committed manifests are immutable
         return m
 
@@ -364,6 +311,7 @@ class LakeTable:
         ``current_version`` to a forward probe from an older hint).
         """
         v = manifest["version"]
+        manifest["format_version"] = FORMAT_VERSION
         self.io.create_exclusive(self._manifest_path(v), json.dumps(manifest))
         try:
             self.io.write_text(self._hint_path(), str(v))
@@ -482,7 +430,7 @@ class LakeTable:
         win = self.applied_file_window(source)
         floor = self.applied_files_floor(source)
         if not win and floor < 0:
-            # no audit data at all: pre-upgrade or batch-ingested table —
+            # no audit data at all: a batch-ingested table —
             # the conservative (pre-window) semantics apply
             return "below_window"
         if self._file_key(name) in win:
@@ -507,17 +455,14 @@ class LakeTable:
 
     def _buckets_maybe_containing(self, manifest: dict, repo: str) -> list[int]:
         """Buckets whose repo bloom admits ``repo`` — the DDL read set.
-        A bucket with no bloom recorded (pre-upgrade manifest, or never
-        merged through the bloom path) must be read (superset-safe)."""
+        Every write that lists a bucket's files also records its bloom
+        (merge, DDL, rebucket), so a missing bloom is a broken manifest
+        and fails here rather than silently forcing a read."""
         p1, p2 = _repo_bloom_positions(self.spark, repo)
-        blooms = manifest.get("repo_blooms", {})
+        blooms = manifest["repo_blooms"]
         out: list[int] = []
         for b in manifest["buckets"]:
-            h = blooms.get(b)
-            if h is None:
-                out.append(int(b))
-                continue
-            bits = int(h, 16)
+            bits = int(blooms[b], 16)
             if (bits >> p1) & 1 and (bits >> p2) & 1:
                 out.append(int(b))
         return sorted(out)
@@ -645,27 +590,29 @@ class LakeTable:
         nxt["ckpt_rollup_file"] = self._write_ckpt_rollup(rows, nxt["version"])
         nxt["ckpt_base"] = nxt["version"]
 
+    def _lineage(self, m: dict) -> tuple[str | None, list[dict]]:
+        """(rollup sidecar of the last fold or None, the per-manifest
+        lineage rows committed since it) as of head manifest ``m``."""
+        cur = int(m.get("version", 0) or 0)
+        base = int(m.get("ckpt_base", 0) or 0)
+        rf = None
+        if base:
+            bm = m if base == cur else self.read_manifest(base)
+            rf = bm.get("ckpt_rollup_file")
+        delta: list[dict] = []
+        for v in range(base + 1, cur + 1):
+            mm = m if v == cur else self.read_manifest(v)
+            delta.extend(mm.get("checkpoints", []))
+        return rf, delta
+
     def _checkpoint_rows(self, head: dict | None = None) -> list[dict]:
         """All committed lineage rows: the last rollup sidecar (folded
         prefix of the chain) + the per-manifest deltas since it. Bounded
         by CKPT_FOLD_INTERVAL manifests regardless of table age; a table
-        that never folded (younger than one interval, or pre-upgrade)
-        walks its whole — short or pre-expiration — chain."""
-        m = head if head is not None else self.read_manifest()
-        cur = int(m.get("version", 0) or 0)
-        base = int(m.get("ckpt_base", 0) or 0)
-        rows: list[dict] = []
-        if base:
-            bm = m if base == cur else self.read_manifest(base)
-            rf = bm.get("ckpt_rollup_file")
-            if rf:
-                rows.extend(self._read_ckpt_rollup(rf))
-        for v in range(base + 1, cur + 1):
-            mm = m if v == cur else self.read_manifest(v)
-            for r in mm.get("checkpoints", []):
-                r.setdefault("source", "")
-                rows.append(r)
-        return rows
+        that never folded (younger than one interval) walks its whole —
+        short — chain."""
+        rf, delta = self._lineage(head if head is not None else self.read_manifest())
+        return (self._read_ckpt_rollup(rf) if rf else []) + delta
 
     def checkpoints(self) -> DataFrame:
         """Per-(epoch, bucket) lineage + metrics rows from committed
@@ -676,23 +623,10 @@ class LakeTable:
         (distributed; on a years-old stream that is millions of rows the
         driver never materializes) unioned with the recent per-manifest
         deltas (bounded by CKPT_FOLD_INTERVAL, driver-held)."""
-        m = self.read_manifest()
-        cur = int(m.get("version", 0) or 0)
-        base = int(m.get("ckpt_base", 0) or 0)
-        delta: list[dict] = []
-        for v in range(base + 1, cur + 1):
-            mm = m if v == cur else self.read_manifest(v)
-            for r in mm.get("checkpoints", []):
-                r.setdefault("source", "")
-                delta.append(r)
+        rf, delta = self._lineage(self.read_manifest())
         out = self.spark.createDataFrame(delta, CHECKPOINT_SCHEMA)
-        if base:
-            bm = m if base == cur else self.read_manifest(base)
-            rf = bm.get("ckpt_rollup_file")
-            if rf:
-                out = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-                    rf
-                ).unionByName(out)
+        if rf:
+            out = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(rf).unionByName(out)
         return out
 
     def high_watermark(self, source: str | None = None) -> int:
@@ -703,21 +637,11 @@ class LakeTable:
         O(1): the head manifest carries ``source_hwms`` (running max per
         source), so the streaming fence doesn't re-walk the whole
         manifest chain every micro-batch (O(epochs) per batch = O(n^2)
-        cumulative on a long-running stream). Pre-upgrade tables (no
-        ``source_hwms`` key) fall back to the lineage walk."""
-        m = self.read_manifest()
-        hw = m.get("source_hwms")
-        if hw is not None:
-            if source is not None:
-                return int(hw.get(source, -1))
-            return max((int(v) for v in hw.values()), default=-1)
-        hwms = [
-            c["hwm_seq"]
-            for c in self._checkpoint_rows()
-            if c["hwm_seq"] is not None
-            and (source is None or c.get("source", "") == source)
-        ]
-        return max(hwms) if hwms else -1
+        cumulative on a long-running stream)."""
+        hw = self.read_manifest()["source_hwms"]
+        if source is not None:
+            return int(hw.get(source, -1))
+        return max((int(v) for v in hw.values()), default=-1)
 
     # ---------------- MERGE (the upsert join, SURVEY §2.6 J1) ----------------
 
@@ -987,7 +911,7 @@ class LakeTable:
         replaced). A batch 'D' for a key with no prior image is a no-op
         and produces nothing.
         """
-        chg = merged.filter(F.col("_from_batch") == 1) if "_from_batch" in merged.columns else merged
+        chg = merged.filter(F.col("_from_batch") == 1)
         old_seq = F.col("_old.seq")
         w_op = F.col("_w.op")
         diff_op = (
@@ -1351,12 +1275,11 @@ class LakeTable:
         seq, so a range spanning an insert and a later truncate of the
         same key holds two rows with EQUAL seq — the commit version
         breaks the tie deterministically (min_by/max_by are
-        nondeterministic on ties). coalesce(version, 0) keeps
-        pre-upgrade change files (no version column -> NULL) readable.
-        Output keeps (version, seq) of the LAST change so compacted
-        outputs stay composable with later per-epoch rows."""
+        nondeterministic on ties). Output keeps (version, seq) of the
+        LAST change so compacted outputs stay composable with later
+        per-epoch rows."""
         chg = self.spark.read.schema(CHANGE_SCHEMA_DDL).parquet(*files)
-        order = F.struct(F.coalesce(F.col("version"), F.lit(0)), F.col("seq"))
+        order = F.struct(F.col("version"), F.col("seq"))
         agg = chg.groupBy(*KEY_COLS).agg(
             F.min_by(F.struct("diff_op", "old_content"), order).alias("first"),
             F.max_by(
@@ -1443,10 +1366,6 @@ class LakeTable:
             nxt["version"] = m["version"] + 1
             nxt["checkpoints"] = []  # lineage delta: nothing applied
             nxt["changes"] = [] if self.track_changes else None
-            nxt.setdefault("change_compactions", {})
-            nxt.setdefault("changes_floor", 0)
-            nxt.setdefault("manifest_floor", 0)
-            nxt.setdefault("repo_blooms", {})
             nxt["n_buckets"] = self.n_buckets
             nxt["track_changes"] = self.track_changes
             # maintenance versions count toward the fold interval too — a
@@ -1835,20 +1754,11 @@ class LakeTable:
         buckets.update(new_files)
         # per-bucket repo blooms: OR-accumulate this epoch's batch bits
         # into the committed blooms (monotone superset; hex-encoded)
-        blooms = dict(manifest.get("repo_blooms", {}))
+        blooms = dict(manifest["repo_blooms"])
         for b, bits in (new_blooms or {}).items():
             blooms[b] = f"{int(blooms.get(b, '0'), 16) | bits:x}"
-        # running per-source seq watermark (O(1) high_watermark reads);
-        # a pre-upgrade table seeds it from ONE lineage walk at its first
-        # new commit so no source's history is forgotten
-        if "source_hwms" in manifest:
-            source_hwms = dict(manifest["source_hwms"])
-        else:
-            source_hwms = {}
-            for c in self._checkpoint_rows(head=manifest):
-                if c["hwm_seq"] is not None:
-                    s = c.get("source", "")
-                    source_hwms[s] = max(int(source_hwms.get(s, -1)), int(c["hwm_seq"]))
+        # running per-source seq watermark (O(1) high_watermark reads)
+        source_hwms = dict(manifest["source_hwms"])
         epoch_hwm = max(
             (r["hwm_seq"] for r in cp_rows if r.get("hwm_seq") is not None),
             default=None,

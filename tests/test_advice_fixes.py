@@ -379,217 +379,6 @@ def test_rerun_wider_bound_with_ddl_between(spark, tmp_path):
     assert sorted(snap["path"]) == ["p4", "p5"]
 
 
-def test_track_changes_sticky_for_pre_upgrade_manifests(spark, tmp_path):
-    """A table whose manifests predate the sticky 'track_changes' key (but
-    that recorded per-epoch 'changes' entries) must keep tracking on a
-    default reopen — detected via the changes entries themselves."""
-    import json
-    import os
-
-    ev = pd.DataFrame(
-        {
-            "repo": ["a", "a"], "path": ["p1", "p2"], "seq": [1, 2],
-            "op": ["I", "I"], "commit": ["c1", "c2"], "lang": [None, None],
-            "content": ["x", "y"], "before_content": [None, None],
-            "new_path": [None, None], "statement": [None, None],
-        }
-    )
-    path = str(tmp_path / "ev.parquet")
-    _write_events(ev, path)
-    root = str(tmp_path / "lake")
-    t = LakeTable(spark, root, n_buckets=4, track_changes=True)
-    run_ingest(spark, path, t, epoch_size=1)
-
-    # simulate pre-upgrade manifests: strip the sticky key everywhere
-    snaps = os.path.join(root, "_snapshots")
-    for f in sorted(os.listdir(snaps)):
-        if not (f.startswith("v") and f.endswith(".json")):
-            continue  # skip version-hint.text / ckpt rollup sidecars
-        p = os.path.join(snaps, f)
-        m = json.loads(open(p).read())
-        m.pop("track_changes", None)
-        open(p, "w").write(json.dumps(m))
-
-    t2 = LakeTable(spark, root)  # default reopen (the CLI's open)
-    assert t2.track_changes is True
-
-
-def test_track_changes_sticky_when_pre_upgrade_head_is_empty_epoch(spark, tmp_path):
-    """ADVICE round 3: pre-upgrade code wrote changes=None (not []) for
-    EMPTY tracked epochs — a pre-upgrade tracked table whose newest
-    commit was such an epoch looked untracked at the head and a default
-    reopen silently stopped its change stream. The open now walks back
-    the chain before concluding tracking is off."""
-    import json
-    import os
-
-    ev = pd.DataFrame(
-        {
-            "repo": ["a", "a"], "path": ["p1", "p2"], "seq": [1, 2],
-            "op": ["I", "I"], "commit": ["c1", "c2"], "lang": [None, None],
-            "content": ["x", "y"], "before_content": [None, None],
-            "new_path": [None, None], "statement": [None, None],
-        }
-    )
-    path = str(tmp_path / "ev.parquet")
-    _write_events(ev, path)
-    root = str(tmp_path / "lake")
-    t = LakeTable(spark, root, n_buckets=4, track_changes=True)
-    run_ingest(spark, path, t, epoch_size=1)
-    # one more EMPTY epoch on top
-    t.merge(
-        spark.createDataFrame([], "repo string, path string, seq long, op string"),
-        epoch=99,
-    )
-
-    # simulate pre-upgrade manifests: strip the sticky key everywhere AND
-    # null the head's changes entry (old empty-epoch behavior)
-    snaps = os.path.join(root, "_snapshots")
-    files = sorted(
-        f for f in os.listdir(snaps) if f.startswith("v") and f.endswith(".json")
-    )
-    for i, f in enumerate(files):
-        p = os.path.join(snaps, f)
-        m = json.loads(open(p).read())
-        m.pop("track_changes", None)
-        if i == len(files) - 1:
-            m["changes"] = None
-        open(p, "w").write(json.dumps(m))
-
-    t2 = LakeTable(spark, root)  # default reopen (the CLI's open)
-    assert t2.track_changes is True
-
-
-# ---------------------------------------------------------------------------
-# ADVICE round 4: legacy track_changes detection must be bounded + memoized
-# ---------------------------------------------------------------------------
-
-
-def _strip_sticky_flag(root: str) -> None:
-    """Simulate pre-upgrade manifests: remove 'track_changes' everywhere
-    and any detection sidecar."""
-    import json
-    import os
-
-    snaps = os.path.join(root, "_snapshots")
-    for f in os.listdir(snaps):
-        p = os.path.join(snaps, f)
-        if f == "track-hint.text":
-            os.remove(p)
-        if not (f.startswith("v") and f.endswith(".json")):
-            continue
-        m = json.loads(open(p).read())
-        m.pop("track_changes", None)
-        open(p, "w").write(json.dumps(m))
-
-
-def test_legacy_track_detection_memoized_in_sidecar(spark, tmp_path):
-    """First default reopen of a legacy table resolves tracking by the
-    manifest walk and persists the verdict in an advisory sidecar; later
-    opens read the sidecar instead of re-walking (round-4 ADVICE: the
-    O(all-versions) walk re-ran on EVERY open of an untracked legacy
-    streamed table)."""
-    import os
-
-    ev = pd.DataFrame(
-        {
-            "repo": ["a", "a"], "path": ["p1", "p2"], "seq": [1, 2],
-            "op": ["I", "I"], "commit": ["c1", "c2"], "lang": [None, None],
-            "content": ["x", "y"], "before_content": [None, None],
-            "new_path": [None, None], "statement": [None, None],
-        }
-    )
-    path = str(tmp_path / "ev.parquet")
-    _write_events(ev, path)
-
-    # untracked legacy table -> verdict 0 persisted, no walk on reopen
-    root = str(tmp_path / "lake_untracked")
-    t = LakeTable(spark, root, n_buckets=4)
-    run_ingest(spark, path, t, epoch_size=1)
-    _strip_sticky_flag(root)
-    t1 = LakeTable(spark, root)
-    assert t1.track_changes is False
-    hint = os.path.join(root, "_snapshots", "track-hint.text")
-    assert open(hint).read().startswith("0@")
-    calls = []
-    orig = LakeTable.read_manifest
-
-    def counting(self, version=None):
-        calls.append(version)
-        return orig(self, version)
-
-    LakeTable.read_manifest = counting
-    try:
-        t2 = LakeTable(spark, root)
-    finally:
-        LakeTable.read_manifest = orig
-    assert t2.track_changes is False
-    # the open reads the head manifest (+ the 0-arg call) but does NOT
-    # walk the chain: no version below the head is re-read
-    head = t2.current_version()
-    assert all(v is None or v >= head for v in calls), calls
-
-    # tracked legacy table -> verdict 1 persisted
-    root2 = str(tmp_path / "lake_tracked")
-    tt = LakeTable(spark, root2, n_buckets=4, track_changes=True)
-    run_ingest(spark, path, tt, epoch_size=1)
-    _strip_sticky_flag(root2)
-    assert LakeTable(spark, root2).track_changes is True
-    assert open(
-        os.path.join(root2, "_snapshots", "track-hint.text")
-    ).read().startswith("1@")
-
-
-def test_legacy_track_walk_bounded_warns_when_inconclusive(
-    spark, tmp_path, caplog, monkeypatch
-):
-    """When the bounded walk exhausts its budget without resolving (an
-    implausibly long run of empty epochs at the head), the open warns and
-    conservatively treats the table as untracked rather than walking the
-    whole chain — and does NOT memoize the inconclusive verdict."""
-    import logging
-    import os
-
-    ev = pd.DataFrame(
-        {
-            "repo": ["a"], "path": ["p1"], "seq": [1],
-            "op": ["I"], "commit": ["c1"], "lang": [None],
-            "content": ["x"], "before_content": [None],
-            "new_path": [None], "statement": [None],
-        }
-    )
-    path = str(tmp_path / "ev.parquet")
-    _write_events(ev, path)
-    root = str(tmp_path / "lake")
-    t = LakeTable(spark, root, n_buckets=4, track_changes=True)
-    run_ingest(spark, path, t, epoch_size=1)
-    # two empty epochs on top, then simulate pre-upgrade: strip flags and
-    # null the empty epochs' changes entries (old empty-epoch behavior)
-    t.merge(spark.createDataFrame([], "repo string, path string, seq long, op string"),
-            epoch=98)
-    t.merge(spark.createDataFrame([], "repo string, path string, seq long, op string"),
-            epoch=99)
-    _strip_sticky_flag(root)
-    import json
-
-    snaps = os.path.join(root, "_snapshots")
-    files = sorted(f for f in os.listdir(snaps)
-                   if f.startswith("v") and f.endswith(".json"))
-    for f in files[-2:]:
-        p = os.path.join(snaps, f)
-        m = json.loads(open(p).read())
-        m["changes"] = None
-        open(p, "w").write(json.dumps(m))
-
-    monkeypatch.setattr(LakeTable, "_TRACK_SCAN_BOUND", 2)
-    with caplog.at_level(logging.WARNING):
-        t2 = LakeTable(spark, root)
-    assert t2.track_changes is False  # conservative under the bound
-    assert any("predates the sticky track_changes" in r.message
-               for r in caplog.records)
-    assert not os.path.exists(os.path.join(snaps, "track-hint.text"))
-
-
 def test_stream_maintenance_warns_without_change_retention(
     spark, tmp_path, caplog
 ):

@@ -91,19 +91,6 @@ def test_no_python_in_dedup_plans(spark, docs):
         assert "EvalPython" not in df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_minhash_variants_find_same_pairs(spark):
-    """The production universal-hash signatures and the legacy
-    md5-per-permutation signatures are different hash families, but on a
-    corpus of strong near-dups they must surface the same pairs (the LSH
-    math is identical; only the hash source differs)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    uni = minhash_dedup_pairs(docs, threshold=0.5, variant="universal").toPandas()
-    md5 = minhash_dedup_pairs(docs, threshold=0.5, variant="md5").toPandas()
-    pu = {tuple(p) for p in uni[["id_a", "id_b"]].itertuples(index=False)}
-    pm = {tuple(p) for p in md5[["id_a", "id_b"]].itertuples(index=False)}
-    assert pu == pm and len(pu) > 0
-
-
 def test_simhash_variants_agree_on_exact_dups(spark, docs):
     """Portable (md5-halves) and xxhash sketches are different hash
     families but must both report hamming 0 for identical text."""

@@ -7,12 +7,21 @@ import datetime
 from decimal import Decimal
 
 import pandas as pd
+import pytest
 
 from mysql_binlog_spark.sources.typed_codec import (
     TYPED_EVENT_DDL,
-    decode_typed_events,
-    encode_typed_events,
+    decode_typed_events_arrow,
+    encode_typed_events_arrow,
 )
+from tests.typed_codec_reference import decode_typed_events, encode_typed_events
+
+#: (encode, decode) pairs: the Arrow codec production runs, and the
+#: mapInPandas reference it is checked against
+CODECS = {
+    "arrow": (encode_typed_events_arrow, decode_typed_events_arrow),
+    "pandas": (encode_typed_events, decode_typed_events),
+}
 
 
 def _fixture_df(spark):
@@ -64,52 +73,43 @@ def test_typed_decode_stays_arrow_batched(spark):
 
 
 def test_typed_codec_version_and_length_guards(spark):
-    """Stale-version and truncated records fail loudly (reference
-    FORMAT_DESCRIPTION / event-size checks), never decode as garbage."""
-    import pytest
-
-    packed = encode_typed_events(_fixture_df(spark)).toPandas()
-    rec = bytes(packed["record"][0])
-    import pandas as pd
-
-    stale = bytes([rec[0] ^ 0x7F]) + rec[1:]
-    with pytest.raises(Exception, match="wire-format version"):
-        decode_typed_events(
-            spark.createDataFrame(pd.DataFrame({"record": [stale]}))
-        ).collect()
-    with pytest.raises(Exception, match="header-implied"):
-        decode_typed_events(
-            spark.createDataFrame(pd.DataFrame({"record": [rec[:-1]]}))
-        ).collect()
+    """Stale-version and truncated records fail loudly in both decoders
+    (reference FORMAT_DESCRIPTION / event-size checks), never decode as
+    garbage."""
+    for name, (encode, decode) in CODECS.items():
+        rec = bytes(encode(_fixture_df(spark)).toPandas()["record"][0])
+        stale = bytes([rec[0] ^ 0x7F]) + rec[1:]
+        for bad, msg in (
+            (stale, "wire-format version"),
+            (rec[:-1], "header-implied"),
+            (rec[:10], "shorter than its fixed header"),
+        ):
+            with pytest.raises(Exception, match=msg):
+                decode(
+                    spark.createDataFrame(pd.DataFrame({"record": [bad]}))
+                ).collect()
+                pytest.fail(f"{name} decoder accepted a bad record")
 
 
 def test_typed_codec_enum_dictionary_strict(spark):
-    """An ENUM value outside the stream dictionary is an encode error
-    (strict, like MySQL's column definition), and a custom dictionary
-    threads through both directions."""
-    import pytest
-
+    """An ENUM value outside the stream dictionary is an encode error in
+    both encoders (strict, like MySQL's column definition), and a custom
+    dictionary threads through both directions."""
     df = _fixture_df(spark)
-    with pytest.raises(Exception, match="not in the stream dictionary"):
-        encode_typed_events(df, enum_dict=("only-one",)).collect()
-
     custom = ("rust", "go", "python", "java", "c", "js", "ts", "zig")
-    back = decode_typed_events(
-        encode_typed_events(df, enum_dict=custom), enum_dict=custom
-    )
-    got = {r["seq"]: r["category"] for r in back.collect()}
-    assert got == {1: "python", 2: None, 3: "ts"}
+    for name, (encode, decode) in CODECS.items():
+        with pytest.raises(Exception, match="not in the stream dictionary"):
+            encode(df, enum_dict=("only-one",)).collect()
+            pytest.fail(f"{name} encoder accepted an unknown ENUM value")
+        back = decode(encode(df, enum_dict=custom), enum_dict=custom)
+        got = {r["seq"]: r["category"] for r in back.collect()}
+        assert got == {1: "python", 2: None, 3: "ts"}, name
 
 
 def test_arrow_native_codec_matches_pandas_reference(spark):
     """The mapInArrow codec (buffer-built columns, zero per-row Python
     objects) must be byte-identical on encode and value-identical on
     decode to the readable mapInPandas reference implementation."""
-    from mysql_binlog_spark.sources.typed_codec import (
-        decode_typed_events_arrow,
-        encode_typed_events_arrow,
-    )
-
     src = _fixture_df(spark)
     a = sorted(bytes(r["record"]) for r in encode_typed_events(src).collect())
     b = sorted(
@@ -135,11 +135,6 @@ def test_arrow_native_codec_matches_pandas_reference(spark):
 def test_arrow_codec_plan_is_arrow_eval(spark):
     """The arrow codec runs as MapInArrow (PythonMapInArrow node) — no
     pandas conversion, no row-at-a-time Python."""
-    from mysql_binlog_spark.sources.typed_codec import (
-        decode_typed_events_arrow,
-        encode_typed_events_arrow,
-    )
-
     plan = (
         decode_typed_events_arrow(encode_typed_events_arrow(_fixture_df(spark)))
         ._jdf.queryExecution()
