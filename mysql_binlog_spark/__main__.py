@@ -198,6 +198,18 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(f"mysql_binlog_spark-{args.cmd}")
 
+    if args.cmd in ("snapshot", "lookup", "diff"):
+        from mysql_binlog_spark.lake.table import LakeTable
+
+        # n_buckets=None: adopt the bucket count stored in the manifest
+        t = LakeTable(spark, args.table)
+        if not t.io.isdir(f"{t.root}/_snapshots"):
+            # a read must not report a mistyped path as an empty table
+            print(json.dumps({
+                "cmd": args.cmd, "error": f"no lake table at {args.table}",
+            }))
+            return 2
+
     if args.cmd == "merge":
         from mysql_binlog_spark.operators.collapse import snapshot_from_events
         from mysql_binlog_spark.sources.changelog_source import read_changelog_range
@@ -253,17 +265,10 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"cmd": "backup", "epochs": len(t.epochs_applied())}))
 
     elif args.cmd == "snapshot":
-        from mysql_binlog_spark.lake.table import LakeTable
-
-        # n_buckets=None: adopt the bucket count stored in the manifest
-        t = LakeTable(spark, args.table)
         t.read_state(version=args.version).write.mode("overwrite").parquet(args.out)
         print(json.dumps({"cmd": "snapshot", "out": args.out, "version": args.version}))
 
     elif args.cmd == "lookup":
-        from mysql_binlog_spark.lake.table import LakeTable
-
-        t = LakeTable(spark, args.table)
         df = t.lookup(args.repo, args.path, version=args.version)
         if args.out:
             df.write.mode("overwrite").parquet(args.out)
@@ -310,9 +315,6 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     elif args.cmd == "diff":
-        from mysql_binlog_spark.lake.table import LakeTable
-
-        t = LakeTable(spark, args.table)
         v_to = args.to_version if args.to_version is not None else t.current_version()
         t.diff(args.from_version, v_to).write.mode("overwrite").parquet(args.out)
         print(

@@ -196,22 +196,12 @@ def run_ingest(
             if force and res.committed:
                 seq_hwm = max(seq_hwm, hi)
         else:
+            # a barrier-only action (CREATE/ALTER/...) commits an empty
+            # fenced epoch, so its plan position is durable
             _kind, epoch_id, op = entry
-            if op.action in ("truncate", "drop", "rename"):
-                res = table.apply_repo_ddl(
-                    epoch_id, op.action, op.repo, new_repo=op.new_repo,
-                    source=source,
-                )
-            else:
-                # CREATE/ALTER/CREATE INDEX: barrier only — commit an
-                # empty fenced epoch so the plan position is durable
-                res = table.merge(
-                    spark.createDataFrame(
-                        [], "repo string, path string, seq long, op string"
-                    ),
-                    epoch=epoch_id,
-                    source=source,
-                )
+            res = table.apply_repo_ddl(
+                epoch_id, op.action, op.repo, new_repo=op.new_repo, source=source
+            )
         report.merges.append(res)
         if res.committed:
             report.epochs_run += 1
@@ -270,8 +260,9 @@ def run_multi_source_ingest(
     from concurrent.futures import ThreadPoolExecutor
 
     # Spark job submission is thread-safe; the shared LakeTable's mutable
-    # state is commit-protocol-safe by design (manifest cache is
-    # append-only of immutable entries, n_buckets re-adopts per attempt)
+    # state is commit-protocol-safe by design (the bounded manifest cache
+    # holds immutable entries behind a lock, so an evicted one is simply
+    # re-read; n_buckets re-adopts per attempt)
     with ThreadPoolExecutor(max_workers=len(sources)) as pool:
         futures = {
             name: pool.submit(

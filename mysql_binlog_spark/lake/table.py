@@ -33,8 +33,10 @@ Reference analogies (what each piece replaces in NineT/mysql-binlog):
   per-epoch net-change files — the literal analog of the reference's
   compacted per-flush binlog output;
 - flush-before-DDL barrier + DDL apply (backup/handler/merge.go:147-166)
-  -> ``apply_repo_ddl`` (truncate = delete-all-keys, rename = re-key),
-  committed as its own fenced epoch;
+  -> ``apply_repo_ddl``, committed as its own fenced epoch through the
+  same copy-on-write bucket rewrite as MERGE: truncate = one tombstone
+  per key, rename = a tombstone plus a re-keyed upsert per key; a DDL
+  that changes no row commits an empty fenced epoch;
 - ``IFile``/``IClient`` storage interface (common/inter/store.go:10-24)
   -> the injected ``TableIO`` (local POSIX or Hadoop FS; see lake.io).
 
@@ -60,17 +62,20 @@ from __future__ import annotations
 
 import json
 import logging
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
-from mysql_binlog_spark.lake.io import LocalTableIO, io_for_root
+from mysql_binlog_spark.lake.io import io_for_root
+from mysql_binlog_spark.operators.ddl import BARRIER_ACTIONS
 
 KEY_COLS = ["repo", "path"]
 
@@ -96,10 +101,10 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 #: net-change rows recorded per epoch when change tracking is enabled.
-#: ``version`` is the commit that produced the row: DDL epochs
-#: (truncate/drop/rename) write D/I change rows that REUSE the affected
-#: row's stored seq, so seq alone is not a total order across a key's
-#: change history — (version, seq) is.
+#: ``version`` is the commit that produced the row: a DDL epoch's
+#: tombstones and re-keyed upserts carry the affected row's stored seq,
+#: so its D/I/U change rows REUSE that seq and seq alone is not a total
+#: order across a key's change history — (version, seq) is.
 CHANGE_SCHEMA_DDL = (
     "repo string, path string, diff_op string, version long, seq long, "
     "old_content string, new_content string, new_commit string"
@@ -117,11 +122,9 @@ class MergeResult:
     wall_ms: int
 
 
-def bucket_expr(n_buckets: int, repo: Column | None = None):
-    """Deterministic key -> bucket assignment (stable across epochs).
-    ``repo`` overrides the key's repo column (where a renamed key lands)."""
-    r = F.col("repo") if repo is None else repo
-    return F.pmod(F.xxhash64(r, F.col("path")), F.lit(n_buckets)).cast("int")
+def bucket_expr(n_buckets: int):
+    """Deterministic key -> bucket assignment (stable across epochs)."""
+    return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(n_buckets)).cast("int")
 
 
 # --- per-bucket repo bloom filters (manifest statistics) -------------------
@@ -143,14 +146,24 @@ BLOOM_BITS = 1024
 _BLOOM_SALT = 0x9E3779B9
 
 
-def _repo_bloom_pos_expr(repo: Column | None = None):
-    r = F.col("repo") if repo is None else repo
+def _repo_bloom_pos_expr():
+    r = F.col("repo")
     p1 = F.pmod(F.xxhash64(r), F.lit(BLOOM_BITS))
     p2 = F.pmod(F.xxhash64(r, F.lit(_BLOOM_SALT)), F.lit(BLOOM_BITS))
     return F.array(p1, p2)
 
 
-def _repo_bloom_positions(spark: SparkSession, repo: str) -> tuple[int, int]:
+def _bloom_bits(pos_pairs) -> int:
+    """OR the position pairs ``_repo_bloom_pos_expr`` collected into one
+    bucket's bloom bits."""
+    bits = 0
+    for pair in pos_pairs:
+        for p in pair:
+            bits |= 1 << int(p)
+    return bits
+
+
+def _repo_bloom_positions(repo: str) -> tuple[int, int]:
     """Driver-side probe — pure-python xxhash64 pinned bit-identical to
     the JVM expression by a property test (functions.xxhash; the round-3
     1-row Spark job cost a ~100ms scheduling round-trip per probe)."""
@@ -191,9 +204,9 @@ class LakeTable:
         self.spark = spark
         self.io = io if io is not None else io_for_root(spark, root)
         self.root = self.io.normalize_root(root)
-        self.io.makedirs(_join(self.root, "_snapshots"))
-        self.io.makedirs(_join(self.root, "data"))
-        self._manifest_cache: dict[int, dict] = {}
+        # opening creates nothing: ``_snapshots/`` appears with v1
+        self._manifest_cache: OrderedDict[int, dict] = OrderedDict()
+        self._manifest_lock = threading.Lock()
 
         committed = self.read_manifest()
         # track_changes is sticky like n_buckets: a table that ever
@@ -274,9 +287,11 @@ class LakeTable:
                 "n_buckets": None,
                 "changes": None,
             }
-        cached = self._manifest_cache.get(v)
-        if cached is not None:
-            return cached
+        with self._manifest_lock:
+            cached = self._manifest_cache.get(v)
+            if cached is not None:
+                self._manifest_cache.move_to_end(v)
+                return cached
         try:
             m = json.loads(self.io.read_text(self._manifest_path(v)))
         except FileNotFoundError:
@@ -293,7 +308,10 @@ class LakeTable:
                 f"only format_version {FORMAT_VERSION} — rebuild the table "
                 "from its changelog"
             )
-        self._manifest_cache[v] = m  # committed manifests are immutable
+        with self._manifest_lock:  # committed manifests are immutable
+            self._manifest_cache[v] = m
+            while len(self._manifest_cache) > self.MANIFEST_CACHE_SIZE:
+                self._manifest_cache.popitem(last=False)
         return m
 
     def _commit(self, manifest: dict) -> None:
@@ -312,6 +330,8 @@ class LakeTable:
         """
         v = manifest["version"]
         manifest["format_version"] = FORMAT_VERSION
+        if v == 1:
+            self.io.makedirs(_join(self.root, "_snapshots"))
         self.io.create_exclusive(self._manifest_path(v), json.dumps(manifest))
         try:
             self.io.write_text(self._hint_path(), str(v))
@@ -458,7 +478,7 @@ class LakeTable:
         Every write that lists a bucket's files also records its bloom
         (merge, DDL, rebucket), so a missing bloom is a broken manifest
         and fails here rather than silently forcing a read."""
-        p1, p2 = _repo_bloom_positions(self.spark, repo)
+        p1, p2 = _repo_bloom_positions(repo)
         blooms = manifest["repo_blooms"]
         out: list[int] = []
         for b in manifest["buckets"]:
@@ -528,6 +548,11 @@ class LakeTable:
     #: bounds the fold's own chain walk while keeping per-commit overhead
     #: amortized (one small parquet write per 64 commits).
     CKPT_FOLD_INTERVAL = 64
+
+    #: manifests one handle keeps cached (``read_manifest``), least
+    #: recently used evicted first: twice the lineage walk, so the walk
+    #: never evicts what it reads next
+    MANIFEST_CACHE_SIZE = 2 * CKPT_FOLD_INTERVAL
 
     def _ckpt_rollup_path(self, version: int) -> str:
         return _join(
@@ -735,14 +760,37 @@ class LakeTable:
         if self._epoch_applied(manifest, epoch, source) and not force:
             return MergeResult(epoch, False, 0, 0, 0, 0, 0)
         self._adopt_bucket_count(manifest)
+        return self._rewrite_buckets(
+            manifest, batch, epoch, source, t0, applied_files=applied_files
+        )
 
+    def _rewrite_buckets(
+        self,
+        manifest: dict,
+        batch: DataFrame,
+        epoch: int,
+        source: str,
+        t0: float,
+        applied_files: dict[str, int] | None = None,
+        ddl: bool = False,
+    ) -> MergeResult:
+        """The one copy-on-write rewrite behind MERGE and DDL (Delta
+        Lake's single rewrite path for DELETE/UPDATE/MERGE): bucket stats
+        -> touched-bucket state read -> union/winner shuffle -> overlapped
+        data and change writes -> staged-output check -> commit.
+
+        A batch with no rows commits an empty fenced epoch. ``ddl=True``
+        records the commit as one DDL: a single lineage row (bucket -1,
+        no hwm, so ``source_hwms`` never moves) whose ``rows_in`` counts
+        affected keys — one tombstone each.
+        """
         # persist: the batch feeds two actions (stats aggregation + the
         # bucket rewrite) — without this the whole upstream collapse runs
         # twice per epoch
         batch = batch.withColumn("bucket", bucket_expr(self.n_buckets)).persist()
 
         # rows_in = number of underlying change events when the batch is a
-        # collapse output (it carries n_events per key); else keys in batch.
+        # collapse output (it carries n_events per key); else rows in batch.
         rows_in_expr = (
             F.sum("n_events") if "n_events" in batch.columns else F.count(F.lit(1))
         )
@@ -761,27 +809,11 @@ class LakeTable:
             .collect()
         )
         if not stats:
-            # empty epoch still commits (advances the fence); changes=[]
-            # (tracked-but-empty), NOT None, so incremental diff ranges
-            # spanning this version stay incremental
             batch.unpersist()
-            self._commit(
-                self._next_manifest(
-                    manifest, epoch, {}, [],
-                    changes_entry=[] if self.track_changes else None,
-                    source=source, applied_files=applied_files,
-                )
-            )
-            return MergeResult(epoch, True, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
+            return self._commit_empty(manifest, epoch, source, t0, applied_files)
 
-        touched = sorted(int(r["bucket"]) for r in stats)
-        new_blooms: dict[str, int] = {}
-        for r in stats:
-            bits = 0
-            for pair in r["bloom_pos"]:
-                for p in pair:
-                    bits |= 1 << int(p)
-            new_blooms[str(int(r["bucket"]))] = bits
+        touched = sorted(r["bucket"] for r in stats)
+        new_blooms = {str(r["bucket"]): _bloom_bits(r["bloom_pos"]) for r in stats}
 
         state = self.read_state(buckets=touched)
         state = state.withColumn("bucket", bucket_expr(self.n_buckets))
@@ -855,12 +887,12 @@ class LakeTable:
         # listing came up empty, something deleted the staged output
         # between the write job and now (e.g. an over-aggressive external
         # cleaner, or a vacuum whose orphan grace is shorter than this
-        # write took). Fail the commit loudly so the retry recomputes,
-        # instead of committing a manifest that silently lost the bucket.
+        # write took). Fail loudly and commit nothing, instead of
+        # committing a manifest that silently lost the bucket.
         for r in stats:
-            if int(r["rows_upserted"]) > 0 and str(int(r["bucket"])) not in new_files:
+            if r["rows_upserted"] > 0 and str(r["bucket"]) not in new_files:
                 raise RuntimeError(
-                    f"staged state files for bucket {int(r['bucket'])} "
+                    f"staged state files for bucket {r['bucket']} "
                     f"vanished before commit (epoch {epoch}, {stage}) — "
                     "was vacuum run with an orphan grace shorter than this "
                     "write's duration?"
@@ -869,38 +901,52 @@ class LakeTable:
         # schema evolution: additive merge (new columns appended)
         new_schema = self._evolve_schema(manifest, new_state.drop("bucket").schema)
 
+        counts = ("rows_in", "rows_upserted", "rows_deleted")
+        per_bucket = [{k: r[k] for k in ("bucket", "hwm_seq", *counts)} for r in stats]
+        if ddl:
+            # one lineage row per DDL: no hwm, so source_hwms never moves,
+            # and rows_in counts affected keys (one tombstone each)
+            n = sum(r["rows_deleted"] for r in per_bucket)
+            per_bucket = [{
+                "bucket": -1, "hwm_seq": None, "rows_in": n,
+                "rows_upserted": sum(r["rows_upserted"] for r in per_bucket),
+                "rows_deleted": n,
+            }]
+        wall_ms = int((time.monotonic() - t0) * 1000)
         cp_rows = [
-            {
-                "epoch": epoch,
-                "bucket": int(r["bucket"]),
-                "hwm_seq": int(r["hwm_seq"]) if r["hwm_seq"] is not None else None,
-                "rows_in": int(r["rows_in"]),
-                "rows_upserted": int(r["rows_upserted"]),
-                "rows_deleted": int(r["rows_deleted"]),
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-                "status": "success",
-                "source": source,
-            }
-            for r in stats
+            {"epoch": epoch, **r, "wall_ms": wall_ms, "status": "success", "source": source}
+            for r in per_bucket
         ]
         nxt = self._next_manifest(
             manifest, epoch, new_files, cp_rows, touched, new_schema, changes_entry,
             source=source, new_blooms=new_blooms, applied_files=applied_files,
         )
         self._commit(nxt)
-
-        rows_in = sum(r["rows_in"] for r in stats)
-        rows_del = sum(r["rows_deleted"] for r in stats)
-        rows_ups = sum(r["rows_upserted"] for r in stats)
         return MergeResult(
-            epoch,
-            True,
-            len(touched),
-            rows_in,
-            rows_ups,
-            rows_del,
+            epoch, True, len(touched),
+            *(sum(r[k] for r in cp_rows) for k in counts),
             int((time.monotonic() - t0) * 1000),
         )
+
+    def _commit_empty(
+        self,
+        manifest: dict,
+        epoch: int,
+        source: str,
+        t0: float,
+        applied_files: dict[str, int] | None = None,
+    ) -> MergeResult:
+        """Commit an epoch that changes no row: it only advances the fence.
+        changes=[] (tracked-but-empty), NOT None, so incremental diff
+        ranges spanning this version stay incremental."""
+        self._commit(
+            self._next_manifest(
+                manifest, epoch, {}, [],
+                changes_entry=[] if self.track_changes else None,
+                source=source, applied_files=applied_files,
+            )
+        )
+        return MergeResult(epoch, True, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
 
     def _write_changes(self, manifest: dict, merged: DataFrame) -> list[str] | None:
         """Record this epoch's net-change rows (CDC out of the lake — the
@@ -986,7 +1032,7 @@ class LakeTable:
         self,
         epoch: int,
         action: str,
-        repo: str,
+        repo: str | None,
         new_repo: str | None = None,
         source: str = "",
     ) -> MergeResult:
@@ -999,194 +1045,57 @@ class LakeTable:
         self,
         epoch: int,
         action: str,
-        repo: str,
+        repo: str | None,
         new_repo: str | None = None,
         source: str = "",
     ) -> MergeResult:
-        """Apply a table-level DDL as its own fenced, atomic commit.
+        """Apply a DDL as its own fenced, atomic commit through the MERGE
+        rewrite (``_rewrite_buckets``).
 
-        ``action``: 'truncate' (or 'drop') deletes every key of ``repo``;
-        'rename' re-keys every row of ``repo`` to ``new_repo`` (keys move
-        to their new hash buckets). The engine's epoch planner guarantees
-        the flush-before-DDL barrier: all row events below the DDL's seq
-        are merged before this runs (reference
+        ``action``: 'truncate' (or 'drop') deletes every key of ``repo``:
+        the batch holds one ``(repo, path, stored seq, 'D')`` tombstone per
+        key, which beats its own stored row on the ``(seq, _pri)`` winner
+        order. 'rename' adds one ``(new_repo, path, stored seq, 'U',
+        payload)`` row per key, so the keys move to their new hash buckets
+        and a collision with an existing ``new_repo`` key resolves by the
+        engine-wide last-writer-wins rule (newest seq). The change rows
+        follow: D per vacated key; I, U or nothing per target key.
+        Barrier-only actions and a rename onto the same repo change no row
+        and commit an empty fenced epoch without a Spark job. The engine's
+        epoch planner guarantees the flush-before-DDL barrier: all row
+        events below the DDL's seq are merged before this runs (reference
         backup/handler/merge.go:147-166).
         """
+        if action not in ("truncate", "drop", "rename", *BARRIER_ACTIONS):
+            raise ValueError(f"unknown DDL action {action!r}")
         t0 = time.monotonic()
         manifest = self.read_manifest()
         if self._epoch_applied(manifest, epoch, source):
             return MergeResult(epoch, False, 0, 0, 0, 0, 0)
         self._adopt_bucket_count(manifest)
+        if action in BARRIER_ACTIONS or (action == "rename" and new_repo == repo):
+            return self._commit_empty(manifest, epoch, source, t0)
 
         # Bucket pruning via the manifest's per-bucket repo blooms: a DDL
         # on a repo confined to few buckets reads only those buckets (a
-        # manifest probe), not the table — the round-2 full-scan +
-        # two-driver-action cost is gone. Membership "no" is exact
+        # manifest probe), not the table. Membership "no" is exact
         # (monotone-superset blooms), so pruning can never miss rows.
         cand = self._buckets_maybe_containing(manifest, repo)
-        state = (
+        if not cand:
+            return self._commit_empty(manifest, epoch, source, t0)
+        # one scan of the candidates yields the tombstone and, for a
+        # rename, the re-keyed row of every affected key
+        ops = ["D", "U"] if action == "rename" else ["D"]
+        batch = (
             self.read_state(buckets=cand)
-            .withColumn("bucket", bucket_expr(self.n_buckets))
-            .persist()
+            .filter(F.col("repo") == repo)
+            .withColumn("op", F.explode(F.array(*[F.lit(o) for o in ops])))
+            .withColumn(
+                "repo",
+                F.when(F.col("op") == "U", F.lit(new_repo)).otherwise(F.col("repo")),
+            )
         )
-        affected = state.filter(F.col("repo") == repo)
-        # ONE aggregation yields the affected buckets, the count and, for
-        # a rename, the buckets the moved keys land in
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if action == "rename":
-            aggs.append(
-                F.collect_set(bucket_expr(self.n_buckets, F.lit(new_repo))).alias("tgt")
-            )
-        agg_rows = affected.groupBy("bucket").agg(*aggs).collect()
-        src_buckets = sorted(int(r["bucket"]) for r in agg_rows)
-        n_affected = sum(int(r["n"]) for r in agg_rows)
-
-        if not src_buckets:
-            state.unpersist()
-            self._commit(
-                self._next_manifest(
-                    manifest, epoch, {}, [],
-                    changes_entry=[] if self.track_changes else None,
-                    source=source,
-                )
-            )
-            return MergeResult(epoch, True, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
-
-        ddl_blooms: dict[str, int] | None = None
-        if action in ("truncate", "drop"):
-            touched = src_buckets
-            new_state = state.filter(
-                F.col("bucket").isin(touched) & (F.col("repo") != repo)
-            )
-            changes_src = affected.select(
-                *KEY_COLS,
-                F.lit("D").alias("diff_op"),
-                F.lit(manifest["version"] + 1).alias("version"),
-                F.col("seq"),
-                F.col("content").alias("old_content"),
-                F.lit(None).cast("string").alias("new_content"),
-                F.lit(None).cast("string").alias("new_commit"),
-            )
-            deleted, upserted = n_affected, 0
-        elif action == "rename":
-            moved = affected.drop("bucket").withColumn("repo", F.lit(new_repo))
-            tgt_buckets = sorted({int(b) for r in agg_rows for b in r["tgt"]})
-            touched = sorted(set(src_buckets) | set(tgt_buckets))
-            # rewrite input: candidate-bucket state already read (pruned),
-            # plus any rename-target buckets outside the candidate set
-            extra = sorted(set(touched) - set(cand))
-            base = state.filter(F.col("bucket").isin(touched))
-            if extra:
-                base = base.unionByName(
-                    self.read_state(buckets=extra).withColumn(
-                        "bucket", bucket_expr(self.n_buckets)
-                    )
-                )
-            combined = (
-                base.drop("bucket")
-                .filter(F.col("repo") != repo)
-                .unionByName(moved, allowMissingColumns=True)
-            )
-            # the moved repo's bloom bits join the target buckets
-            p1, p2 = _repo_bloom_positions(self.spark, new_repo)
-            ddl_blooms = {str(b): (1 << p1) | (1 << p2) for b in tgt_buckets}
-            # a rename INTO an existing repo can collide on (repo, path):
-            # resolve by the engine-wide last-writer-wins rule (newest seq)
-            payload = [c for c in combined.columns if c not in KEY_COLS]
-            new_state = (
-                combined.groupBy(*KEY_COLS)
-                .agg(F.max_by(F.struct(*payload), "seq").alias("_w"))
-                .select(
-                    *KEY_COLS, *[F.col(f"_w.{c}").alias(c) for c in payload]
-                )
-                .withColumn("bucket", bucket_expr(self.n_buckets))
-            )
-            d_rows = affected.select(
-                *KEY_COLS,
-                F.lit("D").alias("diff_op"),
-                F.lit(manifest["version"] + 1).alias("version"),
-                F.col("seq"),
-                F.col("content").alias("old_content"),
-                F.lit(None).cast("string").alias("new_content"),
-                F.lit(None).cast("string").alias("new_commit"),
-            )
-            # target-side change rows must reflect the ACTUAL transition:
-            # I when the target key did not exist, U when the moved row
-            # wins a collision, nothing when the pre-existing target wins.
-            # derived from the already-read (and largely persisted) input
-            # rather than a second read_state scan of the target buckets
-            tgt_prior = (
-                base.filter(
-                    F.col("bucket").isin(tgt_buckets)
-                    & (F.col("repo") == F.lit(new_repo))
-                )
-                .select(
-                    "path",
-                    F.col("seq").alias("_tseq"),
-                    F.col("content").alias("_tcontent"),
-                )
-            )
-            i_rows = (
-                moved.join(tgt_prior, "path", "left")
-                .filter(F.col("_tseq").isNull() | (F.col("seq") > F.col("_tseq")))
-                .select(
-                    *KEY_COLS,
-                    F.when(F.col("_tseq").isNull(), F.lit("I"))
-                    .otherwise(F.lit("U"))
-                    .alias("diff_op"),
-                    F.lit(manifest["version"] + 1).alias("version"),
-                    F.col("seq"),
-                    F.col("_tcontent").alias("old_content"),
-                    F.col("content").alias("new_content"),
-                    F.col("commit").alias("new_commit"),
-                )
-            )
-            changes_src = d_rows.unionByName(i_rows)
-            deleted, upserted = n_affected, n_affected
-        else:
-            state.unpersist()
-            raise ValueError(f"unknown DDL action {action!r}")
-
-        stage = _join(self.root, "data", f"ddl{epoch:06d}-{uuid.uuid4().hex[:8]}")
-        try:
-            # data-sized shuffle and overlapped writes, as in _merge_once:
-            # both writes read the persisted candidate-bucket state
-            changes_entry = self._write_overlapped(
-                lambda: new_state.repartition("bucket")
-                .write.partitionBy("bucket")
-                .option("compression", "zstd")
-                .mode("overwrite")
-                .parquet(stage),
-                (lambda: self._write_change_rows(manifest, changes_src))
-                if self.track_changes
-                else None,
-            )
-        finally:
-            state.unpersist()
-        new_files = self._staged_files(stage)
-
-        cp_rows = [
-            {
-                "epoch": epoch,
-                "bucket": -1,
-                "hwm_seq": None,
-                "rows_in": n_affected,
-                "rows_upserted": upserted,
-                "rows_deleted": deleted,
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-                "status": "success",
-                "source": source,
-            }
-        ]
-        nxt = self._next_manifest(
-            manifest, epoch, new_files, cp_rows, touched, None, changes_entry,
-            source=source, new_blooms=ddl_blooms,
-        )
-        self._commit(nxt)
-        return MergeResult(
-            epoch, True, len(touched), n_affected, upserted, deleted,
-            int((time.monotonic() - t0) * 1000),
-        )
+        return self._rewrite_buckets(manifest, batch, epoch, source, t0, ddl=True)
 
     # ---------------- diff (incremental changelog scan) ----------------
 
@@ -1487,29 +1396,14 @@ class LakeTable:
                 .agg(F.collect_set(_repo_bloom_pos_expr()).alias("bloom_pos"))
                 .collect()
             )
-            new_files: dict[str, list[str]] = {}
-            blooms: dict[str, str] = {}
-            for r in stats:
-                b = int(r["bucket"])
-                bdir = _join(stage, f"bucket={b}")
-                fs = sorted(
-                    _join(bdir, f)
-                    for f in self.io.list_names(bdir)
-                    if f.endswith(".parquet")
-                )
-                if fs:
-                    new_files[str(b)] = fs
-                bits = 0
-                for pair in r["bloom_pos"]:
-                    for p in pair:
-                        bits |= 1 << int(p)
-                blooms[str(b)] = f"{bits:x}"
             nxt = dict(manifest)
             nxt["version"] = manifest["version"] + 1
             nxt["checkpoints"] = []  # lineage delta: nothing applied
             nxt["changes"] = [] if self.track_changes else None
-            nxt["buckets"] = new_files
-            nxt["repo_blooms"] = blooms
+            nxt["buckets"] = self._staged_files(stage)
+            nxt["repo_blooms"] = {
+                str(r["bucket"]): f"{_bloom_bits(r['bloom_pos']):x}" for r in stats
+            }
             nxt["n_buckets"] = int(n_buckets_new)
             self._commit(nxt)
             self.n_buckets = int(n_buckets_new)
@@ -1695,7 +1589,8 @@ class LakeTable:
             for v in range(old_floor + 1, exp + 1):
                 p = self._manifest_path(v)
                 self.io.delete(p)
-                self._manifest_cache.pop(v, None)
+                with self._manifest_lock:
+                    self._manifest_cache.pop(v, None)
                 removed.append(p)
         floor = max(exp, old_floor)
         # ckpt rollup sidecars for folds at or below the floor belong to
@@ -1784,13 +1679,11 @@ class LakeTable:
             file_win[source] = entry
             file_floor[source] = floor
         wm, extra = self._advance_fence(manifest, epoch, source)
+        default_wm, default_extra = self._fence_of(manifest, "")
+        source_fences = dict(manifest.get("source_fences", {}))
         if source == "":
             default_wm, default_extra = wm, extra
-            source_fences = dict(manifest.get("source_fences", {}))
         else:
-            default_wm = manifest.get("epoch_watermark", -1)
-            default_extra = manifest.get("epochs_extra", [])
-            source_fences = dict(manifest.get("source_fences", {}))
             source_fences[source] = {"wm": wm, "extra": extra}
         nxt = {
             "version": manifest["version"] + 1,

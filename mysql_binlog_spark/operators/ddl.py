@@ -51,6 +51,8 @@ ACTION_CREATE_INDEX = "create_index"
 #: they have no per-table state effect. Dropping them silently would
 #: lose e.g. CREATE DATABASE / GRANT from the replayed stream.
 ACTION_UNKNOWN = "unknown"
+#: actions that change no row: each only fences its barrier position
+BARRIER_ACTIONS = (ACTION_CREATE, ACTION_ALTER, ACTION_CREATE_INDEX, ACTION_UNKNOWN)
 
 # name fragment: optionally backticked, optionally db-qualified; repo
 # names here may contain '-' (unlike MySQL's default identifier charset)
@@ -303,7 +305,8 @@ def snapshot_with_ddl(events: DataFrame, default_db: str = "main") -> DataFrame:
       seq (the lake path sees neither: dead keys are physically absent
       from state). Surviving rows keep their seq, so collisions resolve
       under the engine-wide last-writer-wins rule, exactly like
-      ``apply_repo_ddl``'s max_by collision resolve.
+      ``apply_repo_ddl``, whose re-keyed rows meet the target's rows in
+      the MERGE winner order (newest seq wins).
 
     Each rename adds one extra bounded collapse (shuffle) of the renamed
     repo's events — DDL is metadata-scale, so the plan stays shallow; a

@@ -456,3 +456,102 @@ def test_ddl_side_stream_fresh_and_stale(spark, tmp_path):
     events2 = read_changelog(spark, d)
     got = extract_ddl_ops_for_path(spark, d, events2)
     assert any(o.seq == 99991 and o.action == "truncate" for o in got)
+
+
+def test_self_rename_is_a_barrier(spark, tmp_path):
+    """RENAME a TO a changes no row: it commits an empty fenced epoch,
+    like ``snapshot_with_ddl`` leaves state as it is, and writes no
+    change rows (no D for keys that are still there)."""
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4, track_changes=True)
+    df = spark.createDataFrame(
+        [
+            ("a", "p1", 1, "I", "c1", None, "x"),
+            ("a", "p2", 2, "I", "c2", None, "y"),
+            ("b", "p1", 3, "I", "c3", None, "z"),
+        ],
+        "repo string, path string, seq long, op string, commit string, lang string, content string",
+    )
+    t.merge(df, epoch=0)
+    before = t.read_manifest()
+    res = t.apply_repo_ddl(1, "rename", "a", new_repo="a")
+    assert res.committed and res.buckets_touched == 0 and res.rows_in == 0
+    v = t.current_version()
+    assert t.read_manifest(v)["buckets"] == before["buckets"]
+    assert 1 in t.epochs_applied()
+    assert sorted((r.repo, r.path, r.content) for r in t.read_state().collect()) == [
+        ("a", "p1", "x"), ("a", "p2", "y"), ("b", "p1", "z"),
+    ]
+    assert t.diff(v - 1, v).collect() == t._diff_full(v - 1, v).collect() == []
+    assert t.diff(0, v).count() == t._diff_full(0, v).count() == 3
+
+
+def test_barrier_ddl_commits_without_a_spark_job(spark, tmp_path):
+    """CREATE, ALTER, CREATE INDEX and unattributed statements only fence
+    their plan position: each advances the fence, touches no bucket and
+    runs no Spark job. An action string outside the set is refused."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    df = spark.createDataFrame(
+        [("a", "p1", 1, "I", "c1", None, "x")],
+        "repo string, path string, seq long, op string, commit string, lang string, content string",
+    )
+    t.merge(df, epoch=0)
+    buckets = t.read_manifest()["buckets"]
+    sc.setJobGroup("barrier-ddl", "barrier-only DDL")
+    try:
+        for e, (action, repo) in enumerate(
+            [("create", "a"), ("alter", "a"), ("create_index", "a"), ("unknown", None)],
+            start=1,
+        ):
+            res = t.apply_repo_ddl(e, action, repo)
+            assert res.committed and res.buckets_touched == 0, action
+            assert e in t.epochs_applied(), action
+            assert t.read_manifest()["buckets"] == buckets, action
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(tracker.getJobIdsForGroup("barrier-ddl")) == []
+    v = t.current_version()
+    with pytest.raises(ValueError, match="unknown DDL action 'vacuum'"):
+        t.apply_repo_ddl(5, "vacuum", "a")
+    assert t.current_version() == v
+
+
+def test_pipeline_commits_barrier_entries_through_ddl(spark, tmp_path):
+    """The epoch pipeline hands every DDL entry, barrier-only ones
+    included, to ``apply_repo_ddl``: the CREATE TABLE entry is fenced
+    without a merge call."""
+    from mysql_binlog_spark.changelog.generator import EVENT_SCHEMA
+
+    cols = [
+        "repo", "path", "seq", "op", "commit", "lang", "content",
+        "before_content", "new_path", "statement",
+    ]
+    ev = pd.DataFrame(
+        [
+            ("a", "p1", 1, "I", "c1", None, "x", None, None, None),
+            ("a", "p2", 2, "I", "c2", None, "y", None, None, None),
+            ("_", "_", 3, "Q", "", None, None, None, None, "CREATE TABLE c (id int)"),
+            ("a", "p1", 4, "U", "c3", None, "z", "x", None, None),
+        ],
+        columns=cols,
+    )
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.Table.from_pandas(ev, schema=EVENT_SCHEMA, preserve_index=False), path
+    )
+    merged = []
+
+    class Spy(LakeTable):
+        def merge(self, batch, epoch, *args, **kwargs):
+            merged.append(epoch)
+            return super().merge(batch, epoch, *args, **kwargs)
+
+    t = Spy(spark, str(tmp_path / "lake"), n_buckets=4)
+    rep = run_ingest(spark, path, t, epoch_size=10)
+    assert rep.epochs_run == 3 and merged == [0, 2]
+    assert t.epochs_applied() == [0, 1, 2]
+    assert sorted((r.path, r.content) for r in t.read_state().collect()) == [
+        ("p1", "z"), ("p2", "y"),
+    ]

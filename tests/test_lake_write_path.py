@@ -170,3 +170,73 @@ def test_overlapped_change_write_keeps_callers_job_group(spark, tmp_path, monkey
     assert seen["group"] == "merge-under-test"
     assert seen["jobs"]
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_rename_into_existing_repo_diff_matches_full(spark, tmp_path):
+    """A rename into a repo that shares paths with the renamed one: the
+    moved row wins the collision on r0/p00 (newer seq), the existing
+    target row wins on r0/p03 (updated later). The change rows say so,
+    and the incremental diff equals the snapshot join over every range."""
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=16, track_changes=True)
+    _ingest(spark, t)
+    late = [("r0", "p03", 9000, "U", "z", None, "r0-late")]
+    t.merge(spark.createDataFrame(late, SCHEMA), epoch=5)
+    t.apply_repo_ddl(6, "rename", "r3", new_repo="r0")
+    head = t.current_version()
+
+    # expected: last writer wins per key, the DDLs, then the rename's
+    # collisions resolved by newest seq
+    state: dict[tuple[str, str], tuple[int, str]] = {}
+    for rows in _epochs() + [late]:
+        for repo, path, seq, op, _c, _l, content in rows:
+            key = ("r9" if repo == "r2" else repo, path)
+            if op == "D":
+                state.pop(key, None)
+            elif repo != "r1":
+                state[key] = (seq, content)
+    want_ops = {}
+    for (repo, path), (seq, content) in sorted(state.items()):
+        if repo != "r3":
+            continue
+        del state[(repo, path)]
+        want_ops[(repo, path)] = "D"
+        prior = state.get(("r0", path))
+        if prior is None or prior[0] < seq:
+            want_ops[("r0", path)] = "I" if prior is None else "U"
+            state[("r0", path)] = (seq, content)
+    assert want_ops[("r0", "p00")] == "U" and ("r0", "p03") not in want_ops
+
+    got = {(r["repo"], r["path"]): r["content"] for r in t.read_state().collect()}
+    assert got == {k: c for k, (_s, c) in state.items()}
+    last = t.diff(head - 1, head).toPandas()
+    assert dict(zip(zip(last.repo, last.path), last.diff_op)) == want_ops
+    for a in range(head):
+        pd.testing.assert_frame_equal(
+            _norm(t.diff(a, head)), _norm(t._diff_full(a, head)), check_dtype=False
+        )
+
+
+def test_ddl_fails_loudly_when_staged_files_vanish(spark, tmp_path, monkeypatch):
+    """A DDL whose staged output loses a bucket it moved rows into raises
+    before its commit and commits nothing; a rerun converges."""
+    from mysql_binlog_spark.functions.xxhash import pmod, spark_xxhash64
+
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=16, track_changes=True)
+    for e, rows in enumerate(_epochs()):
+        t.merge(spark.createDataFrame(rows, SCHEMA), epoch=e)
+    v = t.current_version()
+    lost = str(pmod(spark_xxhash64("r9", "p00"), 16))
+    real = LakeTable._staged_files
+
+    def lossy(self, stage):
+        return {b: fs for b, fs in real(self, stage).items() if b != lost}
+
+    monkeypatch.setattr(LakeTable, "_staged_files", lossy)
+    with pytest.raises(RuntimeError, match=f"bucket {lost} vanished"):
+        t.apply_repo_ddl(3, "rename", "r2", new_repo="r9")
+    assert t.current_version() == v
+    monkeypatch.undo()
+
+    t.apply_repo_ddl(3, "rename", "r2", new_repo="r9")
+    got = {(r["repo"], r["path"]): r["content"] for r in t.read_state().collect()}
+    assert got == _replay(_epochs(), "none", ("r2", "r9"))

@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import collections
 import os
+import random
+import sys
+import threading
 
 import pytest
 
@@ -188,3 +191,50 @@ def test_expire_respects_changes_floor_on_tracked_tables(spark, tmp_path):
     # incremental diff above the floor still works
     d = t.diff(cur - 1, t.current_version())
     assert d.count() == 0  # maintenance versions change nothing
+
+
+def test_manifest_cache_is_bounded(spark, tmp_path, monkeypatch):
+    """A long-lived handle keeps at most ``MANIFEST_CACHE_SIZE`` manifests
+    (at least one lineage walk) however many versions it commits, an
+    evicted version still reads back, and threads sharing the handle read
+    through the evicting cache without error."""
+    assert LakeTable.MANIFEST_CACHE_SIZE >= LakeTable.CKPT_FOLD_INTERVAL
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    t.merge(_batch(spark, 0), epoch=0)
+    for _ in range(LakeTable.MANIFEST_CACHE_SIZE + 20):
+        t._commit_maintenance(lambda nxt: None)
+        t.read_manifest()
+    head = t.current_version()
+    assert head > LakeTable.MANIFEST_CACHE_SIZE
+    assert len(t._manifest_cache) <= LakeTable.MANIFEST_CACHE_SIZE
+    assert 1 not in t._manifest_cache
+    assert t.read_manifest(1)["version"] == 1
+    assert sum(r["rows_in"] for r in t._checkpoint_rows()) == 1
+
+    # threads sharing the handle, as run_multi_source_ingest's sources
+    # do: a tiny bound makes every read race an eviction
+    monkeypatch.setattr(LakeTable, "MANIFEST_CACHE_SIZE", 4)
+    errors: list[BaseException] = []
+
+    def reader(seed: int) -> None:
+        rnd = random.Random(seed)
+        try:
+            for _ in range(2000):
+                v = rnd.randint(1, 8)
+                assert t.read_manifest(v)["version"] == v
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(t._manifest_cache) <= 4

@@ -91,3 +91,25 @@ def test_every_bucket_keeps_a_bloom(spark, tmp_path, monkeypatch):
         m = t.read_manifest(v)
         assert set(m["buckets"]) <= set(m["repo_blooms"]), v
     assert {r["repo"] for r in t.read_state().collect()} == {"c", "y", "z"}
+
+
+def test_open_of_missing_root_creates_nothing(spark, tmp_path, monkeypatch, capsys):
+    """Opening a root that holds no table creates nothing there, and a
+    CLI read refuses it, naming the path, instead of reporting an empty
+    version 0. The first commit creates the table."""
+    import mysql_binlog_spark.__main__ as cli
+    from mysql_binlog_spark import session
+
+    root = tmp_path / "no-such-table"
+    t = LakeTable(spark, str(root))
+    assert t.current_version() == 0
+    assert not root.exists()
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    argv = ["diff", "--table", str(root), "--from-version", "0", "--out", str(tmp_path / "o")]
+    assert cli.main(argv) == 2
+    assert str(root) in json.loads(capsys.readouterr().out.strip().splitlines()[-1])["error"]
+    assert not root.exists()
+
+    t.merge(_batch(spark, [("a", "p", 1, "I", "x", "c")]), epoch=0)
+    assert (root / "_snapshots").is_dir()
