@@ -60,6 +60,7 @@ Scale design (the part that must survive 100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import copy
 import json
 import logging
 import threading
@@ -79,9 +80,10 @@ from mysql_binlog_spark.operators.ddl import BARRIER_ACTIONS
 
 KEY_COLS = ["repo", "path"]
 
-#: on-disk manifest format: ``_commit`` stamps it, ``read_manifest``
-#: refuses a manifest without it or with another value (Delta Lake's
-#: ``minReaderVersion`` rule: refuse a table, never guess at it)
+#: on-disk manifest format: the v0 template carries it into every
+#: commit, and ``read_manifest`` refuses a manifest without it or with
+#: another value (Delta Lake's ``minReaderVersion`` rule: refuse a
+#: table, never guess at it)
 FORMAT_VERSION = 1
 
 CHECKPOINT_SCHEMA = T.StructType(
@@ -109,6 +111,55 @@ CHANGE_SCHEMA_DDL = (
     "repo string, path string, diff_op string, version long, seq long, "
     "old_content string, new_content string, new_commit string"
 )
+
+#: v0, the empty table, and the one declaration of every manifest field:
+#: ``read_manifest(0)`` returns a copy, and every commit derives its
+#: manifest from the previous one through ``_next_manifest``
+_EMPTY_MANIFEST = {
+    "format_version": FORMAT_VERSION,
+    "version": 0,
+    # the epoch id this version applied (maintenance carries it over)
+    "epoch": None,
+    # default-source fence: every epoch id <= watermark, plus the sparse
+    # set above it
+    "epoch_watermark": -1,
+    "epochs_extra": [],
+    # per-source fences {source: {"wm", "extra"}}: the GTID-set
+    # (per-UUID intervals) analog
+    "source_fences": {},
+    # bucket id -> live data files
+    "buckets": {},
+    # per-bucket repo membership blooms, hex (DDL bucket pruning)
+    "repo_blooms": {},
+    # running max applied seq per source (O(1) fence reads)
+    "source_hwms": {},
+    "schema": None,
+    # this version's lineage rows only — readers walk the chain back to
+    # the last rollup fold (``_checkpoint_rows``)
+    "checkpoints": [],
+    # version of the last lineage fold and its rollup sidecar
+    "ckpt_base": 0,
+    "ckpt_rollup_file": None,
+    # sticky, adopted at open: a default reopen must not remap keys or
+    # silently stop the change stream
+    "n_buckets": None,
+    "track_changes": False,
+    # this version's change files ([] = tracked-but-empty epoch, None =
+    # tracking off -> incremental diff falls back)
+    "changes": None,
+    # "a-b" -> net-change files covering versions (a, b]
+    "change_compactions": {},
+    # per-epoch change files at or below this version are retired
+    "changes_floor": 0,
+    # versions at or below this were swept by vacuum's file walk
+    "vacuum_horizon": 0,
+    # versions at or below this have had their manifests expired
+    "manifest_floor": 0,
+    # bounded per-source applied-file window [[md5-16, hi seq], ...] and
+    # the highest seq trimmed out of it
+    "applied_files": {},
+    "applied_floor": {},
+}
 
 
 @dataclass
@@ -180,6 +231,13 @@ def _join(*parts: str) -> str:
     return "/".join(p.rstrip("/") for p in parts)
 
 
+def _manifest_version(name: str) -> int | None:
+    """The version of a ``v{N}.json`` manifest file name, else None."""
+    if name.startswith("v") and name.endswith(".json") and name[1:-5].isdigit():
+        return int(name[1:-5])
+    return None
+
+
 class LakeTable:
     """A keyed lake table at ``root`` with atomic snapshot commits.
 
@@ -213,8 +271,8 @@ class LakeTable:
         # committed with tracking on keeps writing change files no matter
         # how it is reopened (a CLI open with the default constructor must
         # not silently stop the change stream and break incremental diff).
-        self.track_changes = bool(committed.get("track_changes")) or track_changes
-        stored = committed.get("n_buckets")
+        self.track_changes = committed["track_changes"] or track_changes
+        stored = committed["n_buckets"]
         if stored is not None:
             if n_buckets is not None and n_buckets != stored:
                 raise ValueError(
@@ -252,15 +310,8 @@ class LakeTable:
             while self.io.exists(self._manifest_path(v + 1)):
                 v += 1
             return v
-        best = 0
-        for fn in self.io.list_names(_join(self.root, "_snapshots")):
-            if fn.startswith("v") and fn.endswith(".json"):
-                try:
-                    v = int(fn[1:-5])
-                except ValueError:
-                    continue
-                best = max(best, v)
-        return best
+        vs = map(_manifest_version, self.io.list_names(_join(self.root, "_snapshots")))
+        return max((v for v in vs if v is not None), default=0)
 
     def _hint_path(self) -> str:
         return _join(self.root, "_snapshots", "version-hint.text")
@@ -274,19 +325,7 @@ class LakeTable:
         or not ``FORMAT_VERSION`` is refused before any field is used."""
         v = version if version is not None else self.current_version()
         if v == 0:
-            return {
-                "version": 0,
-                "epoch": None,
-                "epoch_watermark": -1,
-                "epochs_extra": [],
-                "buckets": {},
-                "repo_blooms": {},
-                "source_hwms": {},
-                "schema": None,
-                "checkpoints": [],
-                "n_buckets": None,
-                "changes": None,
-            }
+            return copy.deepcopy(_EMPTY_MANIFEST)
         with self._manifest_lock:
             cached = self._manifest_cache.get(v)
             if cached is not None:
@@ -329,7 +368,6 @@ class LakeTable:
         ``current_version`` to a forward probe from an older hint).
         """
         v = manifest["version"]
-        manifest["format_version"] = FORMAT_VERSION
         if v == 1:
             self.io.makedirs(_join(self.root, "_snapshots"))
         self.io.create_exclusive(self._manifest_path(v), json.dumps(manifest))
@@ -370,11 +408,9 @@ class LakeTable:
     @staticmethod
     def _fence_of(manifest: dict, source: str) -> tuple[int, list[int]]:
         if source == "":
-            return manifest.get("epoch_watermark", -1), manifest.get(
-                "epochs_extra", []
-            )
-        f = manifest.get("source_fences", {}).get(source, {})
-        return f.get("wm", -1), f.get("extra", [])
+            return manifest["epoch_watermark"], manifest["epochs_extra"]
+        f = manifest["source_fences"].get(source, {"wm": -1, "extra": []})
+        return f["wm"], f["extra"]
 
     def _epoch_applied(self, manifest: dict, epoch: int, source: str = "") -> bool:
         wm, extra = self._fence_of(manifest, source)
@@ -407,7 +443,7 @@ class LakeTable:
     def sources(self) -> list[str]:
         """Named sources that have committed epochs (the GTID-set's
         server-UUID list analog)."""
-        return sorted(self.read_manifest().get("source_fences", {}).keys())
+        return sorted(self.read_manifest()["source_fences"])
 
     # ---------------- applied-file window (streaming landing audit) --------
     #
@@ -432,23 +468,13 @@ class LakeTable:
 
         return hashlib.md5(name.encode()).hexdigest()[:16]
 
-    def applied_file_window(self, source: str = "") -> dict[str, int]:
-        m = self.read_manifest()
-        return {
-            k: int(hi)
-            for k, hi in m.get("applied_files", {}).get(source, [])
-        }
-
-    def applied_files_floor(self, source: str = "") -> int:
-        m = self.read_manifest()
-        return int(m.get("applied_floor", {}).get(source, -1))
-
     def file_applied_state(self, name: str, hi_seq: int, source: str = "") -> str:
         """'applied' (in the window -> replay), 'unseen' (within window
         coverage but never applied -> the loud-failure case), or
         'below_window' (older than the audit window -> unknowable)."""
-        win = self.applied_file_window(source)
-        floor = self.applied_files_floor(source)
+        m = self.read_manifest()
+        win = {k for k, _hi in m["applied_files"].get(source, [])}
+        floor = m["applied_floor"].get(source, -1)
         if not win and floor < 0:
             # no audit data at all: a batch-ingested table —
             # the conservative (pre-window) semantics apply
@@ -458,10 +484,6 @@ class LakeTable:
         if hi_seq <= floor:
             return "below_window"
         return "unseen"
-
-    def schema(self) -> T.StructType | None:
-        m = self.read_manifest()
-        return T.StructType.fromJson(m["schema"]) if m["schema"] else None
 
     # ---------------- reads ----------------
 
@@ -529,7 +551,7 @@ class LakeTable:
         point lookup touches one bucket's few files, not the table.
         """
         manifest = self.read_manifest(version)
-        n = int(manifest.get("n_buckets") or self.n_buckets)
+        n = manifest["n_buckets"] or self.n_buckets
         if path is not None:
             from mysql_binlog_spark.functions.xxhash import pmod, spark_xxhash64
 
@@ -565,19 +587,11 @@ class LakeTable:
         (driver-side pyarrow — lineage is metadata-rate; no Spark job)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
 
+        # CHECKPOINT_SCHEMA's types, every field nullable
         schema = pa.schema(
-            [
-                ("epoch", pa.int64()),
-                ("bucket", pa.int32()),
-                ("hwm_seq", pa.int64()),
-                ("rows_in", pa.int64()),
-                ("rows_upserted", pa.int64()),
-                ("rows_deleted", pa.int64()),
-                ("wall_ms", pa.int64()),
-                ("status", pa.string()),
-                ("source", pa.string()),
-            ]
+            [pa.field(f.name, to_arrow_type(f.dataType)) for f in CHECKPOINT_SCHEMA]
         )
         tbl = pa.Table.from_pylist(
             [{k: r.get(k) for k in schema.names} for r in rows], schema=schema
@@ -604,31 +618,22 @@ class LakeTable:
         manifests instead of walking every version ever committed. A
         commit that loses its race leaves the sidecar as an orphan
         (reclaimed by vacuum's ckpt sweep)."""
-        prev_base = int(prev.get("ckpt_base", 0) or 0)
-        nxt.setdefault("ckpt_base", prev_base)
-        nxt.setdefault("ckpt_rollup_file", prev.get("ckpt_rollup_file"))
-        if nxt["version"] - prev_base < self.CKPT_FOLD_INTERVAL:
+        if nxt["version"] - prev["ckpt_base"] < self.CKPT_FOLD_INTERVAL:
             return
-        rows = self._checkpoint_rows(head=prev) + [
-            dict(r) for r in nxt.get("checkpoints", [])
-        ]
+        rows = self._checkpoint_rows(head=prev) + nxt["checkpoints"]
         nxt["ckpt_rollup_file"] = self._write_ckpt_rollup(rows, nxt["version"])
         nxt["ckpt_base"] = nxt["version"]
 
     def _lineage(self, m: dict) -> tuple[str | None, list[dict]]:
         """(rollup sidecar of the last fold or None, the per-manifest
         lineage rows committed since it) as of head manifest ``m``."""
-        cur = int(m.get("version", 0) or 0)
-        base = int(m.get("ckpt_base", 0) or 0)
-        rf = None
-        if base:
-            bm = m if base == cur else self.read_manifest(base)
-            rf = bm.get("ckpt_rollup_file")
+        cur = m["version"]
         delta: list[dict] = []
-        for v in range(base + 1, cur + 1):
+        for v in range(m["ckpt_base"] + 1, cur + 1):
             mm = m if v == cur else self.read_manifest(v)
-            delta.extend(mm.get("checkpoints", []))
-        return rf, delta
+            delta.extend(mm["checkpoints"])
+        # every commit carries the last fold's sidecar forward
+        return m["ckpt_rollup_file"], delta
 
     def _checkpoint_rows(self, head: dict | None = None) -> list[dict]:
         """All committed lineage rows: the last rollup sidecar (folded
@@ -759,7 +764,7 @@ class LakeTable:
         manifest = self.read_manifest()
         if self._epoch_applied(manifest, epoch, source) and not force:
             return MergeResult(epoch, False, 0, 0, 0, 0, 0)
-        self._adopt_bucket_count(manifest)
+        self._adopt_sticky(manifest)
         return self._rewrite_buckets(
             manifest, batch, epoch, source, t0, applied_files=applied_files
         )
@@ -917,11 +922,16 @@ class LakeTable:
             {"epoch": epoch, **r, "wall_ms": wall_ms, "status": "success", "source": source}
             for r in per_bucket
         ]
-        nxt = self._next_manifest(
-            manifest, epoch, new_files, cp_rows, touched, new_schema, changes_entry,
-            source=source, new_blooms=new_blooms, applied_files=applied_files,
+        self._commit(
+            self._next_manifest(
+                manifest,
+                **self._epoch_fields(
+                    manifest, epoch, source, cp_rows, applied_files, new_files, new_blooms
+                ),
+                schema=new_schema,
+                changes=changes_entry,
+            )
         )
-        self._commit(nxt)
         return MergeResult(
             epoch, True, len(touched),
             *(sum(r[k] for r in cp_rows) for k in counts),
@@ -937,13 +947,12 @@ class LakeTable:
         applied_files: dict[str, int] | None = None,
     ) -> MergeResult:
         """Commit an epoch that changes no row: it only advances the fence.
-        changes=[] (tracked-but-empty), NOT None, so incremental diff
-        ranges spanning this version stay incremental."""
+        Its changes entry is [] on a tracked table (tracked-but-empty), NOT
+        None, so incremental diff ranges spanning this version stay
+        incremental."""
         self._commit(
             self._next_manifest(
-                manifest, epoch, {}, [],
-                changes_entry=[] if self.track_changes else None,
-                source=source, applied_files=applied_files,
+                manifest, **self._epoch_fields(manifest, epoch, source, [], applied_files)
             )
         )
         return MergeResult(epoch, True, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
@@ -983,11 +992,13 @@ class LakeTable:
         return self._write_change_rows(manifest, rows)
 
     def _write_change_rows(self, manifest: dict, rows: DataFrame) -> list[str]:
-        """Write the next version's change rows (CHANGE_SCHEMA_DDL) to a
-        fresh changes dir; returns its files for the manifest."""
-        cdir = _join(
-            self.root, "changes", f"v{manifest['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
+        """Write the next version's change rows (CHANGE_SCHEMA_DDL)."""
+        return self._write_change_dir(f"v{manifest['version'] + 1:08d}", rows)
+
+    def _write_change_dir(self, prefix: str, rows: DataFrame) -> list[str]:
+        """Write change rows to a fresh ``changes/{prefix}-{uuid}`` dir;
+        returns its files, listed once, for the manifest."""
+        cdir = _join(self.root, "changes", f"{prefix}-{uuid.uuid4().hex[:8]}")
         rows.write.option("compression", "zstd").mode("overwrite").parquet(cdir)
         return sorted(
             _join(cdir, f) for f in self.io.list_names(cdir) if f.endswith(".parquet")
@@ -1072,7 +1083,7 @@ class LakeTable:
         manifest = self.read_manifest()
         if self._epoch_applied(manifest, epoch, source):
             return MergeResult(epoch, False, 0, 0, 0, 0, 0)
-        self._adopt_bucket_count(manifest)
+        self._adopt_sticky(manifest)
         if action in BARRIER_ACTIONS or (action == "rename" and new_repo == repo):
             return self._commit_empty(manifest, epoch, source, t0)
 
@@ -1138,8 +1149,7 @@ class LakeTable:
         files vacuumed past the retention floor with no covering
         compaction)."""
         m = self.read_manifest()
-        comp = m.get("change_compactions", {})
-        floor = m.get("changes_floor", 0)
+        comp, floor = m["change_compactions"], m["changes_floor"]
         spans = sorted(
             ((tuple(int(x) for x in k.split("-"))), fl) for k, fl in comp.items()
         )
@@ -1156,7 +1166,7 @@ class LakeTable:
                 continue
             if v + 1 <= floor:
                 return None  # vacuumed per-epoch files, no compaction cover
-            entry = self.read_manifest(v + 1).get("changes")
+            entry = self.read_manifest(v + 1)["changes"]
             if entry is None:
                 return None
             files.extend(entry)
@@ -1263,28 +1273,23 @@ class LakeTable:
 
     # ---------------- maintenance ----------------
 
-    def _commit_maintenance(self, mutate) -> None:
+    def _commit_maintenance(self, mutate) -> dict:
         """Commit a metadata-only version: fences, buckets and schema are
         carried over unchanged; ``mutate(manifest)`` applies the
-        maintenance fields. Runs under the same optimistic-retry commit
-        protocol as data epochs."""
+        maintenance fields to the next manifest, re-derived from the head
+        on every attempt of the optimistic-retry commit protocol. Returns
+        the committed manifest. Maintenance versions count toward the
+        lineage fold interval like any other."""
 
         def attempt():
             m = self.read_manifest()
-            nxt = dict(m)
-            nxt["version"] = m["version"] + 1
-            nxt["checkpoints"] = []  # lineage delta: nothing applied
-            nxt["changes"] = [] if self.track_changes else None
-            nxt["n_buckets"] = self.n_buckets
-            nxt["track_changes"] = self.track_changes
-            # maintenance versions count toward the fold interval too — a
-            # long run of pure-maintenance commits must not regrow the
-            # lineage walk
-            self._maybe_fold_checkpoints(nxt, m)
+            self._adopt_sticky(m)
+            nxt = self._next_manifest(m)
             mutate(nxt)
             self._commit(nxt)
+            return nxt
 
-        self._with_commit_retries(attempt)
+        return self._with_commit_retries(attempt)
 
     def compact_changes(self, v_old: int, v_new: int) -> int:
         """Rewrite the per-epoch change files of (v_old, v_new] into ONE
@@ -1304,41 +1309,30 @@ class LakeTable:
                 f"range ({v_old}, {v_new}] has no complete change-file "
                 "cover — cannot compact"
             )
-        cdir = _join(
-            self.root, "changes", f"compact-{v_old:08d}-{v_new:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        if files:
-            # net rows keep (version, seq) of each key's last change, so
-            # the compacted set composes with later per-epoch rows under
-            # the same (version, seq) ordering
-            self._net_changes(files).write.option("compression", "zstd").mode(
-                "overwrite"
-            ).parquet(cdir)
-            out = sorted(
-                _join(cdir, f)
-                for f in self.io.list_names(cdir)
-                if f.endswith(".parquet")
-            )
-        else:
-            out = []
+        # net rows keep (version, seq) of each key's last change, so the
+        # compacted set composes with later per-epoch rows under the same
+        # (version, seq) ordering
+        out = self._write_change_dir(
+            f"compact-{v_old:08d}-{v_new:08d}", self._net_changes(files)
+        ) if files else []
         key = f"{v_old}-{v_new}"
 
         def mutate(nxt: dict) -> None:
-            comp = dict(nxt.get("change_compactions", {}))
-            comp[key] = out
-            nxt["change_compactions"] = comp
+            nxt["change_compactions"] = {**nxt["change_compactions"], key: out}
 
         self._commit_maintenance(mutate)
         return len(out)
 
-    def _adopt_bucket_count(self, manifest: dict) -> None:
-        """Re-adopt ``n_buckets`` from the committed manifest at the start
-        of every write attempt: a writer that loses an optimistic race to
-        a ``rebucket`` must retry its epoch under the NEW layout, not
-        scatter keys across a stale bucket count."""
-        stored = manifest.get("n_buckets")
-        if stored is not None and int(stored) != self.n_buckets:
-            self.n_buckets = int(stored)
+    def _adopt_sticky(self, manifest: dict) -> None:
+        """Re-adopt the sticky ``n_buckets`` and ``track_changes`` from the
+        committed manifest at the start of every write attempt, as the
+        open does: a writer that loses an optimistic race to a
+        ``rebucket`` must retry its epoch under the NEW layout, not
+        scatter keys across a stale bucket count, and a handle opened
+        before another turned change tracking on must not stamp it off."""
+        if manifest["n_buckets"] is not None:
+            self.n_buckets = manifest["n_buckets"]
+        self.track_changes = self.track_changes or manifest["track_changes"]
 
     def rebucket(self, n_buckets_new: int) -> int:
         """Partition evolution: rewrite the table's state into a new hash
@@ -1355,7 +1349,7 @@ class LakeTable:
         the bloom statistics). Concurrent writers lose the optimistic
         race and retry their epoch under the new layout — every write
         path re-adopts ``n_buckets`` from the manifest per attempt
-        (``_adopt_bucket_count``).
+        (``_adopt_sticky``).
 
         Fences, lineage, schema and change tracking carry over
         unchanged; the rebucket itself changes no logical row, so its
@@ -1374,6 +1368,7 @@ class LakeTable:
                 # empty table: the count is simply adopted at first merge
                 self.n_buckets = n_buckets_new
                 return
+            self._adopt_sticky(manifest)
             state = self.read_state()
             stage = _join(
                 self.root,
@@ -1396,17 +1391,17 @@ class LakeTable:
                 .agg(F.collect_set(_repo_bloom_pos_expr()).alias("bloom_pos"))
                 .collect()
             )
-            nxt = dict(manifest)
-            nxt["version"] = manifest["version"] + 1
-            nxt["checkpoints"] = []  # lineage delta: nothing applied
-            nxt["changes"] = [] if self.track_changes else None
-            nxt["buckets"] = self._staged_files(stage)
-            nxt["repo_blooms"] = {
-                str(r["bucket"]): f"{_bloom_bits(r['bloom_pos']):x}" for r in stats
-            }
-            nxt["n_buckets"] = int(n_buckets_new)
-            self._commit(nxt)
-            self.n_buckets = int(n_buckets_new)
+            self._commit(
+                self._next_manifest(
+                    manifest,
+                    buckets=self._staged_files(stage),
+                    repo_blooms={
+                        str(r["bucket"]): f"{_bloom_bits(r['bloom_pos']):x}" for r in stats
+                    },
+                    n_buckets=n_buckets_new,
+                )
+            )
+            self.n_buckets = n_buckets_new
 
         self._with_commit_retries(attempt)
         return self.current_version()
@@ -1422,7 +1417,8 @@ class LakeTable:
         manifests — the analog of the reference's rolling tar consolidation
         + cleanup (common/client/cfs.go:84-171). Never touches files a
         retained snapshot can still read. Manifests themselves are kept
-        (tiny; they carry the lineage chain); reading an expired older
+        unless ``expire_manifests`` (tiny; they carry the lineage chain);
+        reading an expired older
         version afterwards fails on its missing data files, exactly like
         Iceberg after expire_snapshots.
 
@@ -1448,52 +1444,63 @@ class LakeTable:
           whole staging window to the validate-to-commit gap.
 
         With ``change_retention_versions=N``, per-epoch change files of
-        versions <= current - N are retired and the floor advances (a
-        maintenance commit); ``diff`` over ranges below the floor falls
+        versions <= current - N are retired and the floor advances (in the
+        one maintenance commit below); ``diff`` over ranges below the floor falls
         back to the snapshot join EXPLICITLY instead of erroring —
         unless a compaction (``compact_changes``) covers the range.
         Without the parameter, referenced change files are kept forever.
 
         With ``expire_manifests=True``, manifest JSONs themselves are
-        expired (Iceberg expire_snapshots over metadata — the round-3
-        judge's remaining 100 TB blocker: a streamed table commits ~20k
-        manifests/day and they previously lived forever). The expiration
-        horizon is the MINIMUM of (a) the data-retention horizon
-        ``current - keep_versions``, (b) ``ckpt_base - 1`` — the lineage
-        chain below the last rollup fold is covered by the sidecar, but
-        the rollup manifest itself must survive (no fold yet = no
-        expiration: the chain is still the only lineage record), and
-        (c) for change-tracked tables, ``changes_floor`` — manifests
-        above it carry the per-epoch change-file lists incremental diff
-        reads. The new floor is committed BEFORE any manifest is deleted
-        (crash leaves retired-but-present files); reading an expired
-        version afterwards raises ValueError. Superseded ckpt rollup
-        sidecars at or below the floor are swept with the manifests.
+        expired (Iceberg expire_snapshots over metadata: a streamed table
+        commits ~20k manifests/day). The manifest floor is the MINIMUM of
+        (a) the data-retention horizon ``current - keep_versions``, (b)
+        ``ckpt_base - 1`` — the lineage chain below the last rollup fold is
+        covered by the sidecar, but the rollup manifest itself must survive
+        (no fold yet = no expiration: the chain is still the only lineage
+        record), and (c) for change-tracked tables, ``changes_floor`` —
+        manifests above it carry the per-epoch change-file lists
+        incremental diff reads. Reading an expired version afterwards
+        raises ValueError.
+
+        One commit, floors first: ``changes_floor``, ``vacuum_horizon``
+        (only once it saves >= 64 manifest reads) and ``manifest_floor``
+        are all decided from the head this call starts from and committed
+        in ONE maintenance version before anything is deleted, each raised
+        with ``max`` on the head it lands on, so a racing vacuum never
+        moves a floor backwards. A crash mid-sweep leaves only
+        retired-but-present files. The manifest sweep is one listing of
+        ``_snapshots/``: every ``v*.json`` at or below the committed floor
+        goes, so a sweep that crashed partway is finished by the next one,
+        together with the rollup sidecars of folds at or below the floor.
 
         Path comparison is safe against root-spelling drift because
         ``self.root`` is normalized at open and manifests record paths
         under the normalized root.
         """
-        import time as _time
-
-        cur = self.current_version()
-        # advance the changes floor FIRST: deletion only begins once the
-        # fallback decision is durable in the head manifest
-        head = self.read_manifest(cur) if cur else {}
-        floor = head.get("changes_floor", 0)
-        new_floor = floor
+        head = self.read_manifest()
+        cur, horizon = head["version"], head["vacuum_horizon"]
+        changes_floor = head["changes_floor"]
         if change_retention_versions is not None:
-            new_floor = max(floor, cur - change_retention_versions)
-        if new_floor != floor:
-            self._commit_maintenance(
-                lambda nxt: nxt.update({"changes_floor": new_floor})
+            changes_floor = max(changes_floor, cur - change_retention_versions)
+        floors = {"changes_floor": changes_floor}
+        if cur - keep_versions - horizon >= 64:
+            # an optimization hint, persisted only once it saves 64
+            # manifest reads (else one version of churn per vacuum). A
+            # crash after it lands turns what this sweep would have
+            # deleted into orphans, reclaimed after the grace
+            floors["vacuum_horizon"] = cur - keep_versions
+        if expire_manifests:
+            exp = min(cur - keep_versions, head["ckpt_base"] - 1)
+            floors["manifest_floor"] = min(exp, changes_floor) if self.track_changes else exp
+        committed = head
+        if any(v > head[k] for k, v in floors.items()):
+            committed = self._commit_maintenance(
+                lambda nxt: nxt.update({k: max(nxt[k], v) for k, v in floors.items()})
             )
-            cur = self.current_version()
-            head = self.read_manifest(cur)
 
         keep = set(range(max(1, cur - keep_versions + 1), cur + 1))
         # ONE manifest walk builds all four reference sets. The walk is
-        # bounded below by the committed ``vacuum_horizon``: versions a
+        # bounded below by the horizon this call started from: versions a
         # prior vacuum already swept can only reference (a) files also
         # referenced by newer versions — picked up there — or (b) files
         # that sweep deleted; a crash-survivor of (b) merely degrades
@@ -1501,14 +1508,13 @@ class LakeTable:
         # which is the safe direction. On a streamed table with tens of
         # thousands of micro-batch versions this turns O(all versions)
         # manifest GETs per vacuum into O(versions since last vacuum).
-        horizon = int(head.get("vacuum_horizon", 0))
-        # the walk must always cover the full keep window AND the full
+        # The walk must always cover the full keep window AND the full
         # change-retention window, even when a previous vacuum with a
         # narrower keep pushed the horizon above them — but can never
         # descend below the manifest floor (those manifests are gone;
         # files they alone referenced age into orphans, the safe class)
-        walk_from = min(horizon, max(0, cur - keep_versions), new_floor)
-        walk_from = max(walk_from, int(head.get("manifest_floor", 0)))
+        walk_from = min(horizon, max(0, cur - keep_versions), changes_floor)
+        walk_from = max(walk_from, head["manifest_floor"])
         live: set[str] = set()
         referenced: set[str] = set()
         live_chg: set[str] = set()
@@ -1519,16 +1525,15 @@ class LakeTable:
                 referenced.update(files)
                 if v in keep:
                     live.update(files)
-            entry = m.get("changes")
-            if entry:
-                ref_chg.update(entry)
-                if v > new_floor:
-                    live_chg.update(entry)
-        for _k, fl in head.get("change_compactions", {}).items():
+            if m["changes"]:
+                ref_chg.update(m["changes"])
+                if v > changes_floor:
+                    live_chg.update(m["changes"])
+        for fl in head["change_compactions"].values():
             live_chg.update(fl)  # compactions survive the floor by design
             ref_chg.update(fl)
 
-        now = _time.time()
+        now = time.time()
 
         def _reclaimable(p: str, referenced_set: set[str]) -> bool:
             if p in referenced_set:
@@ -1543,74 +1548,38 @@ class LakeTable:
                 return False
 
         removed: list[str] = []
-        for p in self.io.walk_files(_join(self.root, "data"), ".parquet"):
-            if p not in live and _reclaimable(p, referenced):
-                self.io.delete(p)
-                removed.append(p)
-        # changes/ deletions only run AFTER the floor committed above
-        for p in self.io.walk_files(_join(self.root, "changes"), ".parquet"):
-            if p not in live_chg and _reclaimable(p, ref_chg):
-                self.io.delete(p)
-                removed.append(p)
+        for sub, live_set, ref_set in (
+            ("data", live, referenced), ("changes", live_chg, ref_chg)
+        ):
+            for p in self.io.walk_files(_join(self.root, sub), ".parquet"):
+                if p not in live_set and _reclaimable(p, ref_set):
+                    self.io.delete(p)
+                    removed.append(p)
+        if not expire_manifests:
+            return removed
 
-        # Advance the walk horizon (an optimization hint — a crash before
-        # this commit only means the next vacuum re-reads more manifests).
-        # Only persisted once it would save a meaningful number of
-        # manifest reads: committing it every run would add one version
-        # of churn per vacuum on small tables for nothing.
-        new_horizon = max(horizon, cur - keep_versions)
-        if new_horizon - horizon >= 64:
-            self._commit_maintenance(
-                lambda nxt: nxt.update({"vacuum_horizon": new_horizon})
-            )
-
-        if expire_manifests:
-            removed.extend(self._expire_manifests(keep_versions, now, orphan_grace_sec))
-        return removed
-
-    def _expire_manifests(
-        self, keep_versions: int, now: float, orphan_grace_sec: float
-    ) -> list[str]:
-        """Expire manifest JSONs + superseded ckpt rollups (see vacuum)."""
-        cur = self.current_version()
-        head = self.read_manifest(cur) if cur else {}
-        base = int(head.get("ckpt_base", 0) or 0)
-        old_floor = int(head.get("manifest_floor", 0) or 0)
-        exp = min(max(0, cur - keep_versions), base - 1)
-        if self.track_changes:
-            exp = min(exp, int(head.get("changes_floor", 0)))
-        removed: list[str] = []
-        if exp > old_floor:
-            # durable decision first: a crash mid-delete leaves
-            # expired-but-present manifests, reclaimed next run
-            self._commit_maintenance(
-                lambda nxt: nxt.update({"manifest_floor": exp})
-            )
-            for v in range(old_floor + 1, exp + 1):
-                p = self._manifest_path(v)
-                self.io.delete(p)
-                with self._manifest_lock:
-                    self._manifest_cache.pop(v, None)
-                removed.append(p)
-        floor = max(exp, old_floor)
-        # ckpt rollup sidecars for folds at or below the floor belong to
-        # expired manifests (the live rollup's fold version is ckpt_base
-        # > floor by construction); same-version losers of fold races are
-        # plain orphans, reclaimed by mtime past the grace
-        live_rf = head.get("ckpt_rollup_file")
+        floor = committed["manifest_floor"]
         sdir = _join(self.root, "_snapshots")
         for fn in self.io.list_names(sdir):
+            p = _join(sdir, fn)
+            v = _manifest_version(fn)
+            if v is not None:
+                if v <= floor:
+                    self.io.delete(p)  # a failed delete raises
+                    with self._manifest_lock:
+                        self._manifest_cache.pop(v, None)
+                    removed.append(p)
+                continue
+            # ckpt rollup sidecars of folds at or below the floor belong to
+            # expired manifests (the live rollup's fold version is
+            # ckpt_base > floor by construction); same-version losers of
+            # fold races are plain orphans, reclaimed by mtime past the grace
             if not (fn.startswith("ckpt-v") and fn.endswith(".parquet")):
                 continue
-            p = _join(sdir, fn)
-            if p == live_rf:
+            if p == committed["ckpt_rollup_file"] or not fn[6:14].isdigit():
                 continue
             try:
-                fold_v = int(fn[6:14])
-            except ValueError:
-                continue
-            try:
-                if fold_v <= floor or now - self.io.mtime(p) > orphan_grace_sec:
+                if int(fn[6:14]) <= floor or now - self.io.mtime(p) > orphan_grace_sec:
                     self.io.delete(p)
                     removed.append(p)
             except Exception:  # noqa: BLE001 - concurrently deleted
@@ -1630,42 +1599,62 @@ class LakeTable:
                 fields.append(T.StructField(f.name, f.dataType, True))
         return T.StructType(fields).jsonValue()
 
-    def _next_manifest(
+    def _next_manifest(self, prev: dict, **fields) -> dict:
+        """THE manifest transition; every commit's manifest is built here
+        (Delta Lake: each commit is a set of actions applied to the
+        previous table state). Version ``prev + 1`` carries every field of
+        ``prev`` except this version's own lineage rows (none) and change
+        files ([] when tracked, None when not), stamps the sticky
+        ``n_buckets`` and ``track_changes``, applies ``fields``, then runs
+        the lineage fold."""
+        nxt = {
+            **prev,
+            "version": prev["version"] + 1,
+            "checkpoints": [],
+            "changes": [] if self.track_changes else None,
+            "n_buckets": self.n_buckets,
+            "track_changes": self.track_changes,
+            **fields,
+        }
+        self._maybe_fold_checkpoints(nxt, prev)
+        return nxt
+
+    def _epoch_fields(
         self,
         manifest: dict,
         epoch: int,
-        new_files: dict[str, list[str]],
+        source: str,
         cp_rows: list[dict],
-        touched: list[int] | None = None,
-        new_schema: dict | None = None,
-        changes_entry: list[str] | None = None,
-        source: str = "",
-        new_blooms: dict[str, int] | None = None,
-        applied_files: dict[str, int] | None = None,
+        applied_files: dict[str, int] | None,
+        new_files: dict[str, list[str]] = {},
+        new_blooms: dict[str, int] = {},
     ) -> dict:
-        buckets = dict(manifest["buckets"])
-        for b in touched or []:
-            buckets.pop(str(b), None)  # touched bucket fully rewritten
+        """The manifest fields a fenced epoch sets: its fence, its lineage
+        rows, the buckets it rewrote (every bucket in ``new_blooms``; one
+        whose keys were all deleted has no ``new_files`` entry and drops
+        out) with their blooms, the running seq watermark of ``source``
+        and its applied-file window."""
+        buckets = {b: fs for b, fs in manifest["buckets"].items() if b not in new_blooms}
         buckets.update(new_files)
-        # per-bucket repo blooms: OR-accumulate this epoch's batch bits
-        # into the committed blooms (monotone superset; hex-encoded)
+        # OR-accumulate this epoch's batch bits into the committed blooms
+        # (monotone superset; hex-encoded)
         blooms = dict(manifest["repo_blooms"])
-        for b, bits in (new_blooms or {}).items():
+        for b, bits in new_blooms.items():
             blooms[b] = f"{int(blooms.get(b, '0'), 16) | bits:x}"
-        # running per-source seq watermark (O(1) high_watermark reads)
-        source_hwms = dict(manifest["source_hwms"])
-        epoch_hwm = max(
-            (r["hwm_seq"] for r in cp_rows if r.get("hwm_seq") is not None),
-            default=None,
-        )
-        if epoch_hwm is not None:
-            source_hwms[source] = max(int(source_hwms.get(source, -1)), int(epoch_hwm))
-        # bounded applied-file audit window (streaming landing guard):
-        # FIFO per source; trimmed entries raise the per-source floor
-        file_win = {s: list(v) for s, v in manifest.get("applied_files", {}).items()}
-        file_floor = dict(manifest.get("applied_floor", {}))
+        fields = {"epoch": epoch, "checkpoints": cp_rows, "buckets": buckets, "repo_blooms": blooms}
+        hwms = [r["hwm_seq"] for r in cp_rows if r["hwm_seq"] is not None]
+        if hwms:
+            hw = manifest["source_hwms"]
+            fields["source_hwms"] = {**hw, source: max(hw.get(source, -1), *hwms)}
+        wm, extra = self._advance_fence(manifest, epoch, source)
+        if source == "":
+            fields.update(epoch_watermark=wm, epochs_extra=extra)
+        else:
+            fences = manifest["source_fences"]
+            fields["source_fences"] = {**fences, source: {"wm": wm, "extra": extra}}
         if applied_files:
-            entry = file_win.get(source, [])
+            # bounded FIFO per source; trimmed entries raise its floor
+            entry = list(manifest["applied_files"].get(source, []))
             seen = {k: i for i, (k, _hi) in enumerate(entry)}
             for name, hi in applied_files.items():
                 k = self._file_key(name)
@@ -1673,50 +1662,9 @@ class LakeTable:
                     entry[seen[k]] = [k, max(int(entry[seen[k]][1]), int(hi))]
                 else:
                     entry.append([k, int(hi)])
-            floor = int(file_floor.get(source, -1))
+            floor = manifest["applied_floor"].get(source, -1)
             while len(entry) > self.APPLIED_FILES_WINDOW:
                 floor = max(floor, int(entry.pop(0)[1]))
-            file_win[source] = entry
-            file_floor[source] = floor
-        wm, extra = self._advance_fence(manifest, epoch, source)
-        default_wm, default_extra = self._fence_of(manifest, "")
-        source_fences = dict(manifest.get("source_fences", {}))
-        if source == "":
-            default_wm, default_extra = wm, extra
-        else:
-            source_fences[source] = {"wm": wm, "extra": extra}
-        nxt = {
-            "version": manifest["version"] + 1,
-            "epoch": epoch,
-            "epoch_watermark": default_wm,
-            "epochs_extra": default_extra,
-            # per-source fences: the GTID-set (per-UUID intervals) analog
-            "source_fences": source_fences,
-            "buckets": buckets,
-            # per-bucket repo membership blooms (DDL bucket pruning)
-            "repo_blooms": blooms,
-            # running max applied seq per source (O(1) fence reads)
-            "source_hwms": source_hwms,
-            "schema": new_schema or manifest["schema"],
-            # delta only — readers walk the chain (see _checkpoint_rows)
-            "checkpoints": cp_rows,
-            "n_buckets": self.n_buckets,
-            # sticky: adopted at open like n_buckets (ADVICE: a default
-            # reopen must not silently stop the change stream)
-            "track_changes": self.track_changes,
-            # change-stream / vacuum maintenance state carried across commits
-            "change_compactions": manifest.get("change_compactions", {}),
-            "changes_floor": manifest.get("changes_floor", 0),
-            "vacuum_horizon": manifest.get("vacuum_horizon", 0),
-            # versions at or below this have had their manifests expired
-            "manifest_floor": manifest.get("manifest_floor", 0),
-            # bounded per-source applied-file window + trim floor
-            "applied_files": file_win,
-            "applied_floor": file_floor,
-            # this COMMIT's change files ([] = tracked-but-empty epoch,
-            # None = tracking off -> incremental diff falls back)
-            "changes": changes_entry if self.track_changes else None,
-        }
-        # lineage rollup fold (sets/carries ckpt_base + ckpt_rollup_file)
-        self._maybe_fold_checkpoints(nxt, manifest)
-        return nxt
+            fields["applied_files"] = {**manifest["applied_files"], source: entry}
+            fields["applied_floor"] = {**manifest["applied_floor"], source: floor}
+        return fields

@@ -257,6 +257,23 @@ def test_track_changes_sticky_across_reopen(spark, tmp_path):
     assert sorted(d.path) == ["p1", "p2"]
 
 
+def test_stale_untracked_handle_adopts_tracking(spark, tmp_path):
+    """A handle opened before another handle turned change tracking on
+    adopts it at its next write, maintenance included, instead of
+    stamping it off for every later open."""
+    root = str(tmp_path / "lake")
+    t1 = LakeTable(spark, root, n_buckets=4)
+    t1.merge(_rows(spark, [("a", "p1", 1, "I", "c", None, "x")]), epoch=0)
+    t2 = LakeTable(spark, root, track_changes=True)
+    t2.merge(_rows(spark, [("a", "p2", 2, "I", "c", None, "y")]), epoch=1)
+    t1._commit_maintenance(lambda nxt: None)
+    t1.merge(_rows(spark, [("a", "p3", 3, "I", "c", None, "z")]), epoch=2)
+    assert LakeTable(spark, root).track_changes is True
+    head = t1.current_version()
+    assert t1._incremental_change_files(1, head) is not None
+    assert sorted(t1.diff(1, head).toPandas().path) == ["p2", "p3"]
+
+
 # ---------------------------------------------------------------------------
 # ADVICE low: packed wire records carry a version byte + length check
 # ---------------------------------------------------------------------------

@@ -210,3 +210,45 @@ def test_vacuum_horizon_bounds_manifest_walk(spark, tmp_path):
     t.vacuum(keep_versions=1)
     assert t.current_version() == v
     assert t.read_state().count() == n_live
+
+
+def test_racing_vacuum_never_lowers_a_floor(tracked, monkeypatch):
+    """Two handles vacuum one table at once: the loser of the commit race
+    re-derives its maintenance version from the winner's head and may only
+    raise a floor, never put back the lower value it worked out from the
+    older head. And one vacuum that moves every floor commits once."""
+    a = tracked
+    for _ in range(4):
+        a._commit_maintenance(lambda nxt: None)
+    head = a.current_version()
+    b = LakeTable(a.spark, a.root)
+    real_create = a.io.create_exclusive
+    rival = []
+
+    def create_after_rival(path, data):
+        if not rival:
+            rival.append(b.vacuum(keep_versions=1, change_retention_versions=1))
+        real_create(path, data)
+
+    monkeypatch.setattr(a.io, "create_exclusive", create_after_rival)
+    a.vacuum(change_retention_versions=5)
+    monkeypatch.undo()
+    assert rival
+    # B committed head + 1 with floor head - 1; A lost that race and
+    # committed head + 2 from B's manifest, its own head - 5 notwithstanding
+    assert b.read_manifest(head + 1)["changes_floor"] == head - 1
+    assert a.current_version() == head + 2
+    assert a.read_manifest()["changes_floor"] == head - 1
+
+
+def test_vacuum_moving_every_floor_commits_once(tracked):
+    t = tracked
+    for _ in range(LakeTable.CKPT_FOLD_INTERVAL + 8):
+        t._commit_maintenance(lambda nxt: None)
+    before = t.read_manifest()
+    assert before["ckpt_base"] > 0
+    t.vacuum(keep_versions=1, change_retention_versions=1, expire_manifests=True)
+    after = t.read_manifest()
+    assert t.current_version() == before["version"] + 1
+    for k in ("changes_floor", "vacuum_horizon", "manifest_floor"):
+        assert after[k] > before[k], k

@@ -238,3 +238,41 @@ def test_manifest_cache_is_bounded(spark, tmp_path, monkeypatch):
     assert not any(th.is_alive() for th in threads)
     assert errors == []
     assert len(t._manifest_cache) <= 4
+
+
+def test_expiry_crash_leaks_no_manifest(spark, tmp_path, monkeypatch):
+    """A vacuum that crashes partway through its manifest sweep leaves
+    expired-but-present manifests; the next vacuum's sweep reclaims every
+    one of them, and the head still reads."""
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=2)
+    t.merge(_batch(spark, 0), epoch=0)
+    for _ in range(2 * LakeTable.CKPT_FOLD_INTERVAL):
+        t._commit_maintenance(lambda nxt: None)
+
+    real_delete = t.io.delete
+    json_deletes = []
+
+    def crashing_delete(p):
+        if p.endswith(".json"):
+            json_deletes.append(p)
+            if len(json_deletes) == 3:
+                raise RuntimeError("simulated crash mid-sweep")
+        real_delete(p)
+
+    monkeypatch.setattr(t.io, "delete", crashing_delete)
+    with pytest.raises(RuntimeError, match="mid-sweep"):
+        t.vacuum(keep_versions=1, expire_manifests=True)
+    monkeypatch.undo()
+
+    t.vacuum(keep_versions=1, expire_manifests=True)
+    floor = t.read_manifest()["manifest_floor"]
+    assert floor > 2
+    snap_dir = os.path.join(t.root, "_snapshots")
+    leaked = [
+        f for f in os.listdir(snap_dir)
+        if f.startswith("v") and f.endswith(".json") and int(f[1:-5]) <= floor
+    ]
+    assert leaked == []
+    t2 = LakeTable(spark, t.root)
+    assert {r["path"] for r in t2.read_state().collect()} == {"p0"}
+    assert sum(r["rows_in"] for r in t2._checkpoint_rows()) == 1

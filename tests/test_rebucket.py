@@ -102,3 +102,20 @@ def test_rebucket_empty_table_adopts_count(spark, tmp_path):
     assert t.n_buckets == 32
     with pytest.raises(ValueError):
         t.rebucket(0)
+
+
+def test_stale_handle_maintenance_keeps_rebucket_count(spark, ingested):
+    """A maintenance commit (vacuum, compaction) from a handle opened
+    before another handle rebucketed must carry the NEW bucket count:
+    stamping its stale count would make every later open hash keys into
+    the wrong buckets."""
+    t = ingested["table"]
+    t2 = LakeTable(spark, ingested["root"], track_changes=True)
+    before = _snap(t)
+    t.rebucket(8)
+    t2.vacuum(keep_versions=100, change_retention_versions=1)
+    assert t2.read_manifest()["n_buckets"] == 8
+    t3 = LakeTable(spark, ingested["root"])
+    assert t3.n_buckets == 8
+    r = before.iloc[0]
+    assert t3.lookup(r["repo"], r["path"]).count() == 1

@@ -314,7 +314,7 @@ def test_stream_detects_never_applied_late_file(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert table.high_watermark() == 1199
-    assert len(table.applied_file_window()) == 2
+    assert len(table.read_manifest()["applied_files"][""]) == 2
 
     # a pure replay (checkpoint wipe) of the SAME files passes the audit
     q_replay = stream_ingest(
