@@ -16,8 +16,8 @@ keeps only the tail of stdout can still parse the last line:
 Env knobs:
   SPARK_GRAFT_SF_DIR      sf dir for the query suite (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS        local[] parallelism (default 32)
-  SPARK_GRAFT_BENCH_EVENTS  changelog size for the ingest bench (default 2_000_000)
-  SPARK_GRAFT_BENCH_MODE  all | ingest | queries (default all)
+  SPARK_GRAFT_BENCH_EVENTS  changelog size for the ingest bench (default 4_000_000)
+  SPARK_GRAFT_BENCH_MODE  all | ingest | replay | queries (default all)
 """
 
 from __future__ import annotations
@@ -30,6 +30,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import functions as F
 
 from mysql_binlog_spark.changelog.generator import (
     ChangelogSpec,
@@ -112,6 +114,12 @@ def _warmup(spark, events_path: str) -> None:
         shutil.rmtree(scratch, ignore_errors=True)
 
 
+def _row_events(spark, events_path: str) -> int:
+    """The changelog's row events (``op != 'Q'``): the count both ingest
+    and replay throughput divide by, before rename expansion."""
+    return spark.read.parquet(events_path).filter(F.col("op") != "Q").count()
+
+
 def bench_ingest(spark, n_events: int, epochs: int = 4, reps: int | None = None) -> dict:
     """Best-of-``reps`` end-to-end ingest (fresh table per rep).
 
@@ -123,6 +131,7 @@ def bench_ingest(spark, n_events: int, epochs: int = 4, reps: int | None = None)
     if reps is None:
         reps = int(os.environ.get("SPARK_GRAFT_BENCH_INGEST_REPS", "2"))
     events_path = ensure_changelog(n_events)
+    n = _row_events(spark, events_path)
     _warmup(spark, events_path)
     runs: list[dict] = []
     for _ in range(max(reps, 1)):
@@ -136,12 +145,10 @@ def bench_ingest(spark, n_events: int, epochs: int = 4, reps: int | None = None)
             wall = time.monotonic() - t0
             runs.append(
                 {
-                    "n_events": report.events_in,
+                    "n_events": n,
                     "epochs": report.epochs_run,
                     "wall_sec": round(wall, 3),
-                    "events_per_sec": round(report.events_in / wall, 1)
-                    if wall
-                    else 0.0,
+                    "events_per_sec": round(n / wall, 1) if wall else 0.0,
                 }
             )
         finally:
@@ -171,15 +178,13 @@ def bench_replay(spark, n_events: int) -> dict:
     events_path = ensure_changelog(n_events)
     ev = spark.read.parquet(events_path)
     # warmup (JIT) on a prefix
-    from pyspark.sql import functions as F
-
     snapshot_from_events(ev.filter(F.col("seq") < 100_000)).write.format(
         "noop"
     ).mode("overwrite").save()
     t0 = time.monotonic()
     snapshot_from_events(ev).write.format("noop").mode("overwrite").save()
     wall = time.monotonic() - t0
-    n = ev.count()
+    n = _row_events(spark, events_path)
     return {
         "n_events": n,
         "wall_sec": round(wall, 3),

@@ -217,11 +217,18 @@ class LocalTableIO:
 
     def create_exclusive(self, path: str, data: str) -> None:
         """Atomically create ``path`` with ``data``; FileExistsError if it
-        already exists. THE commit linearization point."""
-        with open(path, "x") as f:
+        already exists. THE commit linearization point: the complete file
+        is hard-linked into place, so a concurrent reader never sees it
+        created but not yet written."""
+        tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
+        with open(tmp, "x") as f:
             f.write(data)
             f.flush()
             os.fsync(f.fileno())
+        try:
+            os.link(tmp, path)
+        finally:
+            os.unlink(tmp)
 
     def write_text(self, path: str, data: str) -> None:
         """Overwrite ``path`` atomically (tmp + rename). NOT a commit —

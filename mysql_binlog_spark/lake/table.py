@@ -1273,16 +1273,20 @@ class LakeTable:
 
     # ---------------- maintenance ----------------
 
-    def _commit_maintenance(self, mutate) -> dict:
+    def _commit_maintenance(self, mutate, needed=lambda head: True) -> dict:
         """Commit a metadata-only version: fences, buckets and schema are
         carried over unchanged; ``mutate(manifest)`` applies the
         maintenance fields to the next manifest, re-derived from the head
-        on every attempt of the optimistic-retry commit protocol. Returns
-        the committed manifest. Maintenance versions count toward the
+        on every attempt of the optimistic-retry commit protocol. An
+        attempt whose head fails ``needed(head)`` (a rival already
+        committed the change) commits nothing. Returns the committed
+        manifest, or that head. Maintenance versions count toward the
         lineage fold interval like any other."""
 
         def attempt():
             m = self.read_manifest()
+            if not needed(m):
+                return m
             self._adopt_sticky(m)
             nxt = self._next_manifest(m)
             mutate(nxt)
@@ -1467,7 +1471,8 @@ class LakeTable:
         are all decided from the head this call starts from and committed
         in ONE maintenance version before anything is deleted, each raised
         with ``max`` on the head it lands on, so a racing vacuum never
-        moves a floor backwards. A crash mid-sweep leaves only
+        moves a floor backwards; a vacuum that lost the race to a head
+        already carrying each of its floors commits nothing. A crash mid-sweep leaves only
         retired-but-present files. The manifest sweep is one listing of
         ``_snapshots/``: every ``v*.json`` at or below the committed floor
         goes, so a sweep that crashed partway is finished by the next one,
@@ -1492,10 +1497,15 @@ class LakeTable:
         if expire_manifests:
             exp = min(cur - keep_versions, head["ckpt_base"] - 1)
             floors["manifest_floor"] = min(exp, changes_floor) if self.track_changes else exp
+
+        def raises_a_floor(m: dict) -> bool:
+            return any(v > m[k] for k, v in floors.items())
+
         committed = head
-        if any(v > head[k] for k, v in floors.items()):
+        if raises_a_floor(head):
             committed = self._commit_maintenance(
-                lambda nxt: nxt.update({k: max(nxt[k], v) for k, v in floors.items()})
+                lambda nxt: nxt.update({k: max(nxt[k], v) for k, v in floors.items()}),
+                needed=raises_a_floor,
             )
 
         keep = set(range(max(1, cur - keep_versions + 1), cur + 1))

@@ -3,12 +3,22 @@
 Local mode is a correctness/dev harness; the config mirrors what we would
 submit to a real multi-executor cluster (AQE on, explicit shuffle
 partitioning, Arrow enabled for the few vectorized-UDF paths).
+
+Python workers fork from the engine's daemon, ``mysql_binlog_spark._pydaemon``:
+before CPython 3.13 Spark's own daemon re-reads pyspark.zip's directory
+once per zip importer on every task, which cost a small task most of its
+wall. The daemon is set only when its process can import it: this process
+launches the JVM (no ``PYSPARK_GATEWAY_PORT``, no live SparkContext), so
+the ``PYTHONPATH`` set here reaches the workers, and the package is a
+directory on that path. Under ``spark-submit --py-files`` the JVM already
+runs without that path, and Spark keeps its default daemon.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -65,6 +75,15 @@ def get_spark(
         # same flag goes in spark.executor.extraJavaOptions.
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
     )
+    # the engine daemon only where workers can import it (module docstring)
+    if (
+        "PYSPARK_GATEWAY_PORT" not in os.environ
+        and SparkContext._active_spark_context is None
+        and os.path.isfile(os.path.join(repo_root, "mysql_binlog_spark", "_pydaemon.py"))
+    ):
+        builder = builder.config(
+            "spark.python.daemon.module", "mysql_binlog_spark._pydaemon"
+        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -216,7 +216,8 @@ def test_racing_vacuum_never_lowers_a_floor(tracked, monkeypatch):
     """Two handles vacuum one table at once: the loser of the commit race
     re-derives its maintenance version from the winner's head and may only
     raise a floor, never put back the lower value it worked out from the
-    older head. And one vacuum that moves every floor commits once."""
+    older head; when that head already carries its floors, it adds no
+    version. And one vacuum that moves every floor commits once."""
     a = tracked
     for _ in range(4):
         a._commit_maintenance(lambda nxt: None)
@@ -234,11 +235,41 @@ def test_racing_vacuum_never_lowers_a_floor(tracked, monkeypatch):
     a.vacuum(change_retention_versions=5)
     monkeypatch.undo()
     assert rival
-    # B committed head + 1 with floor head - 1; A lost that race and
-    # committed head + 2 from B's manifest, its own head - 5 notwithstanding
+    # B committed head + 1 with floor head - 1; A lost that race, and B's
+    # head already carries a floor above its own head - 5, so A commits
+    # nothing
     assert b.read_manifest(head + 1)["changes_floor"] == head - 1
-    assert a.current_version() == head + 2
+    assert a.current_version() == head + 1
     assert a.read_manifest()["changes_floor"] == head - 1
+
+
+def test_racing_vacuum_commits_only_the_floors_it_raises(tracked, monkeypatch):
+    """The loser of a vacuum race whose manifest floor the winner left
+    lower still commits: it raises that floor and keeps the winner's
+    higher changes floor."""
+    a = tracked
+    for _ in range(LakeTable.CKPT_FOLD_INTERVAL + 8):
+        a._commit_maintenance(lambda nxt: None)
+    head = a.current_version()
+    floor = min(a.read_manifest()["ckpt_base"] - 1, head - 5)
+    assert floor > 0
+    b = LakeTable(a.spark, a.root)
+    real_create = a.io.create_exclusive
+    rival = []
+
+    def create_after_rival(path, data):
+        if not rival:
+            rival.append(b.vacuum(keep_versions=1, change_retention_versions=1))
+        real_create(path, data)
+
+    monkeypatch.setattr(a.io, "create_exclusive", create_after_rival)
+    a.vacuum(change_retention_versions=5, expire_manifests=True)
+    monkeypatch.undo()
+    assert rival
+    after = a.read_manifest()
+    assert a.current_version() == head + 2
+    assert after["changes_floor"] == head - 1
+    assert after["manifest_floor"] == floor
 
 
 def test_vacuum_moving_every_floor_commits_once(tracked):

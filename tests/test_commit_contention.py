@@ -83,6 +83,31 @@ def test_two_writers_race_posix(spark, tmp_path):
     _race_and_check(spark, str(tmp_path / "lake"))
 
 
+def test_posix_commit_appears_only_once_durable(tmp_path, monkeypatch):
+    """A reader polling the head must never open a manifest that was
+    created but not yet written: the POSIX create shows the file only
+    after its bytes are synced, and a second create of it still loses."""
+    from mysql_binlog_spark.lake import io as lake_io
+
+    path = str(tmp_path / "v00000001.json")
+    real_fsync = lake_io.os.fsync
+    seen = []
+
+    def fsync(fd):
+        seen.append(lake_io.os.path.exists(path))
+        real_fsync(fd)
+
+    monkeypatch.setattr(lake_io.os, "fsync", fsync)
+    local = lake_io.LocalTableIO()
+    local.create_exclusive(path, '{"v":1}')
+    monkeypatch.undo()
+    assert seen == [False]
+    with pytest.raises(FileExistsError):
+        local.create_exclusive(path, '{"v":"loser"}')
+    assert local.read_text(path) == '{"v":1}'
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["v00000001.json"]
+
+
 def test_two_writers_race_hadoop_with_lease_lock(spark, tmp_path):
     """Hadoop-FS path over file:// — RawLocalFileSystem's
     create(overwrite=false) is check-then-create (same hazard class as
