@@ -262,7 +262,7 @@ def main(argv: list[str] | None = None) -> int:
             # half-ingested run (epoch fencing makes reruns safe, but the
             # exit status must tell the truth)
             q.awaitTermination()
-        print(json.dumps({"cmd": "backup", "epochs": len(t.epochs_applied())}))
+        print(json.dumps({"cmd": "backup", "epochs": len(t.epochs_applied(args.source))}))
 
     elif args.cmd == "snapshot":
         t.read_state(version=args.version).write.mode("overwrite").parquet(args.out)

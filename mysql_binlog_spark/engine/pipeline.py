@@ -152,8 +152,8 @@ def run_ingest(
     ddl_ops = extract_ddl_ops_for_path(spark, events_path, events)
     entries = plan_entries(max_seq, epoch_size, ddl_ops)
 
-    applied = set(table.epochs_applied(source))
-    # The committed per-source seq watermark guards resume across
+    # One read of the source's record gives both fences: the applied
+    # epoch ids and the seq watermark. The watermark guards resume across
     # DIFFERENTLY-BOUNDED runs: plan ids are ordinal, and a previous run
     # with a smaller max_seq committed the same ordinal id over a SHORTER
     # seq range (the bound truncates the final merge; DDL clipping shifts
@@ -163,13 +163,14 @@ def run_ingest(
     # the remainder re-applies under the same id with the id fence
     # bypassed — LWW merge is idempotent for any overlap, and the
     # advanced watermark makes the remainder skippable forever after.
-    seq_hwm = table.high_watermark(source)
+    rec = table.source_state(source)
+    seq_hwm = rec.hwm
     row_events = events.filter(F.col("op") != "Q")
 
     report = IngestReport(0, 0, 0, 0)
     for entry in entries:
         force = False
-        if entry[0] == "merge" and entry[1] in applied:
+        if entry[0] == "merge" and rec.applied(entry[1]):
             _kind, epoch_id, lo, hi = entry
             if hi <= seq_hwm:
                 report.epochs_skipped += 1
@@ -181,7 +182,7 @@ def run_ingest(
                 report.epochs_skipped += 1
                 continue
             force = True
-        elif entry[1] in applied:
+        elif rec.applied(entry[1]):
             report.epochs_skipped += 1
             continue
         if stop_after_epochs is not None and report.epochs_run >= stop_after_epochs:
@@ -251,7 +252,7 @@ def run_multi_source_ingest(
     # Spark job submission is thread-safe; the shared LakeTable's mutable
     # state is commit-protocol-safe by design (the bounded manifest cache
     # holds immutable entries behind a lock, so an evicted one is simply
-    # re-read; n_buckets re-adopts per attempt)
+    # re-read; each attempt takes its layout from the manifest it read)
     with ThreadPoolExecutor(max_workers=len(sources)) as pool:
         futures = {
             name: pool.submit(

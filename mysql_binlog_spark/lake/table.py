@@ -84,7 +84,7 @@ KEY_COLS = ["repo", "path"]
 #: commit, and ``read_manifest`` refuses a manifest without it or with
 #: another value (Delta Lake's ``minReaderVersion`` rule: refuse a
 #: table, never guess at it)
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -113,26 +113,21 @@ CHANGE_SCHEMA_DDL = (
 )
 
 #: v0, the empty table, and the one declaration of every manifest field:
-#: ``read_manifest(0)`` returns a copy, and every commit derives its
-#: manifest from the previous one through ``_next_manifest``
+#: ``read_manifest(0)`` returns a copy carrying the handle's layout, and
+#: every commit derives its manifest from the previous one through
+#: ``_next_manifest``
 _EMPTY_MANIFEST = {
     "format_version": FORMAT_VERSION,
     "version": 0,
     # the epoch id this version applied (maintenance carries it over)
     "epoch": None,
-    # default-source fence: every epoch id <= watermark, plus the sparse
-    # set above it
-    "epoch_watermark": -1,
-    "epochs_extra": [],
-    # per-source fences {source: {"wm", "extra"}}: the GTID-set
-    # (per-UUID intervals) analog
-    "source_fences": {},
+    # source name -> its exactly-once record (``SourceState``); the
+    # default source is the key ""
+    "sources": {},
     # bucket id -> live data files
     "buckets": {},
     # per-bucket repo membership blooms, hex (DDL bucket pruning)
     "repo_blooms": {},
-    # running max applied seq per source (O(1) fence reads)
-    "source_hwms": {},
     "schema": None,
     # this version's lineage rows only — readers walk the chain back to
     # the last rollup fold (``_checkpoint_rows``)
@@ -140,9 +135,11 @@ _EMPTY_MANIFEST = {
     # version of the last lineage fold and its rollup sidecar
     "ckpt_base": 0,
     "ckpt_rollup_file": None,
-    # sticky, adopted at open: a default reopen must not remap keys or
-    # silently stop the change stream
-    "n_buckets": None,
+    # the layout, carried into every commit (``rebucket`` changes the
+    # count): v0 holds what the handle asked for (default 64 buckets), so
+    # a default reopen never remaps keys or silently stops the change
+    # stream
+    "n_buckets": 64,
     "track_changes": False,
     # this version's change files ([] = tracked-but-empty epoch, None =
     # tracking off -> incremental diff falls back)
@@ -155,10 +152,6 @@ _EMPTY_MANIFEST = {
     "vacuum_horizon": 0,
     # versions at or below this have had their manifests expired
     "manifest_floor": 0,
-    # bounded per-source applied-file window [[md5-16, hi seq], ...] and
-    # the highest seq trimmed out of it
-    "applied_files": {},
-    "applied_floor": {},
 }
 
 
@@ -171,6 +164,114 @@ class MergeResult:
     rows_upserted: int
     rows_deleted: int
     wall_ms: int
+
+
+@dataclass(frozen=True)
+class SourceState:
+    """One upstream source's exactly-once record, as a manifest's
+    ``sources`` map stores it — the reference keeps a source's whole
+    position in one row too (``BinlogPosition``,
+    common/inter/offset.go:24-33; common/db/mysql.go:229-246). The
+    default source is the key ""; each named source (GTID-domain analog)
+    fences independently, like a GTID set's per-server-UUID intervals.
+
+    - ``wm``/``extra``: the applied epoch ids, compacted — every id <=
+      ``wm`` plus the (normally empty) sparse set above it. Epochs
+      commit in id order in every real run, so the fence costs O(1)
+      manifest bytes.
+    - ``hwm``: the max seq applied (O(1) streaming fence reads).
+    - ``files``/``files_floor``: the bounded applied-file window
+      ``[[md5-16 of the file name, its max seq], ...]`` and the highest
+      seq trimmed out of it (``file_applied_state``).
+
+    GTID-gap semantics: the reference stores per-UUID INTERVAL sets
+    because a MySQL upstream can interleave transactions from many
+    domains; this engine's per-source seq fence is a scalar watermark
+    instead, sufficient under its landing contract: within one source,
+    files land in seq ORDER. Seqs need NOT be dense — every fence
+    comparison (epoch fencing, streaming straddle detection, the
+    applied-file floor) is an order/range test, never an
+    arithmetic-successor test (proven by
+    tests/test_streaming.py::test_stream_ingest_with_gapped_seqs). What
+    the scalar fence CANNOT represent is out-of-ORDER application within
+    one source — exactly the case the streaming front end refuses
+    loudly (straddle / never-applied audit) rather than mis-fencing.
+    """
+
+    wm: int = -1
+    extra: tuple = ()
+    hwm: int = -1
+    files: tuple = ()
+    files_floor: int = -1
+
+    @classmethod
+    def of(cls, manifest: dict, source: str) -> SourceState:
+        return cls(**manifest["sources"].get(source, {}))
+
+    def applied(self, epoch: int) -> bool:
+        return epoch <= self.wm or epoch in self.extra
+
+    def epochs(self) -> list[int]:
+        return list(range(self.wm + 1)) + list(self.extra)
+
+    def next_epoch_id(self) -> int:
+        """Smallest epoch id beyond everything applied — for callers that
+        assign epochs dynamically (the streaming front end, whose fencing
+        is by content/seq, not by a pre-planned id grid)."""
+        return (max(self.extra) if self.extra else self.wm) + 1
+
+    @staticmethod
+    def _file_key(name: str) -> str:
+        import hashlib
+
+        return hashlib.md5(name.encode()).hexdigest()[:16]
+
+    def file_applied_state(self, name: str, hi_seq: int) -> str:
+        """'applied' (in the window -> replay), 'unseen' (within window
+        coverage but never applied -> the loud-failure case), or
+        'below_window' (older than the audit window -> unknowable).
+
+        The streaming fence is seq-derived; a late file whose WHOLE seq
+        range lies below the watermark is indistinguishable from a
+        replay by seq alone (ADVICE round 3: silently dropping a
+        never-applied one is a data-loss corner), so the window
+        classifies it exactly within its coverage and conservatively
+        below it (files older than the window are beyond audit reach —
+        size ``LakeTable.APPLIED_FILES_WINDOW`` above the landing
+        protocol's worst reordering)."""
+        if not self.files and self.files_floor < 0:
+            # no audit data at all: a batch-ingested table —
+            # the conservative (pre-window) semantics apply
+            return "below_window"
+        if self._file_key(name) in {k for k, _hi in self.files}:
+            return "applied"
+        return "below_window" if hi_seq <= self.files_floor else "unseen"
+
+    def advance(
+        self, epoch: int, hwms: list[int], files: dict[str, int] | None, keep: int
+    ) -> dict:
+        """The record, as stored, once ``epoch`` commits: the id joins
+        the fence, ``hwm`` lifts to the epoch's seqs, and the consumed
+        ``files`` ({name: max seq}) enter the FIFO window, whose
+        oldest entries beyond ``keep`` are trimmed into ``files_floor``."""
+        wm, extra = self.wm, set(self.extra)
+        if epoch > wm:  # a force-re-commit of an applied id must not pollute
+            extra.add(epoch)
+        while wm + 1 in extra:
+            wm += 1
+            extra.discard(wm)
+        window, floor = [list(e) for e in self.files], self.files_floor
+        seen = {k: i for i, (k, _hi) in enumerate(window)}
+        for name, hi in (files or {}).items():
+            k = self._file_key(name)
+            if k in seen:  # replay/reapply: keep position, lift hi
+                window[seen[k]][1] = max(int(window[seen[k]][1]), int(hi))
+            else:
+                window.append([k, int(hi)])
+        while len(window) > keep:
+            floor = max(floor, int(window.pop(0)[1]))
+        return {"wm": wm, "extra": sorted(extra), "hwm": max([self.hwm, *hwms]),
+                "files": window, "files_floor": floor}
 
 
 def bucket_expr(n_buckets: int):
@@ -265,24 +366,37 @@ class LakeTable:
         # opening creates nothing: ``_snapshots/`` appears with v1
         self._manifest_cache: OrderedDict[int, dict] = OrderedDict()
         self._manifest_lock = threading.Lock()
+        self._wants_tracking = track_changes
+        self._v0 = {
+            **_EMPTY_MANIFEST,
+            "n_buckets": n_buckets or _EMPTY_MANIFEST["n_buckets"],
+            "track_changes": track_changes,
+        }
+        stored = self.read_manifest()["n_buckets"]
+        if n_buckets is not None and n_buckets != stored:
+            raise ValueError(
+                f"table at {self.root} was created with n_buckets={stored}; "
+                f"reopening with n_buckets={n_buckets} would remap keys "
+                "across buckets and corrupt merges"
+            )
 
-        committed = self.read_manifest()
-        # track_changes is sticky like n_buckets: a table that ever
-        # committed with tracking on keeps writing change files no matter
-        # how it is reopened (a CLI open with the default constructor must
-        # not silently stop the change stream and break incremental diff).
-        self.track_changes = committed["track_changes"] or track_changes
-        stored = committed["n_buckets"]
-        if stored is not None:
-            if n_buckets is not None and n_buckets != stored:
-                raise ValueError(
-                    f"table at {self.root} was created with n_buckets={stored}; "
-                    f"reopening with n_buckets={n_buckets} would remap keys "
-                    "across buckets and corrupt merges"
-                )
-            self.n_buckets = int(stored)
-        else:
-            self.n_buckets = n_buckets if n_buckets is not None else 64
+    @property
+    def n_buckets(self) -> int:
+        """The head's bucket count (before the first commit, the count
+        this handle asked for)."""
+        return self.read_manifest()["n_buckets"]
+
+    @property
+    def track_changes(self) -> bool:
+        return self._tracks(self.read_manifest())
+
+    def _tracks(self, manifest: dict) -> bool:
+        """Change tracking is sticky: a table that ever committed with it
+        keeps writing change files however it is reopened (a CLI open
+        with the default constructor must not silently stop the change
+        stream), and a handle opened with ``track_changes=True`` turns it
+        on at its next commit."""
+        return manifest["track_changes"] or self._wants_tracking
 
     # ---------------- snapshot / manifest plumbing ----------------
 
@@ -325,7 +439,7 @@ class LakeTable:
         or not ``FORMAT_VERSION`` is refused before any field is used."""
         v = version if version is not None else self.current_version()
         if v == 0:
-            return copy.deepcopy(_EMPTY_MANIFEST)
+            return copy.deepcopy(self._v0)
         with self._manifest_lock:
             cached = self._manifest_cache.get(v)
             if cached is not None:
@@ -376,114 +490,35 @@ class LakeTable:
         except Exception:  # noqa: BLE001 - advisory only
             pass
 
-    # ---------------- epoch fence bookkeeping ----------------
-    #
-    # The applied-epoch set is stored compacted: ``epoch_watermark`` W
-    # means every epoch id <= W is applied; ``epochs_extra`` holds the
-    # (normally empty) sparse set above W. Epochs commit in id order in
-    # every real run, so the manifest carries O(1) fence bytes instead of
-    # the O(epochs) list that round 1 copied into every commit.
-    #
-    # Multi-source (GTID-domain analog, reference
-    # common/inter/offset.go:24-33, mysql_gtid.go:342-384): each named
-    # source keeps an INDEPENDENT fence under ``source_fences`` — exactly
-    # like a GTID set tracking per-server-UUID applied intervals. The
-    # default source "" uses the top-level watermark fields.
-    #
-    # GTID-gap semantics: the reference stores per-UUID INTERVAL sets
-    # because a MySQL upstream can interleave transactions from many
-    # domains; this engine's per-source seq fence is a scalar watermark
-    # instead, which is sufficient under its documented landing contract:
-    # within one source, files land in seq ORDER. Seqs need NOT be dense
-    # — a source that legitimately skips seqs (events filtered upstream)
-    # works unchanged, because every fence comparison (epoch fencing,
-    # streaming straddle detection, the applied-file floor) is an
-    # order/range test, never an arithmetic-successor test (proven by
-    # tests/test_streaming.py::test_stream_ingest_with_gapped_seqs).
-    # What the scalar fence CANNOT represent is out-of-ORDER application
-    # within one source — exactly the case the streaming front end
-    # refuses loudly (straddle / never-applied audit) rather than
-    # mis-fencing.
+    # ---------------- per-source exactly-once records ----------------
 
-    @staticmethod
-    def _fence_of(manifest: dict, source: str) -> tuple[int, list[int]]:
-        if source == "":
-            return manifest["epoch_watermark"], manifest["epochs_extra"]
-        f = manifest["source_fences"].get(source, {"wm": -1, "extra": []})
-        return f["wm"], f["extra"]
+    #: applied-file window entries kept per source (``SourceState``)
+    APPLIED_FILES_WINDOW = 256
 
-    def _epoch_applied(self, manifest: dict, epoch: int, source: str = "") -> bool:
-        wm, extra = self._fence_of(manifest, source)
-        return epoch <= wm or epoch in extra
-
-    @classmethod
-    def _advance_fence(
-        cls, manifest: dict, epoch: int, source: str = ""
-    ) -> tuple[int, list[int]]:
-        wm, extra_l = cls._fence_of(manifest, source)
-        extra = set(extra_l)
-        if epoch > wm:  # a force-re-commit of an applied id must not pollute
-            extra.add(epoch)
-        while wm + 1 in extra:
-            wm += 1
-            extra.discard(wm)
-        return wm, sorted(extra)
+    def source_state(self, source: str = "") -> SourceState:
+        """``source``'s exactly-once record at the head: one manifest read
+        answers every fence question (applied epochs, next epoch id, seq
+        watermark, applied-file audit)."""
+        return SourceState.of(self.read_manifest(), source)
 
     def epochs_applied(self, source: str = "") -> list[int]:
-        wm, extra = self._fence_of(self.read_manifest(), source)
-        return list(range(wm + 1)) + list(extra)
-
-    def next_epoch_id(self, source: str = "") -> int:
-        """Smallest epoch id beyond everything applied — for callers that
-        assign epochs dynamically (the streaming front end, whose fencing
-        is by content/seq, not by a pre-planned id grid)."""
-        wm, extra = self._fence_of(self.read_manifest(), source)
-        return (max(extra) if extra else wm) + 1
+        return self.source_state(source).epochs()
 
     def sources(self) -> list[str]:
         """Named sources that have committed epochs (the GTID-set's
         server-UUID list analog)."""
-        return sorted(self.read_manifest()["source_fences"])
+        return sorted(s for s in self.read_manifest()["sources"] if s)
 
-    # ---------------- applied-file window (streaming landing audit) --------
-    #
-    # The streaming fence is seq-derived; a late file whose WHOLE seq
-    # range lies below the committed watermark is indistinguishable from
-    # a replay by seq alone (ADVICE round 3: silently dropping a
-    # never-applied one is a data-loss corner). The manifest therefore
-    # keeps a bounded FIFO window of recently applied source files per
-    # source — (md5-16 of the file name, its max seq) pairs — plus a
-    # floor: the highest seq among entries trimmed out of the window.
-    # A wholly-below-watermark file is then classified exactly within
-    # the window (applied -> replay, unseen -> FAIL LOUDLY) and
-    # conservatively below it (warn; files older than WINDOW commits are
-    # beyond audit reach — size the window above the landing protocol's
-    # worst reordering).
-
-    APPLIED_FILES_WINDOW = 256
-
-    @staticmethod
-    def _file_key(name: str) -> str:
-        import hashlib
-
-        return hashlib.md5(name.encode()).hexdigest()[:16]
-
-    def file_applied_state(self, name: str, hi_seq: int, source: str = "") -> str:
-        """'applied' (in the window -> replay), 'unseen' (within window
-        coverage but never applied -> the loud-failure case), or
-        'below_window' (older than the audit window -> unknowable)."""
-        m = self.read_manifest()
-        win = {k for k, _hi in m["applied_files"].get(source, [])}
-        floor = m["applied_floor"].get(source, -1)
-        if not win and floor < 0:
-            # no audit data at all: a batch-ingested table —
-            # the conservative (pre-window) semantics apply
-            return "below_window"
-        if self._file_key(name) in win:
-            return "applied"
-        if hi_seq <= floor:
-            return "below_window"
-        return "unseen"
+    def high_watermark(self, source: str | None = None) -> int:
+        """Max seq applied across committed epochs (-1 if empty).
+        ``source`` restricts to one upstream's epochs — the per-UUID
+        GTID-set watermark analog. O(1): each source record carries its
+        running max, so the streaming fence never walks the manifest
+        chain."""
+        if source is not None:
+            return self.source_state(source).hwm
+        recs = self.read_manifest()["sources"].values()
+        return max((r["hwm"] for r in recs), default=-1)
 
     # ---------------- reads ----------------
 
@@ -551,14 +586,13 @@ class LakeTable:
         point lookup touches one bucket's few files, not the table.
         """
         manifest = self.read_manifest(version)
-        n = manifest["n_buckets"] or self.n_buckets
         if path is not None:
             from mysql_binlog_spark.functions.xxhash import pmod, spark_xxhash64
 
-            buckets = [pmod(spark_xxhash64(repo, path), n)]
+            buckets = [pmod(spark_xxhash64(repo, path), manifest["n_buckets"])]
         else:
             buckets = self._buckets_maybe_containing(manifest, repo)
-        out = self.read_state(buckets=buckets, version=version).where(
+        out = self.read_state(buckets=buckets, version=manifest["version"]).where(
             F.col("repo") == repo
         )
         if path is not None:
@@ -659,20 +693,6 @@ class LakeTable:
             out = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(rf).unionByName(out)
         return out
 
-    def high_watermark(self, source: str | None = None) -> int:
-        """Max seq applied across committed epochs (-1 if empty).
-        ``source`` restricts to one upstream's epochs — the per-UUID
-        GTID-set watermark analog.
-
-        O(1): the head manifest carries ``source_hwms`` (running max per
-        source), so the streaming fence doesn't re-walk the whole
-        manifest chain every micro-batch (O(epochs) per batch = O(n^2)
-        cumulative on a long-running stream)."""
-        hw = self.read_manifest()["source_hwms"]
-        if source is not None:
-            return int(hw.get(source, -1))
-        return max((int(v) for v in hw.values()), default=-1)
-
     # ---------------- MERGE (the upsert join, SURVEY §2.6 J1) ----------------
 
     #: optimistic-concurrency bound: how many times a writer recomputes
@@ -705,43 +725,34 @@ class LakeTable:
             "commit)"
         ) from last
 
+    def _fenced(self, epoch: int, source: str, force: bool, write) -> MergeResult:
+        """The attempt prologue of every fenced write, under the
+        optimistic-retry commit protocol: read the head ONCE, return a
+        no-op if ``source``'s fence already holds ``epoch`` (unless
+        ``force``), else run ``write(manifest, t0)``, which takes the
+        layout, the fence and every file list from that one manifest and
+        commits against it (Delta Lake: a transaction reads one snapshot
+        and commits against it)."""
+
+        def attempt() -> MergeResult:
+            t0 = time.monotonic()
+            manifest = self.read_manifest()
+            if not force and SourceState.of(manifest, source).applied(epoch):
+                return MergeResult(epoch, False, 0, 0, 0, 0, 0)
+            return write(manifest, t0)
+
+        return self._with_commit_retries(attempt)
+
     def merge(
         self,
         batch: DataFrame,
         epoch: int,
         source: str = "",
         force: bool = False,
-        applied_files: dict[str, int] | None = None,
+        files: dict[str, int] | None = None,
     ) -> MergeResult:
-        """Idempotent, multi-writer-safe MERGE (see ``_merge_once``).
-
-        ``force=True`` bypasses the epoch-id fence: for re-applying the
-        REMAINDER of an epoch id that an earlier, differently-bounded run
-        committed over a shorter seq range (engine.pipeline resume). Safe
-        because the LWW merge is idempotent — re-applying rows already in
-        state cannot regress it — and the seq watermark advanced by this
-        commit makes the remainder skippable forever after.
-
-        ``applied_files`` (streaming front end): {source file name -> its
-        max seq} for the files this batch consumed; recorded in the
-        manifest's bounded applied-file window so a late never-applied
-        file can be told apart from a replay (``file_applied_state``).
-        """
-        return self._with_commit_retries(
-            lambda: self._merge_once(
-                batch, epoch, source, force=force, applied_files=applied_files
-            )
-        )
-
-    def _merge_once(
-        self,
-        batch: DataFrame,
-        epoch: int,
-        source: str = "",
-        force: bool = False,
-        applied_files: dict[str, int] | None = None,
-    ) -> MergeResult:
-        """Idempotent MERGE INTO: apply a collapsed batch to the table.
+        """Idempotent, multi-writer-safe MERGE INTO: apply a collapsed
+        batch to the table.
 
         ``batch`` must have one row per key: KEY_COLS + ('seq', 'op',
         payload...) where op=='D' rows are delete tombstones (output of
@@ -759,15 +770,22 @@ class LakeTable:
         fence independently; their key spaces must be disjoint (sharded
         upstream — one owner per table, like the reference's
         one-backup-process-per-instance).
+
+        ``force=True`` bypasses the epoch-id fence: for re-applying the
+        REMAINDER of an epoch id that an earlier, differently-bounded run
+        committed over a shorter seq range (engine.pipeline resume). Safe
+        because the LWW merge is idempotent — re-applying rows already in
+        state cannot regress it — and the seq watermark advanced by this
+        commit makes the remainder skippable forever after.
+
+        ``files`` (streaming front end): {source file name -> its max
+        seq} for the files this batch consumed; recorded in the source's
+        bounded applied-file window so a late never-applied file can be
+        told apart from a replay (``SourceState.file_applied_state``).
         """
-        t0 = time.monotonic()
-        manifest = self.read_manifest()
-        if self._epoch_applied(manifest, epoch, source) and not force:
-            return MergeResult(epoch, False, 0, 0, 0, 0, 0)
-        self._adopt_sticky(manifest)
-        return self._rewrite_buckets(
-            manifest, batch, epoch, source, t0, applied_files=applied_files
-        )
+        return self._fenced(epoch, source, force, lambda manifest, t0: self._rewrite_buckets(
+            manifest, batch, epoch, source, t0, files=files
+        ))
 
     def _rewrite_buckets(
         self,
@@ -776,7 +794,7 @@ class LakeTable:
         epoch: int,
         source: str,
         t0: float,
-        applied_files: dict[str, int] | None = None,
+        files: dict[str, int] | None = None,
         ddl: bool = False,
     ) -> MergeResult:
         """The one copy-on-write rewrite behind MERGE and DDL (Delta
@@ -784,15 +802,18 @@ class LakeTable:
         -> touched-bucket state read -> union/winner shuffle -> overlapped
         data and change writes -> staged-output check -> commit.
 
-        A batch with no rows commits an empty fenced epoch. ``ddl=True``
-        records the commit as one DDL: a single lineage row (bucket -1,
-        no hwm, so ``source_hwms`` never moves) whose ``rows_in`` counts
-        affected keys — one tombstone each.
+        The bucket count, the tracking flag and the state read all come
+        from ``manifest``, the one the commit lands on. A batch with no
+        rows commits an empty fenced epoch. ``ddl=True`` records the
+        commit as one DDL: a single lineage row (bucket -1, no hwm, so the
+        source's ``hwm`` never moves) whose ``rows_in`` counts affected
+        keys — one tombstone each.
         """
+        n_buckets, track = manifest["n_buckets"], self._tracks(manifest)
         # persist: the batch feeds two actions (stats aggregation + the
         # bucket rewrite) — without this the whole upstream collapse runs
         # twice per epoch
-        batch = batch.withColumn("bucket", bucket_expr(self.n_buckets)).persist()
+        batch = batch.withColumn("bucket", bucket_expr(n_buckets)).persist()
 
         # rows_in = number of underlying change events when the batch is a
         # collapse output (it carries n_events per key); else rows in batch.
@@ -815,13 +836,13 @@ class LakeTable:
         )
         if not stats:
             batch.unpersist()
-            return self._commit_empty(manifest, epoch, source, t0, applied_files)
+            return self._commit_empty(manifest, epoch, source, t0, files)
 
         touched = sorted(r["bucket"] for r in stats)
         new_blooms = {str(r["bucket"]): _bloom_bits(r["bloom_pos"]) for r in stats}
 
-        state = self.read_state(buckets=touched)
-        state = state.withColumn("bucket", bucket_expr(self.n_buckets))
+        state = self.read_state(buckets=touched, version=manifest["version"])
+        state = state.withColumn("bucket", bucket_expr(n_buckets))
 
         # COW per bucket as ONE union + per-key merge, single shuffle:
         # after repartition("bucket") the groupBy(bucket, key) needs NO
@@ -843,7 +864,7 @@ class LakeTable:
         aggs = [
             F.max_by(F.struct(*data_cols), order).alias("_w"),
         ]
-        if self.track_changes:
+        if track:
             # the pre-merge image: winner among state-side rows only
             # (max_by skips rows whose ordering key is NULL)
             aggs.append(
@@ -854,7 +875,7 @@ class LakeTable:
             )
             aggs.append(F.max(F.col("_pri")).alias("_from_batch"))
         merged = src.repartition("bucket").groupBy("bucket", *KEY_COLS).agg(*aggs)
-        if self.track_changes:
+        if track:
             # the data and change writes both read it
             merged = merged.persist()
 
@@ -876,11 +897,11 @@ class LakeTable:
                 .mode("overwrite")
                 .parquet(stage),
                 (lambda: self._write_changes(manifest, merged))
-                if self.track_changes
+                if track
                 else None,
             )
         finally:
-            if self.track_changes:
+            if track:
                 merged.unpersist()
             batch.unpersist()
 
@@ -909,7 +930,7 @@ class LakeTable:
         counts = ("rows_in", "rows_upserted", "rows_deleted")
         per_bucket = [{k: r[k] for k in ("bucket", "hwm_seq", *counts)} for r in stats]
         if ddl:
-            # one lineage row per DDL: no hwm, so source_hwms never moves,
+            # one lineage row per DDL: no hwm, so the source's hwm never moves,
             # and rows_in counts affected keys (one tombstone each)
             n = sum(r["rows_deleted"] for r in per_bucket)
             per_bucket = [{
@@ -926,7 +947,7 @@ class LakeTable:
             self._next_manifest(
                 manifest,
                 **self._epoch_fields(
-                    manifest, epoch, source, cp_rows, applied_files, new_files, new_blooms
+                    manifest, epoch, source, cp_rows, files, new_files, new_blooms
                 ),
                 schema=new_schema,
                 changes=changes_entry,
@@ -944,7 +965,7 @@ class LakeTable:
         epoch: int,
         source: str,
         t0: float,
-        applied_files: dict[str, int] | None = None,
+        files: dict[str, int] | None = None,
     ) -> MergeResult:
         """Commit an epoch that changes no row: it only advances the fence.
         Its changes entry is [] on a tracked table (tracked-but-empty), NOT
@@ -952,7 +973,7 @@ class LakeTable:
         incremental."""
         self._commit(
             self._next_manifest(
-                manifest, **self._epoch_fields(manifest, epoch, source, [], applied_files)
+                manifest, **self._epoch_fields(manifest, epoch, source, [], files)
             )
         )
         return MergeResult(epoch, True, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
@@ -1047,21 +1068,8 @@ class LakeTable:
         new_repo: str | None = None,
         source: str = "",
     ) -> MergeResult:
-        """Multi-writer-safe DDL apply (see ``_apply_repo_ddl_once``)."""
-        return self._with_commit_retries(
-            lambda: self._apply_repo_ddl_once(epoch, action, repo, new_repo, source)
-        )
-
-    def _apply_repo_ddl_once(
-        self,
-        epoch: int,
-        action: str,
-        repo: str | None,
-        new_repo: str | None = None,
-        source: str = "",
-    ) -> MergeResult:
-        """Apply a DDL as its own fenced, atomic commit through the MERGE
-        rewrite (``_rewrite_buckets``).
+        """Apply a DDL as its own fenced, atomic, multi-writer-safe commit
+        through the MERGE rewrite (``_rewrite_buckets``).
 
         ``action``: 'truncate' (or 'drop') deletes every key of ``repo``:
         the batch holds one ``(repo, path, stored seq, 'D')`` tombstone per
@@ -1079,34 +1087,31 @@ class LakeTable:
         """
         if action not in ("truncate", "drop", "rename", *BARRIER_ACTIONS):
             raise ValueError(f"unknown DDL action {action!r}")
-        t0 = time.monotonic()
-        manifest = self.read_manifest()
-        if self._epoch_applied(manifest, epoch, source):
-            return MergeResult(epoch, False, 0, 0, 0, 0, 0)
-        self._adopt_sticky(manifest)
-        if action in BARRIER_ACTIONS or (action == "rename" and new_repo == repo):
-            return self._commit_empty(manifest, epoch, source, t0)
 
-        # Bucket pruning via the manifest's per-bucket repo blooms: a DDL
-        # on a repo confined to few buckets reads only those buckets (a
-        # manifest probe), not the table. Membership "no" is exact
-        # (monotone-superset blooms), so pruning can never miss rows.
-        cand = self._buckets_maybe_containing(manifest, repo)
-        if not cand:
-            return self._commit_empty(manifest, epoch, source, t0)
-        # one scan of the candidates yields the tombstone and, for a
-        # rename, the re-keyed row of every affected key
-        ops = ["D", "U"] if action == "rename" else ["D"]
-        batch = (
-            self.read_state(buckets=cand)
-            .filter(F.col("repo") == repo)
-            .withColumn("op", F.explode(F.array(*[F.lit(o) for o in ops])))
-            .withColumn(
-                "repo",
-                F.when(F.col("op") == "U", F.lit(new_repo)).otherwise(F.col("repo")),
+        def write(manifest: dict, t0: float) -> MergeResult:
+            # Bucket pruning via the manifest's per-bucket repo blooms: a
+            # DDL on a repo confined to few buckets reads only those
+            # buckets, not the table. Membership "no" is exact
+            # (monotone-superset blooms), so pruning can never miss rows.
+            no_op = action in BARRIER_ACTIONS or (action == "rename" and new_repo == repo)
+            cand = [] if no_op else self._buckets_maybe_containing(manifest, repo)
+            if not cand:
+                return self._commit_empty(manifest, epoch, source, t0)
+            # one scan of the candidates yields the tombstone and, for a
+            # rename, the re-keyed row of every affected key
+            ops = ["D", "U"] if action == "rename" else ["D"]
+            batch = (
+                self.read_state(buckets=cand, version=manifest["version"])
+                .filter(F.col("repo") == repo)
+                .withColumn("op", F.explode(F.array(*[F.lit(o) for o in ops])))
+                .withColumn(
+                    "repo",
+                    F.when(F.col("op") == "U", F.lit(new_repo)).otherwise(F.col("repo")),
+                )
             )
-        )
-        return self._rewrite_buckets(manifest, batch, epoch, source, t0, ddl=True)
+            return self._rewrite_buckets(manifest, batch, epoch, source, t0, ddl=True)
+
+        return self._fenced(epoch, source, False, write)
 
     # ---------------- diff (incremental changelog scan) ----------------
 
@@ -1287,7 +1292,6 @@ class LakeTable:
             m = self.read_manifest()
             if not needed(m):
                 return m
-            self._adopt_sticky(m)
             nxt = self._next_manifest(m)
             mutate(nxt)
             self._commit(nxt)
@@ -1327,17 +1331,6 @@ class LakeTable:
         self._commit_maintenance(mutate)
         return len(out)
 
-    def _adopt_sticky(self, manifest: dict) -> None:
-        """Re-adopt the sticky ``n_buckets`` and ``track_changes`` from the
-        committed manifest at the start of every write attempt, as the
-        open does: a writer that loses an optimistic race to a
-        ``rebucket`` must retry its epoch under the NEW layout, not
-        scatter keys across a stale bucket count, and a handle opened
-        before another turned change tracking on must not stamp it off."""
-        if manifest["n_buckets"] is not None:
-            self.n_buckets = manifest["n_buckets"]
-        self.track_changes = self.track_changes or manifest["track_changes"]
-
     def rebucket(self, n_buckets_new: int) -> int:
         """Partition evolution: rewrite the table's state into a new hash
         bucket count as ONE committed version (the Iceberg
@@ -1352,11 +1345,11 @@ class LakeTable:
         new bucket id + one column-pruned scan of the staged output for
         the bloom statistics). Concurrent writers lose the optimistic
         race and retry their epoch under the new layout — every write
-        path re-adopts ``n_buckets`` from the manifest per attempt
-        (``_adopt_sticky``).
+        attempt takes ``n_buckets`` from the manifest it commits against.
 
         Fences, lineage, schema and change tracking carry over
-        unchanged; the rebucket itself changes no logical row, so its
+        unchanged; on an empty table the commit only records the new
+        count. The rebucket itself changes no logical row, so its
         ``changes`` entry is empty and diff ranges spanning it stay
         incremental. Old manifests keep their own bucket file lists, so
         reading or diffing pre-rebucket versions is unaffected; their
@@ -1366,49 +1359,41 @@ class LakeTable:
         if n_buckets_new < 1:
             raise ValueError("n_buckets_new must be >= 1")
 
-        def attempt():
+        def attempt() -> int:
             manifest = self.read_manifest()
-            if manifest["version"] == 0:
-                # empty table: the count is simply adopted at first merge
-                self.n_buckets = n_buckets_new
-                return
-            self._adopt_sticky(manifest)
-            state = self.read_state()
-            stage = _join(
-                self.root,
-                "data",
-                f"rebucket{manifest['version'] + 1:06d}-{uuid.uuid4().hex[:8]}",
-            )
+            v = manifest["version"]
+            stage = _join(self.root, "data", f"rebucket{v + 1:06d}-{uuid.uuid4().hex[:8]}")
             (
-                state.withColumn("bucket", bucket_expr(n_buckets_new))
+                self.read_state(version=v)
+                .withColumn("bucket", bucket_expr(n_buckets_new))
                 .repartition(n_buckets_new, "bucket")
                 .write.partitionBy("bucket")
                 .option("compression", "zstd")
                 .mode("overwrite")
                 .parquet(stage)
             )
+            buckets = self._staged_files(stage)
             # bloom stats from the staged output: column-pruned scan of
-            # (bucket, repo) only
+            # (bucket, repo) only; a table with no live row stages no file
             stats = (
                 self.spark.read.parquet(stage)
                 .groupBy("bucket")
                 .agg(F.collect_set(_repo_bloom_pos_expr()).alias("bloom_pos"))
                 .collect()
-            )
+            ) if buckets else []
             self._commit(
                 self._next_manifest(
                     manifest,
-                    buckets=self._staged_files(stage),
+                    buckets=buckets,
                     repo_blooms={
                         str(r["bucket"]): f"{_bloom_bits(r['bloom_pos']):x}" for r in stats
                     },
                     n_buckets=n_buckets_new,
                 )
             )
-            self.n_buckets = n_buckets_new
+            return v + 1
 
-        self._with_commit_retries(attempt)
-        return self.current_version()
+        return self._with_commit_retries(attempt)
 
     def vacuum(
         self,
@@ -1496,7 +1481,7 @@ class LakeTable:
             floors["vacuum_horizon"] = cur - keep_versions
         if expire_manifests:
             exp = min(cur - keep_versions, head["ckpt_base"] - 1)
-            floors["manifest_floor"] = min(exp, changes_floor) if self.track_changes else exp
+            floors["manifest_floor"] = min(exp, changes_floor) if self._tracks(head) else exp
 
         def raises_a_floor(m: dict) -> bool:
             return any(v > m[k] for k, v in floors.items())
@@ -1613,17 +1598,17 @@ class LakeTable:
         """THE manifest transition; every commit's manifest is built here
         (Delta Lake: each commit is a set of actions applied to the
         previous table state). Version ``prev + 1`` carries every field of
-        ``prev`` except this version's own lineage rows (none) and change
-        files ([] when tracked, None when not), stamps the sticky
-        ``n_buckets`` and ``track_changes``, applies ``fields``, then runs
-        the lineage fold."""
+        ``prev`` (the bucket count included) except this version's own
+        lineage rows (none) and change files ([] when tracked, None when
+        not), stamps the sticky ``track_changes``, applies ``fields``,
+        then runs the lineage fold."""
+        track = self._tracks(prev)
         nxt = {
             **prev,
             "version": prev["version"] + 1,
             "checkpoints": [],
-            "changes": [] if self.track_changes else None,
-            "n_buckets": self.n_buckets,
-            "track_changes": self.track_changes,
+            "changes": [] if track else None,
+            "track_changes": track,
             **fields,
         }
         self._maybe_fold_checkpoints(nxt, prev)
@@ -1635,15 +1620,15 @@ class LakeTable:
         epoch: int,
         source: str,
         cp_rows: list[dict],
-        applied_files: dict[str, int] | None,
+        files: dict[str, int] | None,
         new_files: dict[str, list[str]] = {},
         new_blooms: dict[str, int] = {},
     ) -> dict:
-        """The manifest fields a fenced epoch sets: its fence, its lineage
-        rows, the buckets it rewrote (every bucket in ``new_blooms``; one
-        whose keys were all deleted has no ``new_files`` entry and drops
-        out) with their blooms, the running seq watermark of ``source``
-        and its applied-file window."""
+        """The manifest fields a fenced epoch sets: its lineage rows, the
+        buckets it rewrote (every bucket in ``new_blooms``; one whose keys
+        were all deleted has no ``new_files`` entry and drops out) with
+        their blooms, and ``source``'s advanced record (fence, seq
+        watermark, applied-file window)."""
         buckets = {b: fs for b, fs in manifest["buckets"].items() if b not in new_blooms}
         buckets.update(new_files)
         # OR-accumulate this epoch's batch bits into the committed blooms
@@ -1651,30 +1636,11 @@ class LakeTable:
         blooms = dict(manifest["repo_blooms"])
         for b, bits in new_blooms.items():
             blooms[b] = f"{int(blooms.get(b, '0'), 16) | bits:x}"
-        fields = {"epoch": epoch, "checkpoints": cp_rows, "buckets": buckets, "repo_blooms": blooms}
         hwms = [r["hwm_seq"] for r in cp_rows if r["hwm_seq"] is not None]
-        if hwms:
-            hw = manifest["source_hwms"]
-            fields["source_hwms"] = {**hw, source: max(hw.get(source, -1), *hwms)}
-        wm, extra = self._advance_fence(manifest, epoch, source)
-        if source == "":
-            fields.update(epoch_watermark=wm, epochs_extra=extra)
-        else:
-            fences = manifest["source_fences"]
-            fields["source_fences"] = {**fences, source: {"wm": wm, "extra": extra}}
-        if applied_files:
-            # bounded FIFO per source; trimmed entries raise its floor
-            entry = list(manifest["applied_files"].get(source, []))
-            seen = {k: i for i, (k, _hi) in enumerate(entry)}
-            for name, hi in applied_files.items():
-                k = self._file_key(name)
-                if k in seen:  # replay/reapply: keep position, lift hi
-                    entry[seen[k]] = [k, max(int(entry[seen[k]][1]), int(hi))]
-                else:
-                    entry.append([k, int(hi)])
-            floor = manifest["applied_floor"].get(source, -1)
-            while len(entry) > self.APPLIED_FILES_WINDOW:
-                floor = max(floor, int(entry.pop(0)[1]))
-            fields["applied_files"] = {**manifest["applied_files"], source: entry}
-            fields["applied_floor"] = {**manifest["applied_floor"], source: floor}
-        return fields
+        rec = SourceState.of(manifest, source).advance(
+            epoch, hwms, files, self.APPLIED_FILES_WINDOW
+        )
+        return {
+            "epoch": epoch, "checkpoints": cp_rows, "buckets": buckets,
+            "repo_blooms": blooms, "sources": {**manifest["sources"], source: rec},
+        }

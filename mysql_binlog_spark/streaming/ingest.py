@@ -36,7 +36,7 @@ collapse + fenced-merge path as the batch engine.
   file straddling the committed watermark is DETECTED and fails the
   stream loudly rather than silently dropping its never-applied rows,
   and a late file WHOLLY below the watermark is audited against the
-  manifest's bounded applied-file window (LakeTable.file_applied_state):
+  source's bounded applied-file window (SourceState.file_applied_state):
   applied -> replay, never-applied -> loud failure, older than the
   window -> logged as unauditable.
 """
@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from mysql_binlog_spark.lake.table import LakeTable
 from mysql_binlog_spark.operators.collapse import collapse_latest, expand_renames
+from mysql_binlog_spark.operators.ddl import BARRIER_ACTIONS, parse_query
 from mysql_binlog_spark.sources.changelog_source import read_changelog_stream
 
 
@@ -66,17 +67,17 @@ def stream_ingest(
 ):
     """Stream changelog files into the lake table; returns the query.
 
-    ``maintain_every=N`` runs table maintenance every N committed
+    ``maintain_every=N`` (opt-in; default off, and the ``backup`` CLI
+    does not set it) runs table maintenance every N committed
     micro-batches INSIDE the stream: ``vacuum(keep_versions=
     maintain_keep_versions, expire_manifests=True)``. A continuous tail
-    commits one version per batch forever; without in-stream maintenance
-    the metadata chain and retired data files only shrink when an
-    operator remembers to vacuum — this makes the bounded-metadata
-    behavior the DEPLOYED default rather than a manual chore. Maintenance
-    is itself a fenced maintenance commit + deletes of expired files;
-    a crash mid-maintenance is recovered by the next cycle (vacuum's
-    floor-first ordering), and the vacuum runs between batches so it
-    never races this stream's own staged writes.
+    commits one version per batch forever; without it the metadata chain
+    and retired data files only shrink when an operator runs ``vacuum``
+    (the ``vacuum`` CLI). Maintenance is itself a fenced maintenance
+    commit + deletes of expired files; a crash mid-maintenance is
+    recovered by the next cycle (vacuum's floor-first ordering), and the
+    vacuum runs between batches so it never races this stream's own
+    staged writes.
 
     ``available_now=True`` drains everything currently in the directory and
     stops (bounded run — the `merge` binary analog); False keeps tailing
@@ -85,6 +86,14 @@ def stream_ingest(
     key spaces can tail into ONE table concurrently, each fencing on its
     own watermark — the multi-master shape (reference: one backup process
     per instance, common/inter/offset.go:24-33).
+
+    DDL: the stream applies row events only. A micro-batch carrying a
+    state-affecting DDL (TRUNCATE / DROP / RENAME) above the watermark
+    fails the stream, naming the statement, instead of silently skipping
+    it; apply such a changelog with ``engine.pipeline.recover`` /
+    ``run_ingest``, whose epoch planner applies DDL as barriers.
+    Barrier-only statements (CREATE / ALTER / GRANT ...) change no row
+    and pass.
 
     ``on_straddle`` controls what happens when a file's seq range
     straddles the committed watermark:
@@ -149,13 +158,34 @@ def stream_ingest(
         # indistinguishable from a legitimate replay by seq metadata
         # alone — ruling it out is exactly what the landing protocol's
         # in-order guarantee is for.) The per-file agg doubles as the
-        # emptiness probe, so this costs no extra pass over the batch.
-        hwm = table.high_watermark(source=source)
+        # emptiness probe and collects the DDL statements above the
+        # watermark, so this costs no extra pass over the batch. One read
+        # of the source's record serves every fence question below.
+        rec = table.source_state(source)
+        hwm = rec.hwm
+        new_ddl = (F.col("op") == "Q") & (F.col("seq") > hwm)
         stats = (
             batch_df.groupBy(F.col("_src_file").alias("f"))
-            .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"))
+            .agg(
+                F.min("seq").alias("lo"),
+                F.max("seq").alias("hi"),
+                F.collect_list(F.when(new_ddl, F.col("statement"))).alias("ddl"),
+            )
             .collect()
         )
+        state_ddl = [
+            stmt for r in stats for stmt in r["ddl"]
+            if any(p.action not in BARRIER_ACTIONS for p in parse_query(stmt))
+        ]
+        if state_ddl:
+            raise RuntimeError(
+                f"changelog DDL {state_ddl} above the committed watermark "
+                f"{hwm} changes table state, and the streaming front end "
+                f"applies row events only — it would silently skip it. "
+                f"Apply this changelog with a bounded replay "
+                f"(engine.pipeline.recover / run_ingest, the `recover` "
+                f"CLI), whose epoch planner applies DDL as barriers."
+            )
         straddlers = [r["f"] for r in stats if r["lo"] <= hwm < r["hi"]]
         if straddlers and on_straddle == "error":
             raise RuntimeError(
@@ -177,7 +207,7 @@ def stream_ingest(
 
         log = logging.getLogger(__name__)
         below = {
-            r["f"]: table.file_applied_state(r["f"], int(r["hi"]), source)
+            r["f"]: rec.file_applied_state(r["f"], int(r["hi"]))
             for r in stats
             if r["hi"] <= hwm
         }
@@ -226,10 +256,7 @@ def stream_ingest(
         applied = {
             r["f"]: int(r["hi"]) for r in stats if r["hi"] > hwm or r["f"] in reapply
         }
-        table.merge(
-            batch, epoch=table.next_epoch_id(source), source=source,
-            applied_files=applied,
-        )
+        table.merge(batch, epoch=rec.next_epoch_id(), source=source, files=applied)
         if maintain_every is not None:
             commits_since_maintain[0] += 1
             if commits_since_maintain[0] >= maintain_every:

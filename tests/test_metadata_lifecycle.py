@@ -32,6 +32,8 @@ class CountingIO(LocalTableIO):
 
     def read_text(self, path: str) -> str:
         self.counts["read_text"] += 1
+        if path.endswith("version-hint.text"):
+            self.counts["head"] += 1  # one head resolution
         return super().read_text(path)
 
     def read_bytes(self, path: str) -> bytes:
@@ -139,6 +141,25 @@ def test_merge_commit_reads_bounded_metadata(spark, long_table):
     # state correct after the commit on the 1,000-version chain
     got = {r["path"]: r["content"] for r in t.read_state().collect()}
     assert got["p500"] == "c500"
+
+
+def test_one_head_read_per_operation(spark, tmp_path):
+    """On a warm handle, one merge attempt, one truncate and one lookup
+    each resolve the head manifest exactly once: the layout, the fence
+    and every file list come from the one manifest the operation read."""
+    io = CountingIO()
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4, io=io)
+    t.merge(_batch(spark, 0), epoch=0)
+    t.lookup("r0", "p0").collect()
+    for name, op in (
+        ("merge", lambda: t.merge(_batch(spark, 1), epoch=1)),
+        ("truncate", lambda: t.apply_repo_ddl(2, "truncate", "r0")),
+        ("lookup", lambda: t.lookup("r0", "p1")),
+    ):
+        io.counts.clear()
+        op()
+        assert io.counts["head"] == 1, name
+    assert t.read_state().count() == 0
 
 
 def test_expire_manifests_bounds_the_chain(spark, long_table):

@@ -146,7 +146,7 @@ def test_high_watermark_is_o1_and_matches_lineage_walk(spark, small_changelog, l
     micro-batch; the fast path must equal the lineage-walk answer."""
     run_ingest(spark, small_changelog["path"], lake, epoch_size=1000)
     m = lake.read_manifest()
-    assert "source_hwms" in m
+    assert "hwm" in m["sources"][""]
     fast = lake.high_watermark()
     walk = max(
         c["hwm_seq"] for c in lake._checkpoint_rows() if c["hwm_seq"] is not None

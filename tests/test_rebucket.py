@@ -119,3 +119,22 @@ def test_stale_handle_maintenance_keeps_rebucket_count(spark, ingested):
     assert t3.n_buckets == 8
     r = before.iloc[0]
     assert t3.lookup(r["repo"], r["path"]).count() == 1
+
+
+def test_rebucket_table_with_no_live_row(spark, tmp_path):
+    """A table whose every key was deleted stages no file: the rebucket
+    still commits the new count, and the table stays writable."""
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+
+    def rows(*r):
+        return spark.createDataFrame(
+            list(r), "repo string, path string, seq long, op string, commit string, "
+            "lang string, content string",
+        )
+
+    t.merge(rows(("r", "p", 1, "I", "c", None, "x")), epoch=0)
+    t.merge(rows(("r", "p", 2, "D", None, None, None)), epoch=1)
+    assert t.rebucket(8) == 3
+    assert t.n_buckets == 8 and t.read_state().count() == 0
+    t.merge(rows(("r", "q", 3, "I", "c", None, "y")), epoch=2)
+    assert [r["path"] for r in t.lookup("r", "q").collect()] == ["q"]

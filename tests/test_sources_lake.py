@@ -154,11 +154,11 @@ def test_concurrent_commit_detected(spark, tmp_path):
     cur = t.current_version()
     with open(t._manifest_path(cur + 1), "w") as f:
         json.dump({"version": cur + 1, "buckets": {}, "schema": None,
-                   "epoch_watermark": -1, "epochs_extra": [],
+                   "sources": {},
                    "checkpoints": [], "n_buckets": 4, "changes": None}, f)
     with pytest.raises(FileExistsError):
         t._commit({"version": cur + 1, "buckets": {}, "schema": None,
-                   "epoch_watermark": -1, "epochs_extra": [],
+                   "sources": {},
                    "checkpoints": [], "n_buckets": 4, "changes": None})
 
 

@@ -314,7 +314,7 @@ def test_stream_detects_never_applied_late_file(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert table.high_watermark() == 1199
-    assert len(table.read_manifest()["applied_files"][""]) == 2
+    assert len(table.read_manifest()["sources"][""]["files"]) == 2
 
     # a pure replay (checkpoint wipe) of the SAME files passes the audit
     q_replay = stream_ingest(
@@ -495,3 +495,97 @@ def test_stream_ingest_with_gapped_seqs(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="never applied|applied-file"):
         q3.awaitTermination(120)
     assert table.current_version() == v
+
+
+def _land_with_ddl(tmp_path, statements: dict[int, str]):
+    """A generated changelog with seqs doubled, plus one QUERY row at odd
+    seq ``2 * k + 1`` per ``statements`` entry; lands as 500-event files.
+    Returns (events dir, all events)."""
+    spec = ChangelogSpec(n_events=2000, seed=7, n_repos=8)
+    ev = pa.Table.from_batches(
+        list(iter_event_batches(spec, batch_size=2000)), schema=EVENT_SCHEMA
+    ).to_pandas()
+    ev["seq"] *= 2
+    target = ev["repo"].value_counts().index[0]
+    q = pd.DataFrame([
+        {"seq": 2 * k + 1, "repo": target, "path": "", "op": "Q", "commit": "0" * 40,
+         "statement": stmt.format(repo=target)}
+        for k, stmt in statements.items()
+    ])
+    ev = pd.concat([ev, q]).sort_values("seq").reset_index(drop=True)
+    events_dir = tmp_path / "events"
+    events_dir.mkdir(parents=True)
+    for i in range(0, len(ev), 500):
+        pq.write_table(
+            pa.Table.from_pandas(ev.iloc[i:i + 500], schema=EVENT_SCHEMA, preserve_index=False),
+            str(events_dir / f"part-{i // 500:04d}.parquet"),
+        )
+    return events_dir, ev
+
+
+def test_stream_refuses_state_ddl_and_passes_barriers(spark, tmp_path):
+    """The stream applies row events only: a TRUNCATE above the watermark
+    fails it loudly, naming the statement, instead of being dropped;
+    barrier-only DDL (ALTER, GRANT) changes no row and streams through to
+    the oracle's state."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from mysql_binlog_spark.streaming import stream_ingest
+
+    events_dir, _ = _land_with_ddl(tmp_path / "t", {1200: "TRUNCATE TABLE {repo}"})
+    table = LakeTable(spark, str(tmp_path / "t" / "lake"), n_buckets=4)
+    q = stream_ingest(
+        spark, str(events_dir), table, checkpoint_dir=str(tmp_path / "t" / "ckpt"),
+        max_files_per_trigger=2, available_now=True,
+    )
+    with pytest.raises(StreamingQueryException, match="TRUNCATE TABLE .*recover"):
+        q.awaitTermination(120)
+    assert table.high_watermark() < 2 * 1200
+
+    events_dir, ev = _land_with_ddl(tmp_path / "b", {
+        300: "ALTER TABLE {repo} ADD COLUMN score INT DEFAULT 0",
+        1500: "GRANT SELECT ON main.* TO 'replica'@'%'",
+    })
+    table = LakeTable(spark, str(tmp_path / "b" / "lake"), n_buckets=4)
+    q = stream_ingest(
+        spark, str(events_dir), table, checkpoint_dir=str(tmp_path / "b" / "ckpt"),
+        max_files_per_trigger=2, available_now=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = (
+        table_snapshot(table)
+        .toPandas()[SNAP_COLS]
+        .sort_values(["repo", "path"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, oracle_snapshot_from_pandas(ev), check_dtype=False)
+
+
+def test_cli_backup_reports_the_named_source(spark, tmp_path, monkeypatch, capsys):
+    """``backup --source X`` reports the epochs X applied, not the
+    default source's (which has none)."""
+    import json
+
+    import mysql_binlog_spark.__main__ as cli
+    from mysql_binlog_spark import session
+
+    spec = ChangelogSpec(n_events=1200, seed=3, n_repos=4)
+    events_dir = tmp_path / "events"
+    events_dir.mkdir()
+    for i, b in enumerate(iter_event_batches(spec, batch_size=400)):
+        pq.write_table(
+            pa.Table.from_batches([b], schema=EVENT_SCHEMA),
+            str(events_dir / f"part-{i:04d}.parquet"),
+        )
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    root = str(tmp_path / "lake")
+    argv = ["backup", "--events-dir", str(events_dir), "--table", root,
+            "--checkpoint", str(tmp_path / "ckpt"), "--max-files-per-trigger", "1",
+            "--n-buckets", "4", "--source", "alpha"]
+    assert cli.main(argv) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    t = LakeTable(spark, root)
+    assert out == {"cmd": "backup", "epochs": len(t.epochs_applied("alpha"))}
+    assert out["epochs"] == 3 and t.epochs_applied() == []

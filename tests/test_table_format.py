@@ -55,11 +55,34 @@ def test_unversioned_and_newer_tables_are_refused(spark, tmp_path):
     assert "(none)" in msg and f"format_version {FORMAT_VERSION}" in msg
 
     # a newer format: refused, naming both versions
-    _edit_manifest(t, head, lambda m: m.update(format_version=2))
+    _edit_manifest(t, head, lambda m: m.update(format_version=FORMAT_VERSION + 1))
     with pytest.raises(ValueError) as e:
         LakeTable(spark, root)
     msg = str(e.value)
-    assert "format_version 2" in msg and f"format_version {FORMAT_VERSION}" in msg
+    assert f"format_version {FORMAT_VERSION + 1}" in msg
+    assert f"format_version {FORMAT_VERSION}" in msg
+
+
+def test_v1_layout_table_is_refused(spark, tmp_path):
+    """A table written in the v1 layout (the default source's fence in
+    top-level ``epoch_watermark``/``epochs_extra``, the other source
+    state in parallel maps) is refused at open, naming both versions."""
+    root = str(tmp_path / "lake")
+    t = LakeTable(spark, root, n_buckets=4)
+    t.merge(_batch(spark, [("a", "p", 1, "I", "x", "c")]), epoch=0)
+
+    def to_v1(m):
+        del m["sources"]
+        m.update(
+            format_version=1, epoch_watermark=0, epochs_extra=[], source_fences={},
+            source_hwms={"": 1}, applied_files={}, applied_floor={},
+        )
+
+    _edit_manifest(t, 1, to_v1)
+    with pytest.raises(ValueError) as e:
+        LakeTable(spark, root)
+    msg = str(e.value)
+    assert "format_version 1" in msg and f"format_version {FORMAT_VERSION}" in msg
 
 
 def test_every_bucket_keeps_a_bloom(spark, tmp_path, monkeypatch):
