@@ -237,6 +237,34 @@ def _loadavg() -> dict[str, float]:
         return {}
 
 
+#: the machine counts as quiet below this CPU busy fraction over 0.5 s;
+#: the start waits for it at most ``QUIET_MAX_WAIT_S`` (the rule
+#: perfbench's ``wait_quiet`` uses)
+QUIET_BUSY = 0.25
+QUIET_MAX_WAIT_S = 15.0
+
+
+def _cpu_times() -> tuple[int, int]:
+    """(busy, all) jiffies of the whole machine, from /proc/stat."""
+    with open("/proc/stat") as f:
+        vals = [int(v) for v in f.readline().split()[1:]]
+    idle = vals[3] + vals[4]  # idle + iowait
+    return sum(vals) - idle, sum(vals)
+
+
+def wait_quiet() -> tuple[float, float]:
+    """Wait (bounded) until the machine's CPU busy fraction over half a
+    second drops below ``QUIET_BUSY``. Returns (waited, busy)."""
+    t0 = time.monotonic()
+    while True:
+        b0, a0 = _cpu_times()
+        time.sleep(0.5)
+        b1, a1 = _cpu_times()
+        busy = (b1 - b0) / max(a1 - a0, 1)
+        if busy < QUIET_BUSY or time.monotonic() - t0 > QUIET_MAX_WAIT_S:
+            return time.monotonic() - t0, busy
+
+
 def _sweep_query_tempdirs() -> None:
     """Benchmark hygiene: each rep of the cdc queries stages fixture
     lakes / packed files in fresh tempdirs; with median-of-3 these
@@ -274,7 +302,8 @@ COMPACT_KEYS = (
 
 
 def compact_result(result: dict) -> dict:
-    """The result without its per-query load samples and load snapshots."""
+    """The result without its per-query load samples, load snapshots and
+    quiet-wait record."""
     return {k: result[k] for k in COMPACT_KEYS if k in result}
 
 
@@ -289,7 +318,9 @@ def main() -> None:
     # BEFORE our own Spark processes raise it. A hot start means external
     # load is already running — the run is flagged (or refused with
     # SPARK_GRAFT_BENCH_LOAD_ABORT=1) so a contaminated artifact can never
-    # again masquerade as an engine regression.
+    # again masquerade as an engine regression. A bounded quiet wait first
+    # lets a neighbour's burst pass before the weather is recorded.
+    quiet_wait_s, busy_at_start = wait_quiet()
     load_start = _loadavg()
     max_load = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "4.0"))
     contaminated = bool(load_start) and load_start.get("1m", 0.0) > max_load
@@ -304,7 +335,10 @@ def main() -> None:
     spark = get_spark("bench")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or sf_dir
 
-    result: dict = {"sf": sf, "cpus": cpus, "load_start": load_start}
+    result: dict = {
+        "sf": sf, "cpus": cpus, "load_start": load_start,
+        "quiet_wait_s": round(quiet_wait_s, 2), "busy_at_start": round(busy_at_start, 3),
+    }
     if contaminated:
         result["load_flag"] = (
             f"CONTAMINATED_START: 1-min load {load_start.get('1m')} > "

@@ -5,6 +5,7 @@ The reference abstracts storage behind ``IFile``/``IClient``
 local disk unchanged. Our analog: LakeTable's *data* files already go
 through Spark's Hadoop filesystem layer; this module routes the remaining
 driver-side metadata operations (manifest create, listing, vacuum deletes)
+and the point lookup's driver-side data-file read (``open_input``)
 through the same kind of interface, so the commit protocol works on
 local disk, HDFS, or any Hadoop-FS-compatible store.
 
@@ -34,6 +35,7 @@ never loses an update — the loser's work lands at the next version.
 
 from __future__ import annotations
 
+import io
 import os
 import time
 import uuid
@@ -245,6 +247,12 @@ class LocalTableIO:
         with open(path, "rb") as f:
             return f.read()
 
+    def open_input(self, path: str):
+        """A seekable binary file for a driver-side data-file read (the
+        point lookup): a parquet reader fetches only the footer and the
+        row groups its filter admits."""
+        return open(path, "rb")
+
     def write_bytes(self, path: str, data: bytes) -> None:
         tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "wb") as f:
@@ -401,6 +409,11 @@ class HadoopTableIO:
             return bytes(util.toByteArray(stream))
         finally:
             stream.close()
+
+    def open_input(self, path: str):
+        """The whole object, buffered (every byte crosses the py4j
+        gateway once)."""
+        return io.BytesIO(self.read_bytes(path))
 
     def write_bytes(self, path: str, data: bytes) -> None:
         out = self._fs(path).create(self._path(path), True)
@@ -579,6 +592,10 @@ class S3ConditionalPutIO:
                 raise FileNotFoundError(path) from e
             raise
         return resp["Body"].read()
+
+    def open_input(self, path: str):
+        """The whole object, buffered: one GET, no ranged reads."""
+        return io.BytesIO(self.read_bytes(path))
 
     def write_bytes(self, path: str, data: bytes) -> None:
         self.client.put_object(Bucket=self.bucket, Key=self._key(path), Body=data)

@@ -70,9 +70,12 @@ from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.util import inheritable_thread_target
 
 from mysql_binlog_spark.lake.io import io_for_root
@@ -544,6 +547,13 @@ class LakeTable:
                 out.append(int(b))
         return sorted(out)
 
+    def _schema(self, manifest: dict) -> T.StructType:
+        """The manifest's schema; the key columns alone before any row
+        was written."""
+        if manifest["schema"]:
+            return T.StructType.fromJson(manifest["schema"])
+        return T.StructType([T.StructField(c, T.StringType()) for c in KEY_COLS])
+
     def read_state(
         self, buckets: list[int] | None = None, version: int | None = None
     ) -> DataFrame:
@@ -555,13 +565,9 @@ class LakeTable:
         before an additive column evolution surface it as NULL.
         """
         manifest = self.read_manifest(version)
-        schema = (
-            T.StructType.fromJson(manifest["schema"]) if manifest["schema"] else None
-        )
+        schema = self._schema(manifest)
         files = self._bucket_files(manifest, buckets)
-        if not files or schema is None:
-            if schema is None:
-                schema = T.StructType([T.StructField(c, T.StringType()) for c in KEY_COLS])
+        if not files:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*files)
 
@@ -572,32 +578,39 @@ class LakeTable:
         analog (SURVEY §2.5 O1; the reference walks its sorted state by
         key, backup/handler/merge.go key iteration).
 
-        - full key ``(repo, path)``: the bucket is computed DRIVER-SIDE
-          in pure python (functions.xxhash — bit-identical to the JVM's
-          xxhash64 by property test), so a point lookup costs zero Spark
-          jobs to plan and exactly ONE bucket's files to scan, no matter
-          the table size or how hot the lookup loop is;
-        - ``repo`` only: candidate buckets come from the manifest's
-          per-bucket repo blooms — a repo absent from the table reads
-          ZERO files.
-
-        Both shapes keep the key predicate in the plan, so parquet
-        row-group stats prune further within the bucket. At 100 TB a
-        point lookup touches one bucket's few files, not the table.
+        - full key ``(repo, path)``: zero Spark jobs, to plan or to run.
+          The bucket is computed in pure python (functions.xxhash —
+          bit-identical to the JVM's xxhash64 by property test), and the
+          driver reads that ONE bucket's live files with pyarrow, the key
+          as a row-group statistics filter and the manifest's schema
+          imposed (a column added after a file was written reads NULL,
+          as in ``read_state``). The result is a local relation: its
+          ``collect()`` runs no job and its ``inputFiles()`` is empty. A
+          Spark job's fixed cost (~50-100 ms warm at ``local[4]``) would
+          be the whole cost of a read that returns at most one row.
+        - ``repo`` only: a Spark read of the buckets whose per-bucket repo
+          blooms admit ``repo`` (a repo absent from the table reads ZERO
+          files). Its result is unbounded — one hot repo can fill most
+          of the table — so it stays distributed.
         """
         manifest = self.read_manifest(version)
-        if path is not None:
-            from mysql_binlog_spark.functions.xxhash import pmod, spark_xxhash64
-
-            buckets = [pmod(spark_xxhash64(repo, path), manifest["n_buckets"])]
-        else:
+        if path is None:
             buckets = self._buckets_maybe_containing(manifest, repo)
-        out = self.read_state(buckets=buckets, version=manifest["version"]).where(
-            F.col("repo") == repo
-        )
-        if path is not None:
-            out = out.where(F.col("path") == path)
-        return out
+            return self.read_state(buckets=buckets, version=manifest["version"]).where(
+                F.col("repo") == repo
+            )
+        from mysql_binlog_spark.functions.xxhash import pmod, spark_xxhash64
+
+        schema = self._schema(manifest)
+        arrow_schema = to_arrow_schema(schema)
+        bucket = pmod(spark_xxhash64(repo, path), manifest["n_buckets"])
+        key = [("repo", "=", repo), ("path", "=", path)]
+        parts = []
+        for f in self._bucket_files(manifest, [bucket]):
+            with self.io.open_input(f) as src:
+                parts.append(pq.read_table(src, schema=arrow_schema, filters=key))
+        rows = pa.concat_tables(parts) if parts else arrow_schema.empty_table()
+        return self.spark.createDataFrame(rows, schema)
 
     #: fold the checkpoint chain into a rollup sidecar every N versions:
     #: readers then touch O(N) manifests instead of O(all versions). 64

@@ -74,12 +74,14 @@ class BinlogSqlApplier:
     """Apply binlog files to a DB-API connection, reference-faithfully.
 
     ``connection_factory`` -> a DB-API 2.0 connection (``cursor()``,
-    ``commit()``). Transactions are opened with an explicit ``BEGIN``
-    statement (the portable DB-API analog of MetaConf.Begin's Tx) and
-    closed with ``connection.commit()``. ``max_allowed_packet`` mirrors
-    the reference's doubling growth: when a buffered rows statement
-    exceeds the current value, ``SET GLOBAL max_allowed_packet = 2*len``
-    is issued before the statement (resume.go resetMaxPkgSize).
+    ``commit()``, ``close()``). Transactions are opened with an explicit
+    ``BEGIN`` statement (the portable DB-API analog of MetaConf.Begin's
+    Tx) and closed with ``connection.commit()``. ``max_allowed_packet``
+    mirrors the reference's doubling growth (resume.go resetMaxPkgSize):
+    when a buffered rows statement exceeds the current value, ``SET
+    GLOBAL max_allowed_packet = 2*len`` is issued and the applier moves
+    to a new session (``_grow_packet``). The report counts every
+    statement and ``BEGIN`` sent, replays included.
     """
 
     def __init__(
@@ -88,6 +90,7 @@ class BinlogSqlApplier:
         max_allowed_packet: int = 4 * 1024 * 1024,
         delimiter: str = ";",
     ):
+        self._connect = connection_factory
         self._conn = connection_factory()
         self._cur = self._conn.cursor()
         self.max_allowed_packet = max_allowed_packet
@@ -95,6 +98,10 @@ class BinlogSqlApplier:
         self.report = ApplyReport()
         self._buffer: list[str] = []
         self._in_txn = False
+        # what a new session must replay: the last FDE statement, and the
+        # statements the open transaction executed
+        self._fde: str | None = None
+        self._txn: list[str] = []
 
     # -- transaction plumbing (MetaConf Begin/Execute/Commit analog) -----
 
@@ -102,15 +109,47 @@ class BinlogSqlApplier:
         if not self._in_txn:
             self._cur.execute("BEGIN")
             self._in_txn = True
+            self._txn = []
             self.report.transactions += 1
 
     def _execute(self, sql: str) -> None:
         self._cur.execute(sql)
+        self._txn.append(sql)
         self.report.statements += 1
 
     def _commit(self) -> None:
         self._conn.commit()
         self._in_txn = False
+
+    def _apply_fde(self, stmt: str) -> None:
+        """The FDE installs the session's binlog format: its own
+        committed BINLOG statement (resume.go:604-622)."""
+        self._fde = stmt
+        self._begin()
+        self._execute(stmt)
+        self._commit()
+
+    def _grow_packet(self, size: int) -> None:
+        """Raise ``max_allowed_packet`` to ``2*size`` for a statement of
+        ``size`` characters. MySQL fixes a session's packet size at
+        connect, so the current session could still not send it: set the
+        global, close the session (rolling back its open transaction),
+        connect anew, re-apply the FDE, then re-open the transaction and
+        replay what it had executed (resume.go:772-800 RefreshConnection)."""
+        self.max_allowed_packet = size * 2
+        self._cur.execute(f"SET GLOBAL max_allowed_packet = {self.max_allowed_packet}")
+        self.report.packet_growths += 1
+        replay = self._txn if self._in_txn else None
+        self.close()
+        self._conn = self._connect()
+        self._cur = self._conn.cursor()
+        self._in_txn = False
+        if self._fde is not None:
+            self._apply_fde(self._fde)
+        if replay is not None:
+            self._begin()
+            for sql in replay:
+                self._execute(sql)
 
     # -- event dispatch ---------------------------------------------------
 
@@ -118,13 +157,7 @@ class BinlogSqlApplier:
         """Apply one binlog file's event stream (accepts ``.log.z``)."""
         for etype, raw, body, pos in iter_binlog_events(blob):
             if etype == FORMAT_DESCRIPTION_EVENT:
-                # the FDE installs the session's binlog format: its own
-                # committed BINLOG statement (resume.go:604-622)
-                self._begin()
-                self._execute(
-                    f"BINLOG '\n{_b64_lines(raw)}\n'{self.delimiter}"
-                )
-                self._commit()
+                self._apply_fde(f"BINLOG '\n{_b64_lines(raw)}\n'{self.delimiter}")
             elif etype == QUERY_EVENT:
                 # post-header: thread_id(4) exec_time(4) schema_len(1)
                 # error_code(2) status_vars_len(2); then the status vars,
@@ -160,15 +193,7 @@ class BinlogSqlApplier:
                 if rflags & STMT_END_F:
                     stmt = "\n".join(self._buffer) + f"\n'{self.delimiter}"
                     if len(stmt) > self.max_allowed_packet:
-                        # grow by doubling, like resetMaxPkgSize; issued
-                        # through the same connection OUTSIDE the txn
-                        # buffer (a GLOBAL variable, not txn state)
-                        self.max_allowed_packet = len(stmt) * 2
-                        self._cur.execute(
-                            f"SET GLOBAL max_allowed_packet = "
-                            f"{self.max_allowed_packet}"
-                        )
-                        self.report.packet_growths += 1
+                        self._grow_packet(len(stmt))
                     self._execute(stmt)
                     self.report.rows_statements += 1
                     self._buffer = []

@@ -23,6 +23,8 @@ def test_compact_last_line_fits_and_roundtrips():
         "sf": "1000",
         "cpus": 1024,
         "load_start": load,
+        "quiet_wait_s": 15.51,
+        "busy_at_start": 0.987,
         "load_flag": (
             "CONTAMINATED_START: 1-min load 123.45 > 4.0 before the run "
             "began — timings unreliable"

@@ -10,8 +10,16 @@ import base64
 import pytest
 
 from mysql_binlog_spark.sinks.binlog_file import (
+    BINLOG_MAGIC,
+    FORMAT_DESCRIPTION_EVENT,
+    ROTATE_EVENT,
+    TABLE_MAP_EVENT,
+    WRITE_ROWS_EVENT_V2,
+    XID_EVENT,
+    _event,
     build_binlog_file,
     build_netchange_file,
+    iter_binlog_events,
 )
 from mysql_binlog_spark.sinks.mysql_apply import (
     BinlogSqlApplier,
@@ -135,6 +143,90 @@ def test_max_allowed_packet_growth_hook():
     idx_rows = [i for i, (k, s) in enumerate(conn.log)
                 if k == "exec" and s.startswith("BINLOG")][1]
     assert idx_grow < idx_rows
+
+
+class PacketServer:
+    """A server with MySQL's packet rule: each session copies the global
+    ``max_allowed_packet`` when it connects and refuses a longer
+    statement; a rows BINLOG statement needs an FDE applied earlier in
+    the same session; closing a session rolls back its open
+    transaction. ``committed`` holds what became durable."""
+
+    def __init__(self, packet: int):
+        self.packet = packet
+        self.committed: list[str] = []
+        self.sessions = 0
+
+    def connect(self):
+        self.sessions += 1
+        return PacketSession(self)
+
+
+class PacketSession:
+    def __init__(self, server: PacketServer):
+        self.server = server
+        self.packet = server.packet
+        self.has_fde = False
+        self.pending: list[str] = []
+        self.open = True
+
+    def cursor(self):
+        return self
+
+    def execute(self, sql):
+        assert self.open, "statement on a closed session"
+        if len(sql) > self.packet:
+            raise RuntimeError("ER_NET_PACKET_TOO_LARGE")
+        if sql.startswith("SET GLOBAL max_allowed_packet"):
+            self.server.packet = int(sql.split("=")[1])
+        elif sql == "BEGIN":
+            self.pending = []
+        elif sql.startswith("BINLOG"):
+            raw = base64.b64decode("".join(sql.split("'")[1].split()))
+            if raw[4] == FORMAT_DESCRIPTION_EVENT:
+                self.has_fde = True
+            elif not self.has_fde:
+                raise RuntimeError("BINLOG rows statement before an FDE")
+            self.pending.append(sql)
+
+    def commit(self):
+        self.server.committed.extend(self.pending)
+        self.pending = []
+
+    def close(self):
+        self.pending = []
+        self.open = False
+
+
+def _events(blob: bytes) -> list[tuple[int, bytes]]:
+    return [(etype, body) for etype, _raw, body, _pos in iter_binlog_events(blob)]
+
+
+def test_packet_growth_reconnects_and_replays_the_transaction():
+    """One transaction holds a small rows statement, then one too large
+    for the session. After SET GLOBAL the applier must reconnect (the
+    old session keeps its packet size), re-apply the FDE there, and
+    replay the small statement in the re-opened transaction: every rows
+    statement commits exactly once."""
+    small = _events(build_binlog_file(SNAP_ROWS, "r1", xid=7))
+    big = _events(build_binlog_file([("r1", "big.py", "c3", None, "y" * 3000)], "r1"))
+    rows = [e for e in big if e[0] in (TABLE_MAP_EVENT, WRITE_ROWS_EVENT_V2)]
+    events = [e for e in small if e[0] not in (XID_EVENT, ROTATE_EVENT)]
+    events += rows + [e for e in small if e[0] == XID_EVENT]
+    blob = bytearray(BINLOG_MAGIC)
+    for etype, body in events:
+        blob.extend(_event(etype, body, len(blob)))
+
+    server = PacketServer(packet=1500)
+    applier = BinlogSqlApplier(server.connect, max_allowed_packet=1500)
+    report = applier.apply_bytes(bytes(blob))
+    applier.close()
+
+    assert report.packet_growths == 1 and server.sessions == 2
+    assert server.packet == applier.max_allowed_packet > 1500
+    fde, fde_again, small_rows, big_rows = server.committed
+    assert fde == fde_again and len(small_rows) < 1500 < len(big_rows)
+    assert report.rows_statements == 2 and report.xids == [7]
 
 
 def test_rollback_savepoint_elided_and_ddl_gets_use_schema():

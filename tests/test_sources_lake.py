@@ -8,11 +8,13 @@ import os
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from mysql_binlog_spark.changelog import ChangelogSpec
 from mysql_binlog_spark.changelog.generator import generate_events_pandas
 from mysql_binlog_spark.engine.pipeline import run_ingest, table_snapshot
-from mysql_binlog_spark.lake.table import LakeTable
+from mysql_binlog_spark.lake.io import LocalTableIO
+from mysql_binlog_spark.lake.table import LakeTable, bucket_expr
 from mysql_binlog_spark.sources.binlog_codec import (
     decode_packed_events,
     encode_packed_events,
@@ -307,25 +309,40 @@ def test_version_diff(spark, tmp_path):
             assert r.new_content == new.loc[(r.repo, r.path), "content"]
 
 
+class RecordingIO(LocalTableIO):
+    """LocalTableIO that records the data files opened on the driver."""
+
+    def __init__(self):
+        self.opened: list[str] = []
+
+    def open_input(self, path: str):
+        self.opened.append(path)
+        return super().open_input(path)
+
+
 def test_lookup_point_and_prefix_pruning(spark, tmp_path):
-    """lookup(repo, path) scans exactly ONE bucket's files; lookup(repo)
-    scans only bloom-admitted buckets; an absent repo reads zero files.
-    Results match filtering the full snapshot."""
+    """lookup(repo, path) opens exactly the live files of ONE bucket;
+    lookup(repo) scans only bloom-admitted buckets; an absent repo reads
+    zero files. Results match filtering the full snapshot."""
     ev = generate_events_pandas(ChangelogSpec(n_events=6000, seed=33))
     p = str(tmp_path / "ev.parquet")
     pq.write_table(pa.Table.from_pandas(ev, preserve_index=False), p)
-    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=16)
+    io = RecordingIO()
+    t = LakeTable(spark, str(tmp_path / "lake"), n_buckets=16, io=io)
     run_ingest(spark, p, t, epoch_size=3000)
 
     snap = t.read_state().toPandas()
     key = snap.sort_values(["repo", "path"]).iloc[0]
     repo, path = key["repo"], key["path"]
 
-    # full-key point lookup: one bucket, correct row
+    # full-key point lookup: the live files of one bucket, correct row
+    io.opened.clear()
     d = t.lookup(repo, path)
-    files = d.inputFiles()
-    buckets_touched = {f.split("/data/")[1].split("/")[0] for f in files}
-    assert len(buckets_touched) == 1
+    (b,) = spark.createDataFrame([(repo, path)], "repo string, path string").select(
+        bucket_expr(16)
+    ).first()
+    bucket_files = t.read_manifest()["buckets"][str(b)]
+    assert sorted(io.opened) == sorted(bucket_files) and bucket_files
     got = d.toPandas()
     assert len(got) == 1
     assert got.iloc[0]["content"] == key["content"]
@@ -354,6 +371,91 @@ def test_lookup_point_and_prefix_pruning(spark, tmp_path):
             break
     if deleted is not None:
         assert t.lookup(*deleted).count() == 0
+
+
+_LOOKUP_BATCH = "repo string, path string, seq long, op string, commit string, content string"
+
+
+def _lookup_table(spark, root: str) -> LakeTable:
+    """Four versions over 8 buckets: an insert epoch, an epoch that
+    updates one key, deletes one and adds the column ``lang``, a truncate
+    of ``r2`` and a rename of ``r3`` onto ``r4``."""
+    t = LakeTable(spark, root, n_buckets=8)
+    rows = [(f"r{r}", f"p{i}", 10 * r + i, "I", f"c{r}{i}", f"body{r}{i}")
+            for r in range(1, 4) for i in range(6)]
+    t.merge(spark.createDataFrame(rows, _LOOKUP_BATCH), epoch=0)
+    t.merge(
+        spark.createDataFrame(
+            [("r1", "p0", 100, "U", "c100", "new body", "python"),
+             ("r1", "p1", 101, "D", None, None, None)],
+            _LOOKUP_BATCH + ", lang string",
+        ),
+        epoch=1,
+    )
+    t.apply_repo_ddl(2, "truncate", "r2")
+    t.apply_repo_ddl(3, "rename", "r3", "r4")
+    return t
+
+
+def test_point_lookup_runs_no_spark_job(spark, tmp_path):
+    """A point lookup builds and collects its result on the driver: no
+    Spark job for a hit, a miss or a time-travel read."""
+    t = _lookup_table(spark, str(tmp_path / "lake"))
+    sc = spark.sparkContext
+    sc.setJobGroup("point-lookups", "point lookups")
+    try:
+        assert [r["content"] for r in t.lookup("r1", "p0").collect()] == ["new body"]
+        assert t.lookup("r1", "p1").collect() == []
+        assert t.lookup("no/such-repo", "p0").collect() == []
+        assert [r["content"] for r in t.lookup("r3", "p2", version=2).collect()] == ["body32"]
+        assert t.lookup("r1", "p0", version=0).collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("point-lookups")) == []
+
+
+def test_point_lookup_matches_read_state_at_every_version(spark, tmp_path):
+    """For every key ever written, one never seen, and every version,
+    the point lookup equals the Spark read of its bucket filtered to the
+    key — including NULL in ``lang`` for a key whose file predates it."""
+    t = _lookup_table(spark, str(tmp_path / "lake"))
+    head = t.current_version()
+    assert head == 4
+    keys = [(f"r{r}", f"p{i}") for r in range(1, 5) for i in range(6)]
+    keys.append(("never", "seen"))
+    bucket_of = {
+        (r, p): b
+        for r, p, b in spark.createDataFrame(keys, "repo string, path string")
+        .select("repo", "path", bucket_expr(8))
+        .collect()
+    }
+    for v in range(head + 1):
+        for repo, path in keys:
+            got = t.lookup(repo, path, version=v)
+            b = bucket_of[(repo, path)]
+            want = t.read_state(buckets=[b], version=v).where(
+                (F.col("repo") == repo) & (F.col("path") == path)
+            )
+            assert got.schema == want.schema, (v, repo, path)
+            assert got.collect() == want.collect(), (v, repo, path)
+
+    # the new column reads NULL from a file written before it existed
+    # (at v2: the truncate and rename rewrite every bucket after it)
+    m = t.read_manifest(2)
+    old_files = {
+        (r["repo"], r["path"])
+        for b, fs in m["buckets"].items()
+        for f in fs
+        if "lang" not in pq.read_schema(f).names
+        for r in pq.read_table(f, columns=["repo", "path"]).to_pylist()
+    }
+    assert old_files
+    repo, path = sorted(old_files)[0]
+    (row,) = t.lookup(repo, path, version=2).collect()
+    assert row["lang"] is None and row["content"] is not None
+    assert t.lookup("r4", "p3").collect()[0]["content"] == "body33"
+    assert t.lookup("r3", "p3").collect() == []
+    assert t.lookup("r2", "p0").collect() == []
 
 
 def test_merge_detects_vanished_staged_output(spark, tmp_path):
